@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSim, DotProduct, NfcNormalize, RollingHash}
+import graft.functions.GraftFunctions
 
 /** Spark extension entry point: makes graft's native expressions part of
   * the session at startup, cluster-wide —
@@ -53,42 +53,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(
         graft.plans.TableChanges.getClass.getName, "graft_table_changes"),
       exprs => graft.plans.TableChanges.plan(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      exprs => CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "graft_rolling_hash"),
-      exprs => RollingHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      exprs => NfcNormalize(exprs.head)))
-    // Spark's own bloom expressions, surfaced as SQL functions (the
-    // engine keeps them internal to its runtime-filter rule) — explicit
-    // build-once/probe-later bloom semi-joins, see q65
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-        "graft_bloom_agg"),
-      exprs => (if (exprs.length >= 3)
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      else
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs.head)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-        "graft_might_contain"),
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
+    GraftFunctions.builders.foreach(ext.injectFunction)
   }
 }

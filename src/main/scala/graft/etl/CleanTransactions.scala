@@ -47,7 +47,7 @@ object CleanTransactions {
       .csv(dir)
 
   /** Joined + cleaned Silver DataFrame with rule observability attached.
-    * Call an action, then `Rules.stats(obs, rules(clock), keptCount)`. */
+    * Call an action, then `Rules.stats(obs, rules(clock))`. */
   def run(
       facts: DataFrame,
       dims: DataFrame,

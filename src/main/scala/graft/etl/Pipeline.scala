@@ -18,12 +18,24 @@ import org.apache.spark.sql.functions._
   * the run and is deleted first for idempotence (ref `main.tf:350-361`);
   * a `_SUCCESS` marker plays the role of `job.commit()`.
   *
-  * Scale notes: Silver is written partitioned by `fecha_dia` with DYNAMIC
-  * partition overwrite — re-running a batch replaces only the days it
-  * contains instead of truncating history (the reference's full
-  * `mode("overwrite")` at `glue_jobs/etl_job.py:130` would). Gold tables
-  * aggregate to one row per (ATM[, day]) — tiny relative to the fact —
-  * so their full overwrite is safe at any scale.
+  * Scale notes:
+  *  - Silver is written partitioned by `fecha_dia` with DYNAMIC partition
+  *    overwrite, passed as the writer's option so the caller's session
+  *    is left as it was. Re-running a batch replaces only the days it
+  *    contains instead of truncating history (the reference's full
+  *    `mode("overwrite")` at `glue_jobs/etl_job.py:130` would).
+  *  - The cleaned rows are hash-clustered by `fecha_dia` into one task per
+  *    core before the write, so each day is ONE file whatever the number
+  *    of input splits, and every core writes. The partition count is
+  *    explicit, so AQE cannot coalesce the write onto one task.
+  *  - Reading Silver back lists its day directories in one task per core
+  *    (not one per day), and the read-back is persisted, so the three
+  *    Gold writes and Validation scan the Silver files once between them.
+  *  - `RuleStats.kept` comes from the clean pass's observation: it counts
+  *    this batch's kept rows, not the Silver table, which also holds the
+  *    days of earlier batches.
+  *  - Gold tables aggregate to one row per (ATM[, day]), tiny relative to
+  *    the fact, so their full overwrite is safe at any scale.
   */
 final case class PipelineResult(
     stats: RuleStats,
@@ -61,38 +73,56 @@ object Pipeline {
     readyFlag.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(readyFlag, false) // consume trigger first
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     val facts = CleanTransactions.readFacts(spark, s"$inputRoot/fact_transactions")
     val dims = CleanTransactions.readDims(spark, s"$inputRoot/dim_atms")
     val (silver, obs) = CleanTransactions.run(facts, dims, clock)
 
+    val cores = spark.sparkContext.defaultParallelism
     val silverPath = s"$outputRoot/silver"
-    silver.write
+    silver.repartition(cores, col("fecha_dia")).write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("fecha_dia")
       .parquet(silverPath)
+    // the write is the action that populates the observation
+    val stats = Rules.stats(obs, CleanTransactions.rules(clock))
 
-    // The write is the action that populates the observation; kept row
-    // count comes from the written files (no second pass over raw).
-    val silverBack = spark.read.parquet(silverPath)
-    val kept = silverBack.count()
-    val stats = Rules.stats(obs, CleanTransactions.rules(clock), kept)
+    val silverBack = withDiscoveryParallelism(spark, cores) {
+      spark.read.parquet(silverPath)
+    }.persist()
+    try {
+      val gold = Map(
+        "gold_dim_atms" -> Gold.dimAtmsActual(silverBack),
+        "gold_daily_balance" -> Gold.dailyBalance(silverBack),
+        "gold_atm_ranking" -> Gold.atmRanking(silverBack))
+      val goldPaths = gold.map { case (name, df) =>
+        val p = s"$outputRoot/$name"
+        df.write.mode(SaveMode.Overwrite).parquet(p)
+        name -> p
+      }
 
-    val gold = Map(
-      "gold_dim_atms" -> Gold.dimAtmsActual(silverBack),
-      "gold_daily_balance" -> Gold.dailyBalance(silverBack),
-      "gold_atm_ranking" -> Gold.atmRanking(silverBack))
-    val goldPaths = gold.map { case (name, df) =>
-      val p = s"$outputRoot/$name"
-      df.write.mode(SaveMode.Overwrite).parquet(p)
-      name -> p
+      val report = Validation.validate(silverBack)
+      val success = flagPath(outputRoot, "_SUCCESS")
+      success.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(success, true).close()
+      PipelineResult(stats, report, silverPath, goldPaths)
+    } finally silverBack.unpersist()
+  }
+
+  private val DiscoveryParallelism = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+  /** Runs `read` (an eager file-source resolution) with partition
+    * discovery bounded to `tasks` listing tasks, then restores the
+    * session's own setting. Spark's default is one task per directory
+    * up to 10,000, which for day-partitioned Silver is a job of hundreds
+    * of tasks that each list one small directory. */
+  private def withDiscoveryParallelism[T](spark: SparkSession, tasks: Int)(read: => T): T = {
+    val previous = spark.conf.getAll.get(DiscoveryParallelism) // set, not default
+    spark.conf.set(DiscoveryParallelism, tasks.toLong)
+    try read
+    finally previous match {
+      case Some(v) => spark.conf.set(DiscoveryParallelism, v)
+      case None => spark.conf.unset(DiscoveryParallelism)
     }
-
-    val report = Validation.validate(silverBack)
-    val success = flagPath(outputRoot, "_SUCCESS")
-    success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(success, true).close()
-    PipelineResult(stats, report, silverPath, goldPaths)
   }
 }

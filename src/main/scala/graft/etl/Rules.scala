@@ -60,20 +60,22 @@ object Rules {
     */
   def clean(df: DataFrame, rules: Seq[Rule]): (DataFrame, Observation) = {
     val obs = Observation()
+    val keep = rules.map(_.passes).reduce(_ && _)
     val metrics =
-      Seq(count(lit(1)).as("__total")) ++
+      Seq(count(lit(1)).as("__total"), count(when(keep, 1)).as("__kept")) ++
         rules.map(r => count(when(!r.passes, 1)).as(r.name))
     val observed = df.observe(obs, metrics.head, metrics.tail: _*)
-    val keep = rules.map(_.passes).reduce(_ && _)
     (observed.filter(keep), obs)
   }
 
-  /** Collect the observed metrics (requires a completed action). */
-  def stats(obs: Observation, rules: Seq[Rule], kept: Long): RuleStats = {
+  /** Collect the observed metrics (requires a completed action). `kept`
+    * counts the rows of THIS pass that pass every rule, whatever the
+    * action wrote them into. */
+  def stats(obs: Observation, rules: Seq[Rule]): RuleStats = {
     val m = obs.get
     RuleStats(
       totalRows = m("__total").asInstanceOf[Long],
-      kept = kept,
+      kept = m("__kept").asInstanceOf[Long],
       violationsByRule = rules.map(r => r.name -> m(r.name).asInstanceOf[Long]).toMap)
   }
 }

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -118,6 +120,47 @@ object GraftFunctions {
   val BloomContainName = "graft_might_contain"
   val TopKName = "graft_topk"
 
+  /** (name, implementing class, accepted argument counts, builder) for
+    * every function — the one table both registration routes bind:
+    * [[register]] here and [[graft.GraftExtensions]]. */
+  private val functions: Seq[(String, String, Seq[Int], Seq[Expression] => Expression)] = Seq(
+    (DotName, classOf[DotProduct].getName, Seq(2), e => DotProduct(e(0), e(1))),
+    (CosineName, classOf[CosineSim].getName, Seq(2), e => CosineSim(e(0), e(1))),
+    (RollingHashName, classOf[RollingHash].getName, Seq(1), e => RollingHash(e(0))),
+    (NfcName, classOf[NfcNormalize].getName, Seq(1), e => NfcNormalize(e(0))),
+    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
+    // runtime-filter rule but does not register them as SQL functions;
+    // surfacing them gives pipelines the explicit build-once/probe-later
+    // bloom semi-join (cross-job pruning the optimizer rule can't do).
+    // 1-arg: Spark's default sizing; 3-arg: (col, estItems, numBits)
+    // for the per-file manifest blooms (SnapshotLog.buildBlooms)
+    (BloomAggName, classOf[BloomFilterAggregate].getName, Seq(1, 3), e =>
+      (if (e.length == 3) new BloomFilterAggregate(e(0), e(1), e(2))
+      else new BloomFilterAggregate(e(0))).toAggregateExpression()),
+    (BloomContainName, classOf[BloomFilterMightContain].getName, Seq(2),
+      e => BloomFilterMightContain(e(0), e(1))),
+    (TopKName, classOf[TopKAgg].getName, Seq(4),
+      e => TopKAgg(e(0), e(1), e(2), e(3)).toAggregateExpression()))
+
+  /** Each function as (identifier, info, builder); the builder rejects a
+    * wrong argument count with an `AnalysisException` naming the counts
+    * it accepts, instead of failing inside the expression's constructor. */
+  val builders: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    functions.map { case (name, cls, arities, build) =>
+      val checked = (exprs: Seq[Expression]) => {
+        if (!arities.contains(exprs.length))
+          throw new AnalysisException(
+            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+            messageParameters = Map(
+              "functionName" -> s"`$name`",
+              "expectedNum" -> arities.mkString(" or "),
+              "actualNum" -> exprs.length.toString,
+              "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+        build(exprs)
+      }
+      (FunctionIdentifier(name), new ExpressionInfo(cls, name), checked)
+    }
+
   /** Idempotent per-session registration via the function registry —
     * the expressions then resolve in both the Column DSL and plain SQL
     * text. (For cluster deploys, [[graft.GraftExtensions]] injects the
@@ -128,36 +171,9 @@ object GraftFunctions {
     * registry write and spams a replaced-function WARN per call. */
   def register(spark: SparkSession): Unit = {
     val fr = spark.sessionState.functionRegistry
-    def reg(name: String)(
-        b: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      if (fr.lookupFunctionBuilder(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)).isEmpty)
-        fr.createOrReplaceTempFunction(name, b, "built-in")
-    reg(DotName) { exprs => DotProduct(exprs(0), exprs(1)) }
-    reg(CosineName) { exprs => CosineSim(exprs(0), exprs(1)) }
-    reg(RollingHashName) { exprs => RollingHash(exprs.head) }
-    reg(NfcName) { exprs => NfcNormalize(exprs.head) }
-    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
-    // runtime-filter rule but does not register them as SQL functions;
-    // surfacing them gives pipelines the explicit build-once/probe-later
-    // bloom semi-join (cross-job pruning the optimizer rule can't do).
-    reg(BloomAggName) { exprs =>
-      // 1-arg: Spark's default sizing; 3-arg: (col, estItems, numBits)
-      // for the per-file manifest blooms (SnapshotLog.buildBlooms)
-      (if (exprs.length >= 3)
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      else
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs.head)).toAggregateExpression()
-    }
-    reg(BloomContainName) { exprs =>
-      org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))
-    }
-    reg(TopKName) { exprs =>
-      TopKAgg(exprs(0), exprs(1), exprs(2), exprs(3)).toAggregateExpression()
+    builders.foreach { case (id, _, build) =>
+      if (fr.lookupFunctionBuilder(id).isEmpty)
+        fr.createOrReplaceTempFunction(id.funcName, build, "built-in")
     }
   }
 

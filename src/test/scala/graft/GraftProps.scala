@@ -69,12 +69,12 @@ object SparkAlgebraProps extends Properties("sparkAlgebra") {
         NotAfter("fecha", clock), OneOf("status_transaccion", Seq("EXITOSA")))
       val (clean, obs) = Rules.clean(df, rules)
       val kept = clean.count()
-      val stats = Rules.stats(obs, rules, kept)
+      val stats = Rules.stats(obs, rules)
 
       def keep(r: (Option[String], Option[java.math.BigDecimal], Option[Timestamp], String)) =
         r._1.isDefined && r._2.exists(_.signum > 0) &&
           r._3.exists(!_.after(clock)) && r._4 == "EXITOSA"
-      kept == rows.count(keep) &&
+      stats.kept == kept && kept == rows.count(keep) &&
         stats.totalRows == rows.size &&
         stats.violationsByRule("id_atm_not_null") == rows.count(_._1.isEmpty)
     }

@@ -16,8 +16,46 @@ class PipelineSpec extends SparkSpec {
     val in = Files.createTempDirectory("graft_etl_in").toString
     val out = Files.createTempDirectory("graft_etl_out").toString
     FixtureGen.write(in, nAtms = 50, nTx = 10000, seed = 42L, clock = clock)
-    val r = Pipeline.run(spark, in, out, clock)
+    // read the ~1 MB batch as several splits, as a large batch would be
+    val splitKey = "spark.sql.files.maxPartitionBytes"
+    val split = spark.conf.getAll.get(splitKey)
+    spark.conf.set(splitKey, "256k")
+    val r = try Pipeline.run(spark, in, out, clock)
+      finally split.fold(spark.conf.unset(splitKey))(spark.conf.set(splitKey, _))
     (in, out, r)
+  }
+
+  private val OverwriteMode = "spark.sql.sources.partitionOverwriteMode"
+  private val DiscoveryParallelism = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+  private def sessionState =
+    Seq(OverwriteMode, DiscoveryParallelism).map(k => k -> spark.conf.getAll.get(k)).toMap
+
+  /** The batch's cleaned rows, derived straight from its CSVs. */
+  private def cleaned(in: String) = CleanTransactions.run(
+    CleanTransactions.readFacts(spark, s"$in/fact_transactions"),
+    CleanTransactions.readDims(spark, s"$in/dim_atms"), clock)._1
+
+  /** Two batches into one fresh root, run under a session left at STATIC
+    * partition overwrite: the second batch (200 rows) misses most of the
+    * first's (1,500 rows over ~730 days). Returns both inputs, the second
+    * result, and the session state before and after the runs. */
+  private lazy val rerun = {
+    val out = Files.createTempDirectory("graft_etl_rerun").toString
+    def batch(nTx: Int, seed: Long) = {
+      val in = Files.createTempDirectory("graft_etl_batch").toString
+      FixtureGen.write(in, nAtms = 20, nTx = nTx, seed = seed, clock = clock)
+      in
+    }
+    val (in1, in2) = (batch(1500, 11L), batch(200, 12L))
+    val saved = spark.conf.getOption(OverwriteMode)
+    spark.conf.set(OverwriteMode, "STATIC")
+    try {
+      val before = sessionState
+      Pipeline.run(spark, in1, out, clock)
+      val r2 = Pipeline.run(spark, in2, out, clock)
+      (in1, in2, r2, before, sessionState)
+    } finally saved.foreach(spark.conf.set(OverwriteMode, _))
   }
 
   test("pipeline requires and consumes the _READY trigger") {
@@ -53,6 +91,10 @@ class PipelineSpec extends SparkSpec {
     val dirs = new java.io.File(result.silverPath).listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("fecha_dia=")))
+    // one file per day, however many input splits wrote the batch
+    val perDay = dirs.map(d => d -> new java.io.File(result.silverPath, d).listFiles()
+      .count(_.getName.endsWith(".parquet")))
+    assert(perDay.forall(_._2 == 1), perDay.filter(_._2 != 1).take(5).mkString(", "))
     val silver = spark.read.parquet(result.silverPath)
     val montoType = silver.schema("monto").dataType
     assert(montoType == org.apache.spark.sql.types.DecimalType(18, 2))
@@ -118,5 +160,26 @@ class PipelineSpec extends SparkSpec {
     val r2 = Pipeline.run(spark, inRoot, outRoot, clock)
     val after = spark.read.parquet(r2.silverPath).count()
     assert(after == before, "rerunning the same batch must not duplicate rows")
+  }
+
+  test("kept counts the batch's own rows when a rerun misses earlier days") {
+    val (_, in2, r2, _, _) = rerun
+    assert(r2.stats.totalRows == 200)
+    assert(r2.stats.kept == cleaned(in2).count())
+    assert(spark.read.parquet(r2.silverPath).count() > r2.stats.kept,
+      "silver must still hold the first batch's other days")
+  }
+
+  test("Pipeline.run leaves the session's settings alone and overwrites only the batch's days") {
+    val (in1, in2, r2, before, after) = rerun
+    assert(after == before, "session settings must be as the caller left them")
+    val (b1, b2) = (cleaned(in1), cleaned(in2))
+    val days2 = b2.select("fecha_dia").distinct()
+    assert(days2.count() < b1.select("fecha_dia").distinct().count())
+    val want = b1.join(days2, Seq("fecha_dia"), "left_anti").select("id_transaccion")
+      .union(b2.select("id_transaccion"))
+    val got = spark.read.parquet(r2.silverPath).select("id_transaccion")
+    assert(got.count() == want.count())
+    assert(got.except(want).isEmpty && want.except(got).isEmpty)
   }
 }

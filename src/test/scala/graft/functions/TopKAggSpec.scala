@@ -69,4 +69,12 @@ class TopKAggSpec extends SparkSpec {
     assert(p.contains("ObjectHashAggregate"), p)
     assert(!p.contains("Window"), p)
   }
+
+  test("a call with the wrong argument count fails analysis, naming the arity") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_topk(1)").collect()
+    }
+    assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", e.getMessage)
+    assert(e.getMessage.contains("`graft_topk` requires 4 parameters"), e.getMessage)
+  }
 }
