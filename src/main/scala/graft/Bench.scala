@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
   *
@@ -115,15 +113,8 @@ print(json.dumps(out))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSessions.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val headliners = Registry.all.filter(_.headline)
     // Caches are deliberately NOT cleared between runs — the basis every
@@ -247,8 +238,8 @@ print(json.dumps(out))
     // fields — per-query best, isolated floor, oracle comparison), and the
     // full record (samples, spread, per-pass load/cpu/wall, micro) goes to
     // target/bench.json for anyone who wants the raw evidence.
-    // "cpus" is the HONORED core count (local[$cpus] + shuffle
-    // partitions), not availableProcessors(): a low-core run
+    // "cpus" is the HONORED core count (the session's
+    // defaultParallelism), not availableProcessors(): a low-core run
     // (SPARK_GRAFT_CPUS=8 on a 32-core host) must self-report 8 —
     // r15's BENCH_c8 artifact said 32 while running local[8].
     // host_cpus keeps the hardware context.

@@ -3,8 +3,6 @@ package graft.etl
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the end-to-end medallion pipeline.
   *
   * Usage: runMain graft.etl.RunPipeline [inputRoot] [outputRoot]
@@ -23,13 +21,7 @@ object RunPipeline {
         FixtureGen.write(i, clock = clock)
         (i, o)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSessions.local()
 
     val r = Pipeline.run(spark, inRoot, outRoot, clock)
     println(s"silver: ${r.silverPath}")

@@ -12,14 +12,16 @@ import org.apache.spark.sql.types._
 /** Bounded top-k aggregate: the partial-aggregation replacement for
   * `row_number().over(Window.partitionBy(g).orderBy(key, id)) <= k`.
   *
-  * The window form shuffles EVERY candidate row full-width into the
-  * group's partition and sorts all of them to keep k — at 100 TB on the
-  * brute-force kNN path that is the entire Q·N similarity set through
-  * one exchange. This aggregate keeps an O(k) bounded heap per group:
-  * map-side partial aggregation reduces each input partition to ≤ k
-  * rows per group before the exchange, the shuffle carries ≤ k
-  * (double, long) pairs per (partition, group), and no sort of the
-  * candidate set ever happens (only the final ≤ k elements are sorted).
+  * What it removes is the SORT. Spark already bounds the window form's
+  * exchange: `InsertWindowGroupLimit` plans a partial `WindowGroupLimit`
+  * before the shuffle, so at most k rows per (partition, group) cross it
+  * either way. But that limit needs its input sorted by (group, key),
+  * both before the exchange and again after it — on the brute-force kNN
+  * path, a sort of the entire Q·N similarity set. This aggregate keeps
+  * an O(k) bounded heap per group instead: partial aggregation feeds
+  * the heap row by row, the exchange carries ≤ k (double, long) pairs
+  * per (partition, group), and no sort of the candidate set ever
+  * happens (only the final ≤ k elements are sorted).
   *
   * Ordering contract — EXACTLY the window's total order, so swapping it
   * in under an oracle-checked query cannot change a single hash:

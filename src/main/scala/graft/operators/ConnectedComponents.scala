@@ -119,33 +119,44 @@ object ConnectedComponents {
     // convergence signature: (count, 64-bit hash XOR) — set-equality
     // check in one tiny agg instead of a per-round anti-join (XOR, not
     // SUM: uniform 64-bit hashes overflow an ANSI sum; the edge set is
-    // distinct so XOR cancellation can't occur)
-    def sigDf(df: DataFrame): DataFrame = df.agg(
+    // distinct so XOR cancellation can't occur). Each row carries a
+    // literal stage id so a union of several signatures is read back by
+    // tag, never by row order.
+    def sigDf(df: DataFrame, stage: Int): DataFrame = df.agg(
       count(lit(1)).as("c"),
       coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("h"))
-    def sigOf(r: org.apache.spark.sql.Row): (Long, Long) =
-      (r.getLong(0), r.getLong(1))
-    var prev = sigOf(sigDf(e).head)
+      .select(lit(stage).as("stage"), col("c"), col("h"))
+    def sigsOf(df: DataFrame): Map[Int, (Long, Long)] =
+      df.collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    var prev = sigsOf(sigDf(e, 0))(0)
 
     var i = 0
     var converged = false
     while (!converged && i < maxIter) {
-      // TWO alternations per driver action (r16): both LAZY checkpoints
-      // materialize inside the one job that computes both signatures —
-      // a union of two 1-row aggs, collected in child order — so the
-      // consecutive-signature convergence check is exactly the old
-      // per-round one while the action/job count halves. alternate() is
-      // idempotent at the fixpoint (a star set maps to itself), so the
-      // at-most-one extra alternation a 2-stride can run is a no-op
-      // over the tiny converged edge set.
       val n1 = alternate(e).localCheckpoint(eager = false)
-      val n2 = alternate(n1).localCheckpoint(eager = false)
-      val sigs = sigDf(n1).unionAll(sigDf(n2)).collect()
-      val (s1, s2) = (sigOf(sigs(0)), sigOf(sigs(1)))
-      if (s1 == prev) { e = n1; converged = true }
-      else if (s2 == s1) { e = n2; converged = true }
-      else { e = n2; prev = s2 }
-      i += 2
+      if (maxIter - i == 1) {
+        // one alternation left in the budget: run exactly that one
+        val s1 = sigsOf(sigDf(n1, 1))(1)
+        converged = s1 == prev
+        e = n1; prev = s1
+        i += 1
+      } else {
+        // TWO alternations per driver action (r16): both LAZY
+        // checkpoints materialize inside the one job that computes both
+        // signatures — a union of two tagged 1-row aggs — so the
+        // consecutive-signature convergence check is exactly the old
+        // per-round one while the action/job count halves.
+        // alternate() is idempotent at the fixpoint (a star set maps to
+        // itself), so the at-most-one extra alternation a 2-stride can
+        // run is a no-op over the tiny converged edge set.
+        val n2 = alternate(n1).localCheckpoint(eager = false)
+        val sigs = sigsOf(sigDf(n1, 1).unionAll(sigDf(n2, 2)))
+        val (s1, s2) = (sigs(1), sigs(2))
+        if (s1 == prev) { e = n1; converged = true }
+        else if (s2 == s1) { e = n2; converged = true }
+        else { e = n2; prev = s2 }
+        i += 2
+      }
     }
     if (!converged) {
       throw new IllegalStateException(

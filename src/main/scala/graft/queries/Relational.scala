@@ -613,11 +613,13 @@ object Relational {
       // makes the as-of pick deterministic in both engines. Implemented as
       // an argmax AGGREGATE (max over a struct led by the unique
       // o_orderkey — same winning row as the ROW_NUMBER() DESC window,
-      // no ties possible): partial aggregation runs map-side, and the
-      // keyed rebalance on o_custkey doubles as the agg's exchange
-      // (hash(custkey) clusters (custkey, orderdate)), so the dedup
-      // costs zero extra shuffles where the window form paid one
-      // full-width exchange + sort of every order row.
+      // no ties possible). The gain is a sort, not shuffle volume: the
+      // window form's partial WindowGroupLimit already cut its exchange
+      // to one row per (partition, group), but it sorted every order row
+      // before and after that exchange. The aggregate (a SortAggregate:
+      // a struct max buffer is not hash-aggregatable) sorts once, on the
+      // partitions of the keyed rebalance on o_custkey, which already
+      // clusters (custkey, orderdate) — plans/r15/q26_asof_join_*.txt.
       val orders = Tables.keyed(s, d, "orders", "o_custkey")
         .groupBy(col("o_custkey"), col("o_orderdate"))
         .agg(max(struct(col("o_orderkey"), col("o_totalprice"))).as("__top"))

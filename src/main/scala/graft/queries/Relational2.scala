@@ -1092,9 +1092,10 @@ object Relational2 {
       // max-orderkey dedup as an ARGMAX aggregate over the keyed scan
       // (same rewrite as q26, r15): o_orderkey is unique so
       // max(struct(o_orderkey, status)) picks the row_number() DESC
-      // winner exactly; partial aggregation runs map-side and the
-      // custkey-keyed rebalance satisfies the agg's distribution — the
-      // window form paid a full-width exchange + sort for the same rows
+      // winner exactly. The gain is one sort: the window form's
+      // WindowGroupLimit already bounded its exchange, but it sorted the
+      // rows before and after it; the SortAggregate sorts once, on the
+      // custkey-keyed rebalance that satisfies its distribution
       val dim = Tables.keyed(s, d, "orders", "o_custkey")
         .groupBy(col("o_custkey"), col("o_orderdate"))
         .agg(max(struct(col("o_orderkey"), col("o_orderstatus"))).as("__top"))

@@ -2350,10 +2350,8 @@ object SnapshotLog {
       key: String,
       orderCol: String,
       partCol: String,
-      batchId: Long,
-      maxRetries: Int = 5): Unit =
-    upsertBatch(spark, base, changes0, Seq(key), orderCol, partCol, batchId,
-      maxRetries, Nil, Nil, 16, None, writeCdf = false)
+      batchId: Long): Unit =
+    upsertBatch(spark, base, changes0, Seq(key), orderCol, partCol, batchId)
 
   /** Composite-key, stats-recording MERGE into the commit log.
     *
@@ -2372,7 +2370,22 @@ object SnapshotLog {
     * commit, not a data rewrite. Only when the winner rewrote an
     * affected partition is the merge recomputed (against the winner's
     * files); the abandoned staged dir is never referenced and vacuum
-    * reclaims it. */
+    * reclaims it.
+    *
+    * `extraAffected`: partition values to include in the rewrite even
+    * when no change row lands in them. The partition-MOVE primitive:
+    * when a merged key's partition value changes (p1 → p2), the change
+    * row itself only touches p2 — naming p1 here makes its rows part of
+    * the merge base, so the full-outer key match replaces the old row
+    * and the staged write re-lands it in p2, leaving p1 rewritten
+    * without it (one transaction, no duplicate key). Cost is O(extra
+    * partitions' data), exactly the rows a move must rewrite anyway.
+    *
+    * `txn = Some((appId, batchId))`: the write is IDEMPOTENT per
+    * (appId, batchId) — if the live manifest already records this appId
+    * at a batch ≥ this one, the call is a no-op (checked inside the
+    * commit loop, so a concurrent duplicate writer cannot double-commit
+    * either). The streaming-sink contract. */
   def upsertBatch(
       spark: SparkSession,
       base: String,
@@ -2381,67 +2394,14 @@ object SnapshotLog {
       orderCol: String,
       partCol: String,
       batchId: Long,
-      maxRetries: Int,
-      statsCols: Seq[String],
-      clusterBy: Seq[String],
-      clusterFiles: Int,
-      opCol: Option[String],
-      writeCdf: Boolean): Unit =
-    upsertBatch(spark, base, changes0, keys, orderCol, partCol, batchId,
-      maxRetries, statsCols, clusterBy, clusterFiles, opCol, writeCdf, Nil,
-      None)
-
-  def upsertBatch(
-      spark: SparkSession,
-      base: String,
-      changes0: DataFrame,
-      keys: Seq[String],
-      orderCol: String,
-      partCol: String,
-      batchId: Long,
-      maxRetries: Int,
-      statsCols: Seq[String],
-      clusterBy: Seq[String],
-      clusterFiles: Int,
-      opCol: Option[String],
-      writeCdf: Boolean,
-      extraAffected: Seq[String]): Unit =
-    upsertBatch(spark, base, changes0, keys, orderCol, partCol, batchId,
-      maxRetries, statsCols, clusterBy, clusterFiles, opCol, writeCdf,
-      extraAffected, None)
-
-  /** [[upsertBatch]] with `extraAffected`: partition values to include
-    * in the rewrite even when no change row lands in them. The
-    * partition-MOVE primitive: when a merged key's partition value
-    * changes (p1 → p2), the change row itself only touches p2 — naming
-    * p1 here makes its rows part of the merge base, so the full-outer
-    * key match replaces the old row and the staged write re-lands it in
-    * p2, leaving p1 rewritten without it (one transaction, no duplicate
-    * key). Cost is O(extra partitions' data), exactly the rows a move
-    * must rewrite anyway. */
-  /** [[upsertBatch]] with `txn = Some((appId, batchId))`: the write is
-    * IDEMPOTENT per (appId, batchId) — if the live manifest already
-    * records this appId at a batch ≥ this one, the call is a no-op
-    * (checked inside the commit loop, so a concurrent duplicate writer
-    * cannot double-commit either). The streaming-sink contract. */
-  def upsertBatch(
-      spark: SparkSession,
-      base: String,
-      changes0: DataFrame,
-      keys: Seq[String],
-      orderCol: String,
-      partCol: String,
-      batchId: Long,
-      maxRetries: Int,
-      statsCols: Seq[String],
-      clusterBy: Seq[String],
-      clusterFiles: Int,
-      opCol: Option[String],
-      writeCdf: Boolean,
-      extraAffected: Seq[String],
-      txn: Option[(String, Long)]): Unit = {
-    // (no defaults on these overloads — Scala allows default arguments on
-    // only one alternative, and the common 8-arg form keeps them)
+      maxRetries: Int = 5,
+      statsCols: Seq[String] = Nil,
+      clusterBy: Seq[String] = Nil,
+      clusterFiles: Int = 16,
+      opCol: Option[String] = None,
+      writeCdf: Boolean = false,
+      extraAffected: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None): Unit = {
     // `opCol`: when set, the batch is a FULL CDC stream — that column
     // carries op ∈ {U, D} and D rows delete their key from the table
     // ([[graft.operators.MergeUpsert.cdc]] semantics, absent-key
@@ -2597,16 +2557,14 @@ object SnapshotLog {
           val rel =
             s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
           val dir = new Path(bp, rel)
-          // written from the merge's natural task distribution: every
-          // task streams its slice of each partition value in parallel
-          // (repartitioning one-task-per-value would serialize a large
-          // partition through a single writer); the resulting
-          // several-files-per-partition layout is what
-          // [[compactPartition]] exists to fold down.
-          // `clusterBy` instead range-clusters the staged write (z-order
-          // for multi-key) so each file covers a tight key range — the
-          // layout that makes the recorded `statsCols` bounds actually
-          // selective at read ([[filesForRange]]).
+          // Staged layout, by table kind: a plain table rebalances by
+          // partition value (below), a bucketed one is routed by its
+          // bucket columns in [[stagePartitioned]], and `clusterBy`
+          // range-clusters the staged write (z-order for multi-key) so
+          // each file covers a tight key range — the layout that makes
+          // the recorded `statsCols` bounds actually selective at read
+          // ([[filesForRange]]). Files still accrue across commits;
+          // [[compactPartition]] folds them down.
           val toWrite0 = merged.withColumn("__p", partRoute(partCol))
           // range clustering and bucketing both dictate the file
           // layout — they cannot compose (a range-routed file spans
@@ -2624,8 +2582,11 @@ object SnapshotLog {
             // large ones at the advisory size, so local commits stop
             // churning tiny files and at-scale files land in the
             // 64MB–1GB band. Stats/cluster layouts are left exactly as
-            // routed — file-skip-graded tables keep their geometry.
-            if (clusterBy.isEmpty && statsCols.isEmpty)
+            // routed — file-skip-graded tables keep their geometry — and
+            // a bucketed table skips the hint: stagePartitioned
+            // repartitions by the bucket columns anyway, so a rebalance
+            // would be one more full shuffle of the staged rows.
+            if (clusterBy.isEmpty && statsCols.isEmpty && m.bucketSpec.isEmpty)
               toWrite0.hint("rebalance", col("__p"))
             else if (clusterBy.isEmpty) toWrite0
             else {
@@ -2804,10 +2765,11 @@ object SnapshotLog {
         // pruning geometry is disturbed; identity values are
         // content-hash-sharded and partitioning-independent. Cross-batch
         // fragmentation still accrues (each append commits its own
-        // files) — compaction keeps its job.
+        // files) — compaction keeps its job. Bucketed tables skip it:
+        // stagePartitioned routes them by the bucket columns.
+        val routed = toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
         stagePartitioned(
-          toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
-            .hint("rebalance", col("__p")),
+          if (m.bucketSpec.isEmpty) routed.hint("rebalance", col("__p")) else routed,
           m, fs, dir)
         staged = listStaged(fs, dir, rel)
         // NULL-partition gate on the STAGED data — one pass, no query

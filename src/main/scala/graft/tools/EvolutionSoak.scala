@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotLog
@@ -37,15 +36,8 @@ object EvolutionSoak {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(30)
     val outJson = args.lift(2).getOrElse("EVOLUTION_SOAK.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark0.sparkContext.setLogLevel("WARN")
+    val spark0 = graft.GraftSessions.local()
+    val cpus = spark0.sparkContext.defaultParallelism
     val spark = graft.GraftSessions.withExtensions(spark0)
 
     def timed[T](f: => T): (T, Double) = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Corpus replication as a standalone main: write `replicas`× the
   * source corpus (key-consistent offsets — [[Soak.explode]]) to a
   * destination directory, so the BENCH harness can run unchanged at a
@@ -16,14 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Explode {
   def main(args: Array[String]): Unit = {
     val Array(src, r, dst) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSessions.local()
     Soak.explode(spark, src, dst, r.toInt)
     println(s"[explode] wrote ${r}x $src -> $dst")
     spark.stop()

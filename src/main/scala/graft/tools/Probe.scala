@@ -1,14 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
-import graft.Registry
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan/timing probe for one registered query.
+import graft.{GraftSessions, Registry}
+
+/** Plan/timing probe for registered queries.
   *
-  * Usage: runMain graft.tools.Probe <query_name> [sfDir] [--explain]
+  * Usage: runMain graft.tools.Probe <q1,q2,...|ALL> [sfDir]
+  *          [--explain | --decompose | --show | --plans <outDir>/<suffix>]
   * Times a noop-sink execution (same harness as Bench); with --explain
-  * also prints the formatted physical plan.
+  * also prints the formatted physical plan. The other flags replace the
+  * timing:
+  *   --decompose  build / plan / first / warm phase times, three cold reps
+  *   --show       prints the result rows (head 50) — the quick "did the
+  *                graded booleans actually come out TRUE" check
+  *   --plans      writes <outDir>/<query>_<suffix>.txt per query: the
+  *                pre-execution formatted plan plus, after one run, the
+  *                AQE-final executed plan (the shape the guards assert
+  *                on) — the plan-evidence artifacts under plans/
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -16,15 +28,16 @@ object Probe {
     val sfDir = args.lift(1).filterNot(_.startsWith("--")).getOrElse("/root/testdata/sf0.1")
     val explain = args.contains("--explain")
     val decompose = args.contains("--decompose")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val show = args.contains("--show")
+    val plansTo = args.indexOf("--plans") match {
+      case -1 => None
+      case i =>
+        val to = args.lift(i + 1).getOrElse(
+          sys.error("--plans takes <outDir>/<suffix>"))
+        val cut = to.lastIndexOf('/')
+        Some((if (cut < 0) "." else to.take(cut), to.drop(cut + 1)))
+    }
+    val spark = GraftSessions.local()
 
     // "ALL" sweeps every registered query once (warm, after one untimed
     // build+run) and flags the slow tail — the per-round pathology scan.
@@ -36,7 +49,22 @@ object Probe {
     targets.foreach { n =>
       val q = Registry.byName(n)
       try {
-        if (decompose) {
+        if (show) q.build(spark, sfDir).show(50, truncate = false)
+        else if (plansTo.isDefined) {
+          val (outDir, suffix) = plansTo.get
+          val df = q.build(spark, sfDir)
+          val formatted = df.queryExecution.explainString(FormattedMode)
+          // run THIS plan (a noop write would plan and run a copy), so
+          // its adaptive plan is the final one when printed
+          df.queryExecution.toRdd.foreach(_ => ())
+          val finalPlan = df.queryExecution.executedPlan.toString
+          val txt = s"== $n ($suffix) ==\n\n--- explain(formatted) ---\n" +
+            formatted + "\n--- AQE-final executed plan ---\n" + finalPlan
+          Files.createDirectories(Paths.get(outDir))
+          Files.write(Paths.get(s"$outDir/${n}_$suffix.txt"),
+            txt.getBytes(StandardCharsets.UTF_8))
+          println(s"[plans] wrote $outDir/${n}_$suffix.txt")
+        } else if (decompose) {
           // Floor decomposition (round-14 verdict item 8): where does a
           // small query's ~1s wall go? Phases, each timed cold in a
           // fresh Dataset so earlier phases aren't amortized away:
@@ -84,10 +112,12 @@ object Probe {
       } finally {
         // ALL = the per-round pathology scan: drop each query's
         // persisted intermediates so a 190-query sweep doesn't carry
-        // dead cached plans in storage memory (same hygiene as Verify).
-        // Comma-list mode deliberately KEEPS caches — it exists for
-        // interference experiments.
-        if (name == "ALL") spark.catalog.clearCache()
+        // dead cached plans in storage memory (same hygiene as Verify);
+        // --plans drops them too, so each file shows the query's own
+        // plan, not one reading a previous query's cache.
+        // Timed comma-list mode deliberately KEEPS caches — it exists
+        // for interference experiments.
+        if (name == "ALL" || plansTo.isDefined) spark.catalog.clearCache()
       }
     }
     spark.stop()

@@ -113,15 +113,8 @@ object Soak {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val outJson = args.lift(2).getOrElse("SOAK.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSessions.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val bigDir = java.nio.file.Files.createTempDirectory("graft_soak").toString
     System.err.println(s"[soak] exploding $srcDir ×$replicas → $bigDir")

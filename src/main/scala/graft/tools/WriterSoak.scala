@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotLog
@@ -33,15 +33,8 @@ object WriterSoak {
     val writers = args.lift(2).map(_.toInt).getOrElse(4)
     val batches = args.lift(3).map(_.toInt).getOrElse(5)
     val outJson = args.lift(4).getOrElse("SOAK_WRITERS.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark0.sparkContext.setLogLevel("WARN")
+    val spark0 = graft.GraftSessions.local()
+    val cpus = spark0.sparkContext.defaultParallelism
     // format("graft") reads require the planner-integrated substitution
     val spark = graft.GraftSessions.withExtensions(spark0)
 

@@ -52,6 +52,19 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(lbl.getLong(2) == 1L, "label is the component min")
   }
 
+  test("maxIter is an exact alternation budget") {
+    // the path 1-2-3 becomes the star {2→1, 3→1} in one alternation; a
+    // second one is needed to see the fixpoint. One alternation allowed
+    // is one run, so the fixpoint is never confirmed.
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    intercept[IllegalStateException] {
+      ConnectedComponents.labels(edges, "src", "dst", maxIter = 1).collect()
+    }
+    val lbl = ConnectedComponents.labels(edges, "src", "dst", maxIter = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lbl == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
   test("random graphs agree with a reference union-find") {
     // seeded random topologies vs a trivially-correct driver-side
     // union-find — guards the star alternation against shape-specific

@@ -2,12 +2,23 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{
+  REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, REPARTITION_BY_NUM,
+  ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{GraftSessions, SparkSpec}
 
@@ -22,6 +33,8 @@ import graft.{GraftSessions, SparkSpec}
 class BucketedSnapshotSpec extends SparkSpec {
 
   private lazy val s = GraftSessions.withExtensions(spark)
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private def shuffles(df: DataFrame): Int =
     (df.queryExecution.executedPlan match {
@@ -128,6 +141,47 @@ class BucketedSnapshotSpec extends SparkSpec {
       assert(j.count() == 100)
       assert(shuffles(j) == 0, j.queryExecution.executedPlan.toString)
     } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+  }
+
+  test("bucketed merge and append stage without a rebalance shuffle") {
+    import s.implicits._
+    val (base, _) = mk("bkt", "stage", 4)
+    // executed (AQE-final) plan of every file write under the table's dir
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Aqe.collectFirst(qe.executedPlan) { case w: DataWritingCommandExec => w.cmd }
+          .foreach {
+            case i: InsertIntoHadoopFsRelationCommand
+                if i.outputPath.toString.contains(base) =>
+              writes.put(i.outputPath.getName, qe.executedPlan)
+            case _ =>
+          }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      // staged dirs are data/b<batchId>v<version>-<uuid>
+      SnapshotLog.appendBatch(s, base,
+        (1L to 200L).map(i => (i, i * 1.0, s"d${i % 3}")).toDF("id", "value", "day"),
+        "day", batchId = 1)
+      SnapshotLog.upsertBatch(s, base,
+        (1L to 40L).map(i => (i, i * 10.0, s"d${i % 3}")).toDF("id", "value", "day"),
+        "id", "value", "day", 2L)
+      eventually(timeout(Span(30, Seconds))) {
+        assert(Seq("b1v", "b2v").forall(b =>
+          writes.keySet.asScala.exists(_.startsWith(b))), writes.keySet)
+      }
+    } finally s.listenerManager.unregister(listener)
+    writes.forEach { (dir, plan) =>
+      val origins = Aqe.collect(plan) { case e: ShuffleExchangeLike => e.shuffleOrigin }
+      // the bucket routing (repartition(n, bucketCols)) is the one shuffle
+      assert(origins.contains(REPARTITION_BY_NUM), s"$dir:\n$plan")
+      assert(!origins.exists(o =>
+        o == REBALANCE_PARTITIONS_BY_COL || o == REBALANCE_PARTITIONS_BY_NONE),
+        s"$dir: a bucketed staged write must not rebalance first:\n$plan")
+    }
+    assert(SnapshotLog.read(s, base).get.count() == 200)
   }
 
   test("equality probe on the bucket column prunes to one bucket at plan time") {
