@@ -646,8 +646,7 @@ case class SnapshotShowCreateCommand(view: String)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = SnapshotLog.readManifest(fs, bp).getOrElse(
       sys.error(s"$view has no committed version"))
-    val sc = m.schema.getOrElse(sys.error(
-      s"$view has no schema header (legacy manifest) — ANALYZE first"))
+    val sc = m.schema.get
     def q(s: String): String = s.replace("'", "''")
     val cols = sc.fields.map(f => s"  ${f.name} ${f.dataType.sql}")
       .mkString(",\n")
@@ -1014,12 +1013,7 @@ case class SnapshotDetailCommand(view: String)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = SnapshotLog.readManifest(fs, bp).getOrElse(
       sys.error(s"$view has no committed version"))
-    val bytes = {
-      val per = m.allFiles.map(f =>
-        m.stats.get(f).flatMap(_.get(SnapshotLog.ByteSizeKey))
-          .flatMap(_._1.toLongOption))
-      if (per.exists(_.isEmpty)) -1L else per.flatten.sum
-    }
+    val bytes = m.allFiles.map(SnapshotLog.fileBytes(m, _)).sum
     Seq(Row("graft-snapshot", path, m.version,
       m.files.size.toLong, m.allFiles.size.toLong, bytes,
       SnapshotLog.countRows(m).getOrElse(-1L),

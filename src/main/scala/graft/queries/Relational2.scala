@@ -6073,10 +6073,10 @@ object Relational2 {
       shaped(orders.filter(col("o_orderkey") % 103 === 0)
         .withColumn("o_orderkey", col("o_orderkey") + 800000000L))
         .write.format("graft").mode("append").save(base)
-      require(manifest().schema.exists(_("meta").dataType
+      require(manifest().schema.get("meta").dataType
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fieldNames.sameElements(Array("status", "price", "flag"))),
-        "an old-shape append must not degrade the evolved schema header")
+          .fieldNames.sameElements(Array("status", "price", "flag")),
+        "an old-shape append must keep the evolved schema header")
       // nested-predicate DELETE rewrites across the shape boundary
       SnapshotLog.deleteWhere(s, base,
         col("meta.status") === "F" && col("id") % 5 === 0, "p")

@@ -393,7 +393,7 @@ final class GraftSnapshotTable(
       versionAsOf.map(v => s" VERSION AS OF $v").getOrElse("")
 
   override def schema(): StructType =
-    manifest.schema.getOrElse(dvCorrectPlan(SparkSession.active).schema)
+    manifest.schema.get
 
   /** Reported so `df.write.partitionBy(c)` against an existing table
     * validates against the real layout (and DESCRIBE shows it) — one

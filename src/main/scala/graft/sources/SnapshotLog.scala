@@ -89,12 +89,15 @@ object SnapshotLog {
     * @param schemaJson the table schema (Spark StructType JSON) held in
     *               METADATA — planning needs zero data-file footer
     *               reads (the Iceberg/Delta model). Evolved at commit:
-    *               add-column merges append. None on legacy manifests
-    *               → readers fall back to a mergeSchema footer scan.
+    *               add-column merges append. Required on every
+    *               committed manifest ([[tryCommit]] refuses to publish
+    *               without it, [[readManifestAt]] refuses to read a
+    *               root without it); None only on the in-memory empty
+    *               base a first write starts from.
     * @param op     what produced this version (UPSERT, DELETE, DELETE_DV,
     *               UPDATE, COMPACT, OPTIMIZE, STATS, BLOOMS) — the
     *               Delta DESCRIBE HISTORY operation column, surfaced by
-    *               [[history]]. None on legacy manifests.
+    *               [[history]].
     * @param constraints name → CHECK expression (Spark SQL text).
     *               VERSIONED like everything else: every write op
     *               carries them forward, [[addConstraint]]/
@@ -413,8 +416,8 @@ object SnapshotLog {
   /** Sentinel partition-column NAME for UNPARTITIONED tables (Delta's
     * most common table shape): the empty string. A manifest carrying
     * `PartColProp -> ""` is EXPLICITLY unpartitioned — distinct from a
-    * legacy manifest with no property at all, whose layout is unknown
-    * and still needs a caller-supplied column. Every write primitive
+    * manifest with no property at all, whose layout is undeclared and
+    * still needs a caller-supplied column. Every write primitive
     * accepts it: rows route to the single hidden partition
     * [[SinglePart]] (`partitionBy` on a constant), so the manifest,
     * DML, OPTIMIZE, CDF, bucketing, and concurrency machinery all work
@@ -528,9 +531,7 @@ object SnapshotLog {
           "needs a declared layout (set the property once, '' for " +
           "unpartitioned)"))
       if (sameLayout(cur, newPartCol)) return m.version
-      val sc = m.schema.getOrElse(sys.error(
-        "partition evolution needs a schema header (legacy manifest) — " +
-          "any write records one first"))
+      val sc = m.schema.get
       partColsOf(newPartCol).foreach { c =>
         require(sc.fields.exists(_.name.equalsIgnoreCase(c)),
           s"no such column: $c (new partition layout '$newPartCol')")
@@ -862,8 +863,8 @@ object SnapshotLog {
     * commit itself, monotone by construction (max(now, prev+1)), so
     * `TIMESTAMP AS OF` and DESCRIBE HISTORY survive storage
     * migrations, backup restores, and cross-writer clock skew — all
-    * of which rewrite or reorder file MODIFICATION times, the only
-    * clock legacy manifests have (still the fallback for them). */
+    * of which rewrite or reorder file MODIFICATION times. Every root
+    * [[tryCommit]] publishes carries one. */
   private val TsTag = "#ts"
 
   private def parseTs(text: String): Option[Long] =
@@ -1181,13 +1182,15 @@ object SnapshotLog {
     rootText(fs, base, v) match {
       case None => None
       case Some(text) =>
-        // `#schema\t<json>` is a header comment: grammar-invisible to
-        // older readers (every `#` line is skipped below), load-bearing
-        // for new ones — the table schema without opening a data file
+        // `#schema\t<json>`: the table schema without opening a data
+        // file. Required — a root without it is refused, never misread
         val schemaJson = text.split("\n").iterator
           .filter(_.startsWith(SchemaTag + "\t"))
           .map(l => dec(l.substring(SchemaTag.length + 1)))
           .nextOption()
+          .getOrElse(throw new ProtocolException(
+            s"$base v$v has no $SchemaTag header — refusing to read a " +
+              "manifest without its schema rather than misread it"))
         val op = text.split("\n").iterator
           .filter(_.startsWith(OpTag + "\t"))
           .map(l => dec(l.substring(OpTag.length + 1)))
@@ -1296,7 +1299,7 @@ object SnapshotLog {
               case other => sys.error(s"unknown DV kind '$other' in manifest")
             })
         }.toMap
-        Some(Manifest(v, files, stats, blooms, dvs, schemaJson, op,
+        Some(Manifest(v, files, stats, blooms, dvs, Some(schemaJson), op,
           constraints, txns, props, colmap, droppedCols,
           readerFeats, writerFeats))
     }
@@ -1305,7 +1308,7 @@ object SnapshotLog {
   /** Time-travel read: the table exactly as of committed version `v`.
     * Routed through the same planner-integrated relation as the
     * current-snapshot [[read]] (manifest stats/bloom/partition file
-    * skipping, zero plan-time data-file RPCs when the manifest carries
+    * skipping, zero plan-time data-file RPCs: the manifest carries
     * schema + sizes) — a historical version deserves the same plan
     * quality as the live one. */
   def readVersion(
@@ -1319,9 +1322,8 @@ object SnapshotLog {
   /** The newest committed version whose manifest was PUBLISHED at or
     * before `millis` (epoch ms) — `TIMESTAMP AS OF` resolution. Commit
     * time is the root's IN-COMMIT `#ts` stamp (monotone, survives
-    * storage-layer mtime churn); legacy manifests without one fall
-    * back to the manifest file's modification time — the same clock
-    * [[history]] reports. */
+    * storage-layer mtime churn) — the same clock [[history]]
+    * reports. */
   def versionAsOfTime(
       spark: SparkSession, base: String, millis: Long): Option[Long] = {
     val bp = new Path(base)
@@ -1331,11 +1333,15 @@ object SnapshotLog {
     }.lastOption
   }
 
-  /** Epoch millis a version committed at: the `#ts` in-commit stamp,
-    * else (legacy) the root file's modification time. */
+  /** Epoch millis a version committed at: its `#ts` in-commit stamp. */
   private def commitTimeOf(fs: FileSystem, bp: Path, v: Long): Long =
-    rootText(fs, bp, v).flatMap(parseTs).getOrElse(
-      fs.getFileStatus(new Path(logDir(bp), vName(v))).getModificationTime)
+    commitTs(rootText(fs, bp, v).getOrElse(""), bp, v)
+
+  /** The `#ts` stamp of version `v`'s root `text`; a root without one
+    * is refused like a root without its schema. */
+  private def commitTs(text: String, bp: Path, v: Long): Long =
+    parseTs(text).getOrElse(throw new ProtocolException(
+      s"$bp v$v has no $TsTag commit timestamp"))
 
   /** The per-table-unique join key for a data file: its last TWO path
     * segments (`<parent dir>/<part file>`). The basename alone is NOT
@@ -1777,12 +1783,6 @@ object SnapshotLog {
     (acc, hwUpd.toMap)
   }
 
-  /** Project a (logical-named) frame onto the manifest's logical
-    * schema: columns the frame lacks backfill NULL, columns OUTSIDE
-    * the schema (e.g. a dropped column's physical bytes surfacing
-    * through a mergeSchema scan) disappear. Identity when the
-    * manifest has no schema header (legacy tables keep their footer
-    * union). */
   /** Conform `src` (whatever shape a mergeSchema footer read produced)
     * to `target`: leaf types cast, STRUCT fields matched by name
     * (case-insensitive) with MISSING subfields filled as typed NULLs —
@@ -1846,13 +1846,13 @@ object SnapshotLog {
       case None => lit(null).cast(f.dataType).as(f.name)
     }
 
+  /** Project a (logical-named) frame onto the manifest's logical
+    * schema: columns the frame lacks backfill NULL, columns OUTSIDE
+    * the schema (e.g. a dropped column's physical bytes surfacing
+    * through a mergeSchema scan) disappear. */
   private def alignToSchema(
       df: DataFrame, m: Manifest, extra: Seq[Column] = Nil): DataFrame =
-    m.schema match {
-      case None => if (extra.isEmpty) df else df.select(col("*") +: extra: _*)
-      case Some(sc) =>
-        df.select(sc.fields.toSeq.map(f => conformTo(df, f)) ++ extra: _*)
-    }
+    df.select(m.schema.get.fields.toSeq.map(f => conformTo(df, f)) ++ extra: _*)
 
   /** A maintenance rewrite's read: row-tracked tables read their ids
     * and carry them into the rewrite as the MATERIALIZED physical
@@ -1865,7 +1865,6 @@ object SnapshotLog {
     else
       alignToSchema(readFilesWithRowIds(spark, bp, m, files), m,
         extra = Seq(col(RowIdCol).as(MatRowIdCol)))
-        .drop(RowIdCol) // only present on the headerless-schema path
 
   /** Inverse of [[toPhysical]] on a scanned frame: physical parquet
     * names back to the logical schema's names. Non-mapped columns
@@ -2048,6 +2047,13 @@ object SnapshotLog {
   val commitWins = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def tryCommit(fs: FileSystem, base: Path, m00: Manifest): Boolean = {
+    // every committed manifest carries its schema and each live file's
+    // byte length: readers plan from them and never touch data files
+    if (m00.schemaJson.isEmpty) throw new ProtocolException(
+      s"$base v${m00.version}: refusing to commit a manifest without a schema")
+    m00.allFiles.find(f => !m00.stats.get(f).exists(_.contains(ByteSizeKey)))
+      .foreach(f => throw new ProtocolException(
+        s"$base v${m00.version}: refusing to commit $f without its byte length"))
     commitAttempts.incrementAndGet()
     // partition-evolution hygiene: a layout tag whose key left the
     // manifest (the partition migrated to the current layout, was
@@ -2269,11 +2275,9 @@ object SnapshotLog {
     * THE unified read path: routed through the planner-integrated
     * [[SnapshotRelation]], so a plain `.filter(...)` on the result gets
     * manifest stats/bloom/partition file-skipping inside Spark's own
-    * planning, and — when the manifest carries schema + file sizes —
-    * planning touches ZERO data files. Tables written by older code
-    * (no schema header / no `__bytes`) degrade inside the relation to
-    * a one-time footer scan + per-file status RPC, never to wrong
-    * rows. Deletion vectors are applied in the relation wrapper.
+    * planning, and — since the manifest carries schema + file sizes —
+    * planning touches ZERO data files. Deletion vectors are applied
+    * in the relation wrapper.
     * `partCol` (when the caller knows it) additionally lets partition
     * predicates prune via the manifest's partition values. */
   def read(
@@ -2290,11 +2294,7 @@ object SnapshotLog {
       spark: SparkSession, bp: Path, m: Manifest,
       partCol: Option[String]): DataFrame =
     if (m.allFiles.isEmpty)
-      m.schema match {
-        case Some(sc) => spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), sc)
-        case None => spark.emptyDataFrame
-      }
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema.get)
     else SnapshotRelation.fromManifest(spark, bp, m, partCol)._1
 
   /** Apply `m`'s deletion vectors to a scan of `files` from it —
@@ -2427,8 +2427,8 @@ object SnapshotLog {
         .exists(_.equalsIgnoreCase(ic._1))),
       s"IDENTITY on partition column $partCol is not supported on the " +
         "merge path (append paths allocate before routing)"))
-    val changes0g = m0.map(mm =>
-      withIdentitySlots(applyGenerated(changes0, mm, opCol), mm))
+    val changes0g = m0.map(mm => storeAssign(
+      withIdentitySlots(applyGenerated(changes0, mm, opCol), mm), mm))
       .getOrElse(changes0)
     val changes = changes0g
       .withColumn("__rn", row_number().over(w))
@@ -2628,13 +2628,8 @@ object SnapshotLog {
           // rewritten files' rows were merged THROUGH their DVs; the
           // replacement files carry no deleted positions
           m.dvs -- replaced,
-          // a legacy table (no schema header) with partitions this batch
-          // did NOT rewrite keeps reading by footer mergeSchema — those
-          // files may hold columns the change stream never saw, and a
-          // header built from the batch alone would hide them
-          if (m.schemaJson.isEmpty && (m.files -- affectedAll).nonEmpty) None
-          else evolveSchema(m.schemaJson,
-            org.apache.spark.sql.types.StructType(targetFields.toArray)),
+          Some(evolveSchema(m.schemaJson,
+            org.apache.spark.sql.types.StructType(targetFields.toArray))),
           Some(if (opCol.isDefined) "CDC" else "UPSERT"),
           m.constraints,
           m.txns ++ txn,
@@ -2700,8 +2695,10 @@ object SnapshotLog {
     // identity SLOTS are added here too (stable schema across
     // retries), but VALUES allocate inside the loop against each
     // attempt's high-water
-    val rows1 = m0.map(mm =>
-      withIdentitySlots(applyGenerated(rows, mm), mm)).getOrElse(rows)
+    val rows1 = m0.map { mm =>
+      val g = withIdentitySlots(applyGenerated(rows, mm), mm)
+      if (overwrite) g else storeAssign(g, mm)
+    }.getOrElse(rows)
     val fields = rows1.schema.fields.toSeq
     partColsOf(partCol).foreach(pc => require(
       fields.exists(_.name.equalsIgnoreCase(pc)),
@@ -2799,12 +2796,8 @@ object SnapshotLog {
          else m.stats) ++ sizeStats(spark, fs, bp, staged),
         if (overwrite) Map.empty else m.blooms,
         if (overwrite) Map.empty else m.dvs,
-        // legacy tables (no schema header) with surviving old files stay
-        // legacy — a header built from the batch alone could hide columns
-        // those files carry (same rule as upsertBatch)
-        if (!overwrite && m.schemaJson.isEmpty && m.files.nonEmpty) None
-        else evolveSchema(if (overwrite) None else m.schemaJson,
-          org.apache.spark.sql.types.StructType(fields.toArray)),
+        Some(evolveSchema(if (overwrite) None else m.schemaJson,
+          org.apache.spark.sql.types.StructType(fields.toArray))),
         Some(if (overwrite) "OVERWRITE" else "APPEND"),
         m.constraints,
         m.txns ++ allTxns,
@@ -2841,8 +2834,7 @@ object SnapshotLog {
         .map { pm =>
           readSnapshot(spark, bp, pm, None)
             .select(fields.map(f =>
-              if (pm.schema.exists(_.fieldNames.contains(f.name)) ||
-                pm.schemaJson.isEmpty)
+              if (pm.schema.get.fieldNames.contains(f.name))
                 col(f.name).cast(f.dataType).as(f.name)
               else lit(null).cast(f.dataType).as(f.name)): _*)
             .withColumn("change_type", lit("delete"))
@@ -3023,35 +3015,32 @@ object SnapshotLog {
     * fragmentation). With [[OptimizeTargetProp]] set the budget is
     * ceil(bucketBytes / target): a bucket soft-split by a previous
     * target-size OPTIMIZE is steady state too — maintenance CONVERGES
-    * on the split layout instead of ping-ponging it back to one file.
-    * A bucket with any size-less legacy file falls back to the
-    * one-file rule. */
+    * on the split layout instead of ping-ponging it back to one file. */
   private def bucketsCompact(
-      fls: Seq[String],
-      bytesOf: String => Option[Long] = _ => None,
-      targetBytes: Option[Long] = None): Boolean = {
+      fls: Seq[String], m: Manifest, targetBytes: Option[Long]): Boolean = {
     val ids = fls.map(bucketIdOf)
     ids.forall(_.isDefined) && fls.groupBy(f => bucketIdOf(f).get)
-      .values.forall { g =>
-        val budget = targetBytes match {
-          case Some(t) =>
-            val sizes = g.flatMap(bytesOf(_))
-            if (sizes.size != g.size) 1L
-            else math.max(1L, math.ceil(sizes.sum.toDouble / t).toLong)
-          case None => 1L
-        }
-        g.size <= budget
-      }
+      .values.forall(g => g.size <= filesFor(g, m, targetBytes))
   }
+
+  /** Output-file budget for rewriting `fls`: ceil(bytes / target) with
+    * a byte target, else one file. */
+  private def filesFor(
+      fls: Seq[String], m: Manifest, targetBytes: Option[Long]): Int =
+    targetBytes.fold(1)(t =>
+      math.max(1, math.ceil(fls.map(fileBytes(m, _)).sum.toDouble / t).toInt))
 
   /** The table's [[OptimizeTargetProp]] byte target, if validly set. */
   private def optimizeTargetOf(m: Manifest): Option[Long] =
     m.props.get(OptimizeTargetProp)
       .flatMap(_.trim.toLongOption).filter(_ > 0)
 
-  /** A file's recorded [[ByteSizeKey]] length from the manifest stats. */
-  private def manifestBytesOf(m: Manifest)(f: String): Option[Long] =
+  /** A live file's recorded [[ByteSizeKey]] length — every committed
+    * manifest carries one per file ([[tryCommit]] refuses otherwise). */
+  private[graft] def fileBytes(m: Manifest, f: String): Long =
     m.stats.get(f).flatMap(_.get(ByteSizeKey)).flatMap(_._1.toLongOption)
+      .getOrElse(throw new ProtocolException(
+        s"manifest v${m.version} records no byte length for $f"))
 
   /** Pseudo-column under which each file's ROW COUNT rides in the
     * stats map (as an (n, n) bound — grammar-compatible, and `:` `;`
@@ -3140,13 +3129,6 @@ object SnapshotLog {
       f -> (a.getOrElse(f, Map.empty) ++ b.getOrElse(f, Map.empty))
     }.toMap
 
-  /** Evolve the manifest-held schema with what a commit just wrote:
-    * prior fields keep their order, brand-new fields append —
-    * add-column evolution, exactly the shape a mergeSchema footer read
-    * would produce — and everything is nullable (older partitions
-    * backfill NULL). A same-name TYPE change yields None: the commit
-    * drops the schema header and readers fall back to the footer
-    * mergeSchema read, which owns compatibility judgment. */
   /** Is a batch's `fresh` type readable UNDER the prior declared
     * type — equal modulo nullability, or (structs, recursively) a
     * SUBSET of the prior's fields with compatible types? A batch
@@ -3168,29 +3150,50 @@ object SnapshotLog {
     }
   }
 
+  /** SQL INSERT's store assignment, applied to a write batch: a column
+    * whose type the declared one cannot read is cast to the declared
+    * type when an ANSI store assignment allows it (numeric to numeric;
+    * an overflow raises at write). Any other mismatch is left for
+    * [[evolveSchema]] to refuse. */
+  private def storeAssign(df: DataFrame, m: Manifest): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    val declared = m.schema.map(_.fields.map(f => f.name -> f.dataType).toMap)
+      .getOrElse(Map.empty)
+    val casts = df.schema.fields.toSeq.collect {
+      case f if declared.get(f.name).exists(t => !readableUnder(f.dataType, t) &&
+          Cast.canANSIStoreAssign(f.dataType, t)) =>
+        f.name -> col(f.name).cast(declared(f.name))
+    }
+    if (casts.isEmpty) df else df.withColumns(casts.toMap)
+  }
+
+  /** Evolve the manifest-held schema with what a commit just wrote:
+    * prior fields keep their order, brand-new fields append —
+    * add-column evolution, exactly the shape a mergeSchema footer read
+    * would produce — and everything is nullable (older partitions
+    * backfill NULL). A same-name TYPE change the declared type cannot
+    * read is refused: every committed manifest carries ONE schema. */
   private def evolveSchema(
       prior: Option[String],
-      fresh: org.apache.spark.sql.types.StructType): Option[String] = {
+      fresh: org.apache.spark.sql.types.StructType): String = {
     import org.apache.spark.sql.types.{DataType, StructType}
-    try {
-      val prev = prior.map(DataType.fromJson(_).asInstanceOf[StructType])
-      prev match {
-        case None => Some(StructType(fresh.fields.map(_.copy(nullable = true))).json)
-        case Some(p) =>
-          val freshByName = fresh.fields.map(f => f.name -> f).toMap
-          val kept = p.fields.map { f =>
-            freshByName.get(f.name) match {
-              case Some(nf) if !readableUnder(nf.dataType, f.dataType) =>
-                return None
-              case _ => f.copy(nullable = true)
-            }
-          }
-          val added = fresh.fields
-            .filterNot(f => p.fieldNames.contains(f.name))
-            .map(_.copy(nullable = true))
-          Some(StructType(kept ++ added).json)
-      }
-    } catch { case _: Exception => None }
+    prior.map(DataType.fromJson(_).asInstanceOf[StructType]) match {
+      case None => StructType(fresh.fields.map(_.copy(nullable = true))).json
+      case Some(p) =>
+        val freshByName = fresh.fields.map(f => f.name -> f).toMap
+        val kept = p.fields.map { f =>
+          freshByName.get(f.name).foreach(nf => require(
+            readableUnder(nf.dataType, f.dataType),
+            s"batch column ${f.name} is ${nf.dataType.sql}, the table " +
+              s"declares ${f.dataType.sql} — cast the batch or ALTER " +
+              "COLUMN TYPE first"))
+          f.copy(nullable = true)
+        }
+        val added = fresh.fields
+          .filterNot(f => p.fieldNames.contains(f.name))
+          .map(_.copy(nullable = true))
+        StructType(kept ++ added).json
+    }
   }
 
   /** The shared stats aggregation: per-file min/max of `statsCols`
@@ -3441,8 +3444,7 @@ object SnapshotLog {
     * data files no longer exist on storage — the recovery after an
     * out-of-band deletion (a cleanup job, a bucket lifecycle rule)
     * that would otherwise fail every scan touching the hole. One
-    * existence probe per live file (driver-side, metadata-plane — the
-    * same O(files) class as the legacy-status fallback), then a
+    * existence probe per live file (driver-side, metadata-plane), then a
     * metadata-only commit removing the gone files with their
     * stats/blooms/DVs; partitions whose every file vanished drop
     * entirely. `dryRun` reports without committing. Returns the gone
@@ -3483,8 +3485,8 @@ object SnapshotLog {
     * `statsCols`' entries, and commit the result as a new
     * METADATA-ONLY version — same files, stats merged, blooms
     * untouched (Iceberg's compute-stats action). This is the recovery
-    * path when files were written stats-less (an older writer, a
-    * statsCols-less compaction): such files are never pruned and make
+    * path when files were written stats-less (a statsCols-less
+    * compaction or convert): such files are never pruned and make
     * metadata counts degrade to None, and fixing that needs one scan
     * of ONLY the stats-less files plus one manifest commit — no data
     * rewrite. Returns the new version, or 0 if nothing was missing. */
@@ -3506,44 +3508,24 @@ object SnapshotLog {
         val have = m.stats.getOrElse(f, Map.empty)
         !wanted.forall(have.contains)
       }
-      // ANALYZE is also the legacy-table upgrade path: backfill the
-      // per-file byte length (one status RPC per MISSING file — the
-      // recovery cost newer writers never pay, they record it from the
-      // staging listing) and the schema header (from the footer
-      // mergeSchema read this pass does anyway), so planning on this
-      // table becomes O(manifest) from here on.
-      val needSize = m.allFiles.filterNot(f =>
-        m.stats.get(f).exists(_.contains(ByteSizeKey)))
-      if (need.isEmpty && needSize.isEmpty && m.schemaJson.nonEmpty) return 0L
+      if (need.isEmpty) return 0L
       val byPath = need
         .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
       val aggs = statsAggs(physCols)
-      val fresh =
-        if (need.isEmpty) Map.empty[String, Map[String, (String, String)]]
-        else spark.read.option("mergeSchema", "true")
-          .parquet(need.map(f => new Path(bp, f).toString): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().flatMap { r =>
-            byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
-              .map(_ -> decodeBounds(r, physCols))
-          }.toMap
-      val sizes = needSize.map { f =>
-        val len = fs.getFileStatus(new Path(bp, f)).getLen.toString
-        f -> Map(ByteSizeKey -> (len, len))
-      }.toMap
-      val merged = mergeFileStats(sizes, fresh).foldLeft(m.stats) {
+      val fresh = spark.read.option("mergeSchema", "true")
+        .parquet(need.map(f => new Path(bp, f).toString): _*)
+        .groupBy(input_file_name().as("__f"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect().flatMap { r =>
+          byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
+            .map(_ -> decodeBounds(r, physCols))
+        }.toMap
+      val merged = fresh.foldLeft(m.stats) {
         case (acc, (f, b)) => acc.updated(f, acc.getOrElse(f, Map.empty) ++ b)
       }
-      val schemaJson = m.schemaJson.orElse {
-        try Some(StructTypeNullable(spark.read.option("mergeSchema", "true")
-          .parquet(m.allFiles.map(f => new Path(bp, f).toString): _*).schema))
-        catch { case _: Exception => None }
-      }
       val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp,
-          Manifest(version, m.files, merged, m.blooms, m.dvs, schemaJson,
-            Some("STATS"), m.constraints, m.txns, m.props, m.colmap, m.dropped)))
+      if (tryCommit(fs, bp, m.copy(version = version, stats = merged,
+          op = Some("STATS"))))
         return version
       attempt += 1
     }
@@ -3681,9 +3663,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"no committed version at $base"))
-      val sc = m.schema.getOrElse(sys.error(
-        "RENAME COLUMN needs a schema header (legacy manifest) — any " +
-          "write, or ANALYZE … COMPUTE STATISTICS, records one first"))
+      val sc = m.schema.get
       val field = sc.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
         sys.error(s"no such column: $from"))
       require(!sc.fields.exists(_.name.equalsIgnoreCase(to)),
@@ -3748,9 +3728,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"no committed version at $base"))
-      val sc = m.schema.getOrElse(sys.error(
-        "DROP COLUMN needs a schema header (legacy manifest) — any " +
-          "write, or ANALYZE … COMPUTE STATISTICS, records one first"))
+      val sc = m.schema.get
       val field = sc.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         sys.error(s"no such column: $name"))
       require(!partCol.exists(pc => partColsOf(pc)
@@ -3833,9 +3811,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"no committed version at $base"))
-      val sc = m.schema.getOrElse(sys.error(
-        "ALTER COLUMN TYPE needs a schema header (legacy manifest) — any " +
-          "write, or ANALYZE … COMPUTE STATISTICS, records one first"))
+      val sc = m.schema.get
       val field = sc.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         sys.error(s"no such column: $name"))
       require(widens(field.dataType, to),
@@ -4081,7 +4057,7 @@ object SnapshotLog {
             // budget-aware: a bucket target-split by OPTIMIZE is steady
             // state — folding it back to one file would ping-pong with
             // the next target-size pass
-            bucketsCompact(files, manifestBytesOf(m), optimizeTargetOf(m))
+            bucketsCompact(files, m, optimizeTargetOf(m))
            else files.size <= 1)))
         return 0L
       val version = nextVersion(fs, bp, m.version)
@@ -4228,7 +4204,7 @@ object SnapshotLog {
               // bucketed steady state is one file PER BUCKET — or, with
               // a byte target, ceil(bucketBytes/target) files; only a
               // bucket over its budget (or an untagged file) fragments
-              !bucketsCompact(fls, manifestBytesOf(m), targetBytes)
+              !bucketsCompact(fls, m, targetBytes)
             else fls.size >= math.max(minFiles, 2))
         }
         if (need.isEmpty) return 0L
@@ -4243,18 +4219,10 @@ object SnapshotLog {
         // splits each partition into ~ceil(bytes/target) output files —
         // best-effort (salt groups sharing a task merge), bounded by
         // [1, n]. Partition byte totals come from the manifest's
-        // `__bytes` rollups — pure metadata, no extra scan; a partition
-        // with any size-less legacy file falls back to the single fold.
-        val saltsOf: Map[String, Int] = targetBytes match {
-          case None => Map.empty
-          case Some(t) => need.map { p =>
-            val sizes = m.files(p).flatMap(f =>
-              m.stats.get(f).flatMap(_.get(ByteSizeKey))
-                .flatMap(_._1.toLongOption))
-            p -> (if (sizes.size != m.files(p).size) 1
-                  else math.max(1, math.ceil(sizes.sum.toDouble / t).toInt))
-          }.toMap
-        }
+        // `__bytes` rollups — pure metadata, no extra scan.
+        val saltsOf: Map[String, Int] =
+          if (targetBytes.isEmpty) Map.empty
+          else need.map(p => p -> filesFor(m.files(p), m, targetBytes)).toMap
         val df = readForRewrite(spark, bp, m, oldFiles)
         val flat = toPhysical(
           df.withColumn("__p", partRoute(partCol)), m)
@@ -4266,19 +4234,14 @@ object SnapshotLog {
           // several files ALL carrying the same bucket tag (which the
           // bucketed scan groups back into one bucket partition) —
           // rows still never cross buckets.
-          val saltsPB: Map[String, Int] = targetBytes match {
-            case None => Map.empty
-            case Some(t) => need.iterator.flatMap { p =>
+          val saltsPB: Map[String, Int] =
+            if (targetBytes.isEmpty) Map.empty
+            else need.iterator.flatMap { p =>
               m.files(p).groupBy(bucketIdOf).collect {
                 case (Some(bid), g) =>
-                  val sizes = g.flatMap(manifestBytesOf(m)(_))
-                  val k =
-                    if (sizes.size != g.size) 1
-                    else math.max(1, math.ceil(sizes.sum.toDouble / t).toInt)
-                  s"$p\u0000$bid" -> k
+                  s"$p\u0000$bid" -> filesFor(g, m, targetBytes)
               }.filter(_._2 > 1)
             }.toMap
-          }
           if (saltsPB.isEmpty) stagePartitioned(flat, m, fs, dir)
           else stageBucketedSplit(flat, m, fs, dir, need, saltsPB)
         } else {
@@ -4680,9 +4643,7 @@ object SnapshotLog {
           (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
           m.blooms -- preFiles,
           m.dvs -- preFiles,
-          // this pass read the whole live table, so a legacy manifest
-          // gets its schema header backfilled for free
-          m.schemaJson.orElse(Some(StructTypeNullable(lv.schema))),
+          m.schemaJson,
           Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
         if (tryCommit(fs, bp, next)) {
           if (cdfOn) commitCdfVersion(fs, bp, version,
@@ -4812,7 +4773,7 @@ object SnapshotLog {
           (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
           m.blooms -- preFiles,
           m.dvs -- preFiles,
-          m.schemaJson.orElse(Some(StructTypeNullable(lv.schema))),
+          m.schemaJson,
           Some("REPLACE_WHERE"), m.constraints, m.txns ++ txn, m.props,
           m.colmap, m.dropped)
         if (tryCommit(fs, bp, next)) {
@@ -4996,7 +4957,7 @@ object SnapshotLog {
         (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
         m.blooms -- preFiles,
         m.dvs -- preFiles,
-        m.schemaJson.orElse(Some(StructTypeNullable(lv.schema))),
+        m.schemaJson,
         Some("UPDATE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
       if (tryCommit(fs, bp, next)) {
         if (cdfOn) {
@@ -5132,7 +5093,8 @@ object SnapshotLog {
 
   /** Versions with a materialized feed dir, ascending. */
   /** The operation that committed version `v` ([[Manifest.op]]) — one
-    * root-manifest read, zero data IO. None on legacy manifests.
+    * root-manifest read, zero data IO. None when the commit named no
+    * operation.
     * Metadata plane: the streaming row-feed mode uses it to classify a
     * commit as append vs change without opening its feed. */
   def opAt(spark: SparkSession, base: String, v: Long): Option[String] = {
@@ -5163,9 +5125,7 @@ object SnapshotLog {
         .map(_.allFiles.toSet).getOrElse(Set.empty[String])
       val added = m.allFiles.filterNot(prevFiles)
       if (added.isEmpty)
-        m.schema.map(sc => spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), sc))
-          .getOrElse(spark.emptyDataFrame)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema.get)
       else alignToSchema(readFiles(spark, bp, m, added), m)
     }
   }
@@ -5182,8 +5142,7 @@ object SnapshotLog {
     * maxBytesPerTrigger). Change feed: the materialized `_cdf/v<N>`
     * dir's parquet bytes (one listing). Row feed: the data files `v`
     * holds that its predecessor does not, lengths from manifest stats
-    * ([[ByteSizeKey]]; one status RPC per stat-less legacy file).
-    * Metadata plane only — no data file is opened. */
+    * ([[ByteSizeKey]]). Metadata plane only — no data file is opened. */
   def feedVersionBytes(
       fs: FileSystem, base: Path, v: Long, changeFeed: Boolean): Long =
     if (changeFeed) {
@@ -5196,10 +5155,7 @@ object SnapshotLog {
       val prevFiles = prev.flatMap(readManifestAt(fs, base, _))
         .map(_.allFiles.toSet).getOrElse(Set.empty[String])
       readManifestAt(fs, base, v).map(m =>
-        m.allFiles.filterNot(prevFiles).map(f =>
-          m.stats.get(f).flatMap(_.get(ByteSizeKey))
-            .flatMap(_._1.toLongOption)
-            .getOrElse(fs.getFileStatus(new Path(base, f)).getLen)).sum)
+        m.allFiles.filterNot(prevFiles).map(fileBytes(m, _)).sum)
         .getOrElse(0L)
     }
 
@@ -5314,9 +5270,9 @@ object SnapshotLog {
   }
 
   /** DESCRIBE HISTORY: one row per committed version, newest first —
-    * version, commit timestamp (the manifest file's modification
-    * time: the atomic create IS the commit instant), the operation
-    * that produced it ([[Manifest.op]]; UNKNOWN on legacy manifests),
+    * version, commit timestamp (the root's in-commit `#ts` stamp),
+    * the operation that produced it ([[Manifest.op]]; UNKNOWN when
+    * the commit named none),
     * live partition/file counts, and the metadata row count when
     * every file carries one (−1 otherwise). O(versions) manifest
     * reads, zero data-file IO — an audit/debug surface, not a hot
@@ -5372,11 +5328,7 @@ object SnapshotLog {
     import spark.implicits._
     committedVersions(fs, bp).reverse.flatMap { v =>
       rootText(fs, bp, v).map { text =>
-        // the in-commit stamp when present; legacy manifests fall back
-        // to the root file's modification time
-        val ts = parseTs(text).getOrElse(
-          fs.getFileStatus(new Path(logDir(bp), vName(v)))
-            .getModificationTime)
+        val ts = commitTs(text, bp, v)
         val op = text.split("\n").iterator
           .filter(_.startsWith(OpTag + "\t"))
           .map(l => dec(l.substring(OpTag.length + 1)))
@@ -5700,9 +5652,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
-      val cur = m.schema.getOrElse(sys.error(
-        s"$base has no schema header (legacy manifest) — any write, or " +
-          "ANALYZE … COMPUTE STATISTICS, records one first"))
+      val cur = m.schema.get
       val dups = newCols.fieldNames.filter(n =>
         cur.fieldNames.exists(_.equalsIgnoreCase(n)))
       require(dups.isEmpty,
@@ -5746,9 +5696,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
-      val cur = m.schema.getOrElse(sys.error(
-        s"$base has no schema header (legacy manifest) — any write, or " +
-          "ANALYZE … COMPUTE STATISTICS, records one first"))
+      val cur = m.schema.get
       def addAt(st: StructType, p: Seq[String]): StructType = p match {
         case Seq(leaf) =>
           require(!st.fieldNames.exists(_.equalsIgnoreCase(leaf)),
@@ -5809,9 +5757,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
-      val cur = m.schema.getOrElse(sys.error(
-        "nested RENAME needs a schema header (legacy manifest) — any " +
-          "write records one first"))
+      val cur = m.schema.get
       constraintsReferencing(m, path.head).foreach(n => sys.error(
         s"constraint $n references ${path.head}; drop it first"))
       generatedEntangled(m, path.head).foreach(g => sys.error(
@@ -5880,9 +5826,7 @@ object SnapshotLog {
     while (attempt < maxRetries) {
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
-      val cur = m.schema.getOrElse(sys.error(
-        "nested DROP needs a schema header (legacy manifest) — any " +
-          "write records one first"))
+      val cur = m.schema.get
       constraintsReferencing(m, path.head).foreach(n => sys.error(
         s"constraint $n references ${path.head}; drop it first"))
       generatedEntangled(m, path.head).foreach(g => sys.error(

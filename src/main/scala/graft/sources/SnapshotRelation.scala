@@ -330,10 +330,7 @@ object SnapshotRelation {
     * Planning is O(manifest): `FileStatus` entries synthesize from the
     * recorded per-file byte lengths ([[SnapshotLog.ByteSizeKey]]) and
     * the schema comes from the manifest header — ZERO data-file RPCs
-    * or footer reads on the planning path. Files a LEGACY writer left
-    * without a recorded length fall back to one status RPC each, and a
-    * header-less manifest to one mergeSchema footer scan — degradation
-    * is per-missing-metadata, never wholesale. Deletion vectors are
+    * or footer reads on the planning path. Deletion vectors are
     * applied as an anti-join above the scan (merge-on-read), under
     * which data filters still push into the scan and through
     * [[SnapshotFileIndex.listFiles]] pruning. */
@@ -344,17 +341,10 @@ object SnapshotRelation {
       partCol: Option[String]): (DataFrame, SnapshotFileIndex) = {
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses = m.allFiles.map { f =>
-      val p = fs.makeQualified(new Path(bp, f))
-      f -> (m.stats.get(f).flatMap(_.get(SnapshotLog.ByteSizeKey))
-        .flatMap(_._1.toLongOption) match {
-        case Some(len) => new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L, p)
-        case None => fs.getFileStatus(p)
-      })
+      f -> new FileStatus(SnapshotLog.fileBytes(m, f), false, 1,
+        128L * 1024 * 1024, 0L, fs.makeQualified(new Path(bp, f)))
     }.toMap
-    val schema = m.schema.getOrElse {
-      spark.read.option("mergeSchema", "true")
-        .parquet(m.allFiles.map(f => new Path(bp, f).toString): _*).schema
-    }
+    val schema = m.schema.get
     // row-tracked tables read the MATERIALIZED id column too (files
     // that predate a rewrite simply return null for it and fall back
     // to base + row_index in the coalesce)

@@ -43,34 +43,20 @@ import graft.sources.SnapshotLog
 object CommitLogStream {
 
   /** The stream's row schema for a table at `base`: table columns
-    * (from the manifest header when present) + the CDF columns. */
-  def cdfSchema(spark: SparkSession, base: String): StructType = {
-    val bp = new Path(base)
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tableSchema = SnapshotLog.readManifest(fs, bp).flatMap(_.schema)
-      .getOrElse {
-        // legacy manifest: one footer read of the newest feed version
-        val vs = SnapshotLog.cdfVersions(fs, bp)
-        require(vs.nonEmpty,
-          s"commit-log stream needs a manifest schema or a materialized _cdf at $base")
-        StructType(spark.read.parquet(
-          new Path(bp, f"_cdf/v${vs.last}%011d").toString).schema
-          .filterNot(f => f.name == "change_type" || f.name == "_commit_version"))
-      }
-    StructType(tableSchema.fields.toSeq :+
+    * + the CDF columns. */
+  def cdfSchema(spark: SparkSession, base: String): StructType =
+    StructType(tableSchema(spark, base).fields.toSeq :+
       StructField("change_type", StringType, nullable = true) :+
       StructField("_commit_version", LongType, nullable = true))
-  }
 
-  /** Row-feed schema: the table columns alone (the manifest header is
-    * mandatory here — a row feed of a legacy table would have to guess
-    * which feed columns are data). */
+  /** Row-feed schema: the table columns alone, from the newest
+    * manifest's schema header. */
   def tableSchema(spark: SparkSession, base: String): StructType = {
     val bp = new Path(base)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SnapshotLog.readManifest(fs, bp).flatMap(_.schema).getOrElse(
-      sys.error(s"streaming row feed needs a manifest schema at $base — " +
-        "commit through a schema-writing path first"))
+    SnapshotLog.readManifest(fs, bp).getOrElse(
+      sys.error(s"commit-log stream needs a committed table at $base"))
+      .schema.get
   }
 
   /** Shared constructor for the v1 streaming sources registered under

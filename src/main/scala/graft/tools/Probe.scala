@@ -11,7 +11,8 @@ import graft.{GraftSessions, Registry}
   *
   * Usage: runMain graft.tools.Probe <q1,q2,...|ALL> [sfDir]
   *          [--explain | --decompose | --show | --plans <outDir>/<suffix>]
-  * Times a noop-sink execution (same harness as Bench); with --explain
+  * Times build + noop-sink execution per rep (same harness as Bench), so
+  * driver loops that run while a query is built count; with --explain
   * also prints the formatted physical plan. The other flags replace the
   * timing:
   *   --decompose  build / plan / first / warm phase times, three cold reps
@@ -39,8 +40,8 @@ object Probe {
     }
     val spark = GraftSessions.local()
 
-    // "ALL" sweeps every registered query once (warm, after one untimed
-    // build+run) and flags the slow tail — the per-round pathology scan.
+    // "ALL" sweeps every registered query (best of two build+run reps)
+    // and flags the slow tail — the per-round pathology scan.
     // A comma-separated list runs those queries in sequence in ONE
     // session (interference experiments: "d6_ngram_jaccard,q1_...").
     val targets =
@@ -97,12 +98,11 @@ object Probe {
               f"first=$tFirst%.0fms warm=${warm.min}%.0fms (${warm.map(w => f"$w%.0f").mkString(",")})")
           }
         } else {
-          val df = q.build(spark, sfDir)
-          if (explain) df.explain("formatted")
+          if (explain) q.build(spark, sfDir).explain("formatted")
           val runs = if (name == "ALL") 2 else 3
           val times = (1 to runs).map { _ =>
             val t0 = System.nanoTime()
-            df.write.mode("overwrite").format("noop").save()
+            q.build(spark, sfDir).write.mode("overwrite").format("noop").save()
             (System.nanoTime() - t0) / 1e9
           }
           println(f"[probe] $n best: ${times.min}%.2fs  (${times.map(t => f"$t%.2f").mkString(", ")})")

@@ -116,7 +116,7 @@ class MetadataAggSpec extends SparkSpec {
     assertMetadataOnly(q)
   }
 
-  test("no recorded row counts (legacy convert) -> normal plan") {
+  test("no recorded row counts (unpartitioned convert) -> normal plan") {
     // an unpartitioned CONVERT without statsCols adopts files with
     // byte lengths only — countRows is None, the fold must refuse
     val base = Files.createTempDirectory("graft_maggn").toString + "/tbl"

@@ -62,8 +62,12 @@ class ConcurrencyStressSpec extends SparkSpec {
       pool.submit(new Runnable {
         override def run(): Unit = {
           latch.await()
-          val m = SnapshotLog.Manifest(1L,
-            Map(s"p$i" -> Seq(s"data/f$i.parquet")), op = Some("APPEND"))
+          // a commit-gate-complete manifest: schema + byte length
+          val f = s"data/f$i.parquet"
+          val m = SnapshotLog.Manifest(1L, Map(s"p$i" -> Seq(f)),
+            stats = Map(f -> Map(SnapshotLog.ByteSizeKey -> ("1", "1"))),
+            schemaJson = Some("""{"type":"struct","fields":[]}"""),
+            op = Some("APPEND"))
           if (SnapshotLog.tryCommit(fs, bp, m)) wins.incrementAndGet()
           ()
         }

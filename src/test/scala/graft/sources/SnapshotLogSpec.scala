@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.SparkSpec
 import graft.streaming.EventStreams
@@ -211,12 +212,19 @@ class SnapshotLogSpec extends SparkSpec {
     assert(SnapshotLog.compactPartition(spark, base, day) == 0L)
   }
 
+  /** A hand-built manifest the commit gate accepts: a schema header
+    * and a byte length for each file. */
+  private def handBuilt(v: Long, part: String, file: String) =
+    SnapshotLog.Manifest(v, Map(part -> Seq(file)),
+      stats = Map(file -> Map(SnapshotLog.ByteSizeKey -> ("1", "1"))),
+      schemaJson = Some(new StructType().add("id", LongType).json))
+
   test("version rename refuses to overwrite: lost races surface as conflicts") {
     val base = Files.createTempDirectory("graft_snaplog_cc").toString + "/tbl"
     val bp = new Path(base)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(SnapshotLog.tryCommit(fs, bp, SnapshotLog.Manifest(1, Map("a" -> Seq("data/x.parquet")))))
-    assert(!SnapshotLog.tryCommit(fs, bp, SnapshotLog.Manifest(1, Map("b" -> Seq("data/y.parquet")))),
+    assert(SnapshotLog.tryCommit(fs, bp, handBuilt(1, "a", "data/x.parquet")))
+    assert(!SnapshotLog.tryCommit(fs, bp, handBuilt(1, "b", "data/y.parquet")),
       "second writer of the same version must lose")
     assert(SnapshotLog.readManifest(fs, bp).get.files.keySet == Set("a"))
   }
@@ -225,7 +233,7 @@ class SnapshotLogSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_snaplog_inflight").toString + "/tbl"
     val bp = new Path(base)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(SnapshotLog.tryCommit(fs, bp, SnapshotLog.Manifest(1, Map("a" -> Seq("data/x.parquet")))))
+    assert(SnapshotLog.tryCommit(fs, bp, handBuilt(1, "a", "data/x.parquet")))
     // simulate a writer that claimed v2 and died before finishing: the
     // manifest file exists but carries no footer
     val dead = new Path(bp, "_log/v00000000002.txt")
@@ -659,5 +667,119 @@ class SnapshotLogSpec extends SparkSpec {
     val m = SnapshotLog.readManifest(fs, new Path(base)).get
     assert(m.allFiles.forall(f => m.stats.get(f).exists(_.contains("value"))),
       s"streaming batches must record bounds: ${m.stats}")
+  }
+
+  test("a manifest without a schema header is refused on every read path") {
+    val base = Files.createTempDirectory("graft_headerless").toString + "/tbl"
+    val bp = new Path(base)
+    val hfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // real data files under a hand-written root in the header-less
+    // grammar: bare `partition\tfile` lines — no #schema, no #ts, no
+    // #op, no __bytes — committed (it ends in the footer)
+    (1L to 120L).map(i => (i, i * 2.0, s"p${i % 2}"))
+      .toDF("id", "value", "part")
+      .withColumn("__p", col("part")).repartition(2)
+      .write.partitionBy("__p").parquet(s"$base/data/b1v1-old")
+    val staged = hfs.listStatus(new Path(bp, "data/b1v1-old"))
+      .filter(_.getPath.getName.startsWith("__p=")).flatMap { d =>
+        val p = d.getPath.getName.stripPrefix("__p=")
+        hfs.listStatus(d.getPath).filter(_.getPath.getName.endsWith(".parquet"))
+          .map(st => p -> s"data/b1v1-old/${d.getPath.getName}/${st.getPath.getName}")
+      }.toSeq
+    assert(staged.size >= 2)
+    val text = staged.sortBy(_._2).map { case (p, f) => s"$p\t$f" }
+      .mkString("", "\n", "\n") + "#eof\n"
+    val out = hfs.create(new Path(bp, "_log/v00000000001.txt"), false)
+    out.write(text.getBytes("UTF-8")); out.close()
+
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[SnapshotLog.ProtocolException](body)
+      assert(e.getMessage.contains("v1 has no"), s"$what: ${e.getMessage}")
+    }
+    refused("readManifest")(SnapshotLog.readManifest(hfs, bp))
+    refused("read")(SnapshotLog.read(spark, base))
+    refused("applyWithIndex")(SnapshotRelation.applyWithIndex(spark, base))
+    refused("history")(SnapshotLog.history(spark, base).collect())
+  }
+
+  test("every committing entry point records #schema, #ts, #op and per-file __bytes") {
+    val root = Files.createTempDirectory("graft_writer_inv").toString
+    val base = s"$root/tbl"
+    val bp = new Path(base)
+    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.5, s"d${i % 3}"))
+      .toDF("id", "value", "day")
+    var last = 0L
+    // after each commit: a NEW version whose root carries the three
+    // header tags and whose every live file carries its byte length
+    def committed(what: String, at: String = base): Unit = {
+      val p = new Path(at)
+      val v = SnapshotLog.currentVersion(fs, p)
+      if (at == base) { assert(v > last, s"$what committed nothing"); last = v }
+      val in = fs.open(new Path(p, f"_log/v$v%011d.txt"))
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val tags = text.split("\n").map(_.takeWhile(_ != '\t')).toSet
+      Seq("#schema", "#ts", "#op").foreach(t =>
+        assert(tags(t), s"$what: v$v root lacks $t"))
+      val m = SnapshotLog.readManifestAt(fs, p, v).get
+      val sizeless = m.allFiles.filterNot(f =>
+        m.stats.get(f).exists(_.contains(SnapshotLog.ByteSizeKey)))
+      assert(sizeless.isEmpty, s"$what: v$v files lack __bytes: $sizeless")
+    }
+
+    SnapshotLog.appendBatch(spark, base, rows(1 to 30), "day", batchId = 1)
+    committed("append")
+    SnapshotLog.appendBatch(spark, base, rows(1 to 60), "day", batchId = 2,
+      overwrite = true)
+    committed("overwrite")
+    SnapshotLog.upsertBatch(spark, base, rows(50 to 70), "id", "value", "day",
+      batchId = 3)
+    committed("upsert (single key)")
+    SnapshotLog.upsertBatch(spark, base, rows(65 to 80), Seq("id"), "value",
+      "day", batchId = 4)
+    committed("upsert (keys)")
+    SnapshotLog.upsertBatch(spark, base, rows(1 to 10)
+      .withColumn("op", when(col("id") % 2 === 0, "D").otherwise("U")),
+      Seq("id"), "value", "day", batchId = 5, opCol = Some("op"))
+    committed("upsert (CDC)")
+    SnapshotLog.deleteWhere(spark, base, col("id") === 11L, "day")
+    committed("delete (rewrite)")
+    SnapshotLog.deleteWhere(spark, base, col("id") === 12L, "day",
+      deletionVectors = true)
+    committed("delete (deletion vectors)")
+    assert(SnapshotLog.optimizeTable(spark, base, "day") > 0L)
+    committed("optimize")
+    assert(SnapshotLog.computeStats(spark, base, Seq("value")) > 0L)
+    committed("compute stats")
+    SnapshotLog.setProperties(spark, base, Map("owner" -> "ops"))
+    committed("set properties")
+    SnapshotLog.addColumns(spark, base, new StructType().add("note", StringType))
+    committed("add column")
+    SnapshotLog.renameColumn(spark, base, "note", "memo", Some("day"))
+    committed("rename column")
+    SnapshotLog.dropColumn(spark, base, "memo", Some("day"))
+    committed("drop column")
+    SnapshotLog.restoreTable(spark, base, 2L)
+    committed("restore")
+    SnapshotLog.cloneTable(spark, base, s"$root/shallow")
+    committed("shallow clone", s"$root/shallow")
+    SnapshotLog.deepCloneTable(spark, base, s"$root/deep")
+    committed("deep clone", s"$root/deep")
+    rows(1 to 20).write.parquet(s"$root/plain")
+    SnapshotLog.convertInPlace(spark, s"$root/plain", SnapshotLog.NoPartCol)
+    committed("convert", s"$root/plain")
+    graft.GraftSessions.withExtensions(spark).sql(s"""
+      CREATE TABLE wi.t (id BIGINT, value DOUBLE, day STRING)
+      USING graft_snapshot PARTITIONED BY (day) LOCATION '$root/sql'
+    """)
+    committed("SQL CREATE", s"$root/sql")
+
+    // a batch whose column type the table cannot read is refused
+    // before it could leave a manifest without one schema
+    val e = intercept[IllegalArgumentException](SnapshotLog.appendBatch(
+      spark, base, rows(90 to 91).withColumn("value", col("value").cast("string")),
+      "day", batchId = 6))
+    assert(e.getMessage.contains("value"), e.getMessage)
+    assert(SnapshotLog.currentVersion(fs, bp) == last)
   }
 }
