@@ -55,6 +55,9 @@ import org.apache.spark.sql.functions._
   * non-null and stable per key, and their canonical string form must
   * not contain tab or newline (they key the manifest lines). */
 object SnapshotLog {
+  import ManifestCodec.{
+    dec, listedVersions, logDir, manifest, mapCommitted, partitions,
+    readRoot, references, rootBelow, vName}
 
   /** A deletion vector: the positions (0-based parquet row indexes)
     * deleted from ONE data file without rewriting it — merge-on-read
@@ -236,54 +239,6 @@ object SnapshotLog {
           .asInstanceOf[org.apache.spark.sql.types.StructType])
         catch { case _: Exception => None })
   }
-
-  /** Last line of every committed manifest. A manifest missing it is
-    * in-flight (create-exclusive claimed the name but the writer has
-    * not finished, or crashed mid-write) — readers skip it and fall
-    * back to the previous complete version; writers allocate PAST it. */
-  private val Footer = "#eof"
-
-  /** Header-comment tag carrying the table schema (see [[Manifest]]). */
-  private val SchemaTag = "#schema"
-
-  /** Header-comment tag naming the operation that committed a version. */
-  private val OpTag = "#op"
-
-  /** Header line `#constraint <name> <check-sql>` — one per table
-    * CHECK constraint ([[Manifest.constraints]]). */
-  private val ConstraintTag = "#constraint"
-
-  /** Header line `#txn <appId> <batchId>` — one per streaming-writer
-    * transaction watermark ([[Manifest.txns]]). */
-  private val TxnTag = "#txn"
-
-  /** Header line `#prop <key> <value>` — one per table property
-    * ([[Manifest.props]]). */
-  private val PropTag = "#prop"
-
-  /** Header line `#colmap <logical> <physical>` — one per non-identity
-    * column mapping ([[Manifest.colmap]]). */
-  private val ColMapTag = "#colmap"
-
-  /** Header line `#droppedcol <physical>` — one per tombstoned
-    * physical column ([[Manifest.dropped]]). */
-  private val DroppedTag = "#droppedcol"
-
-  /** Header line `#feature <name> <reader|writer>` — Delta-style TABLE
-    * FEATURES, the protocol gate. Stamped by [[tryCommit]] from the
-    * manifest's actual content (a DV-carrying commit requires the
-    * `deletionVectors` reader feature, etc.), and ENFORCED on both
-    * planes: a reader missing a required reader feature refuses the
-    * table at manifest parse ([[readManifestAt]]) instead of
-    * misreading it (resurrecting DV'd rows, exposing physical column
-    * names), and a writer missing a required writer feature refuses to
-    * commit ([[tryCommit]]) instead of corrupting invariants it cannot
-    * see (row-id high waters, constraint enforcement). Unlike the
-    * other `#`-header lines — which are deliberately grammar-invisible
-    * to older readers — this one is load-bearing for them: the
-    * `#feature` grammar itself predates every gated feature, so "old
-    * reader" means "knows `#feature`, lacks the named capability". */
-  private val FeatureTag = "#feature"
 
   /** Reader features THIS engine implements. A manifest requiring
     * anything else fails closed at read. */
@@ -806,15 +761,9 @@ object SnapshotLog {
     * `_log/`. A commit touching K of P partitions then rewrites K
     * shard files + one O(P) root — not O(total files) — and
     * partition-pruned reads load only the wanted shards. Below the
-    * threshold the single-file format is unchanged (and stays
-    * byte-compatible with every manifest already on disk). */
+    * threshold the root holds every file line itself (the inline
+    * layout). [[ManifestCodec]] owns all three layouts. */
   val ShardFileThreshold = 4096
-
-  /** Header line `#shard <part> <rel> <nFiles> <nRows> <nDv> <hash>`
-    * pointing the root manifest at one partition's shard file.
-    * Old readers skip every `#` line, so the tag space is shared with
-    * [[SchemaTag]]/[[OpTag]]. */
-  private val ShardTag = "#shard"
 
   /** Past this many partitions a sharded root goes TWO-LEVEL: the
     * root holds one `#sgroup` pointer line per GROUP of
@@ -829,11 +778,6 @@ object SnapshotLog {
     * earlier groups byte-identical for hash reuse. */
   val ShardGroupSize = 512
 
-  /** Header line `#sgroup <first> <last> <rel> <nParts> <nFiles>
-    * <nRows> <nDv> <hash>` pointing a two-level root at one pointer
-    * group file. */
-  private val GroupTag = "#sgroup"
-
   /** Past this many transaction watermarks ([[Manifest.txns]] — one
     * per streaming writer app, one per COPY INTO'd file) the `#txn`
     * header lines spill to a content-hashed side file under `_log/`
@@ -847,50 +791,12 @@ object SnapshotLog {
   val TxnSpillThreshold = 4096
   val TxnSpillProp = "graft.txn.spillThreshold"
 
-  /** Header line `#txnfile <rel> <count> <sha256>` pointing the root
-    * at the spilled watermark side file. */
-  private val TxnFileTag = "#txnfile"
-
-  private def parseTxnPtr(text: String): Option[(String, Long, String)] =
-    text.split("\n").iterator.filter(_.startsWith(TxnFileTag + "\t"))
-      .map { l =>
-        val a = l.split("\t", 4)
-        (dec(a(1)), a(2).toLong, a(3))
-      }.nextOption()
-
-  /** Header line `#ts <epochMillis>` — the IN-COMMIT TIMESTAMP
-    * (Delta's ICT feature): commit time recorded as a property of the
-    * commit itself, monotone by construction (max(now, prev+1)), so
-    * `TIMESTAMP AS OF` and DESCRIBE HISTORY survive storage
-    * migrations, backup restores, and cross-writer clock skew — all
-    * of which rewrite or reorder file MODIFICATION times. Every root
-    * [[tryCommit]] publishes carries one. */
-  private val TsTag = "#ts"
-
-  private def parseTs(text: String): Option[Long] =
-    text.split("\n").iterator.filter(_.startsWith(TsTag + "\t"))
-      .map(_.split("\t", 2)(1).trim.toLongOption).nextOption().flatten
-
-  /** Marker that opts a table into sharded manifests below
-    * [[ShardFileThreshold]] (tests, or tables known to grow). Once
-    * past the threshold no marker is needed — size alone shards.
-    * Content "g" additionally forces TWO-LEVEL roots with tiny
-    * (2-partition) groups, exercising the grouped layout on small
-    * tables. */
-  private def shardMarker(base: Path) = new Path(logDir(base), "sharded.marker")
-
   /** Opt `base` into sharded manifest commits regardless of size;
     * `grouped = true` also forces the two-level root layout. */
   def enableSharding(
-      fs: FileSystem, base: Path, grouped: Boolean = false): Unit = {
-    fs.mkdirs(logDir(base))
-    val out = fs.create(shardMarker(base), true)
-    try if (grouped) out.write("g".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      fs: FileSystem, base: Path, grouped: Boolean = false): Unit =
+    ManifestCodec.markSharded(fs, base, grouped)
 
-  private def logDir(base: Path) = new Path(base, "_log")
-  private def vName(v: Long) = f"v$v%011d.txt"
   private def dvDir(base: Path) = new Path(base, "_dv")
 
   /** Delta-varint encode sorted positions → base64 (inline-DV payload).
@@ -927,116 +833,8 @@ object SnapshotLog {
     out.toArray
   }
 
-  /** Percent-encode exactly the characters the manifest line grammar
-    * uses (plus the escape char itself); applied to stats column names
-    * and bound values. */
-  private def enc(s: String): String = s.flatMap {
-    case c @ ('%' | ';' | ':' | '\t' | '\n' | '\r') => f"%%${c.toInt}%02X"
-    case c => c.toString
-  }
-
-  private def dec(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** One `#shard` pointer: partition → shard file (rel to `_log/`),
-    * plus rollups so DESCRIBE HISTORY / metadata COUNT(*) answer from
-    * the root alone. `nRows` is live rows (physical minus DV), −1 when
-    * some file carries no recorded count. `hash` is the SHA-256 of the
-    * shard's body text — an unchanged partition's pointer is REUSED by
-    * the next commit without reading (or rewriting) the shard. */
-  private final case class ShardPtr(
-      part: String, rel: String, nFiles: Long, nRows: Long, nDv: Long,
-      hash: String)
-
-  private def shardPtrLine(sp: ShardPtr): String =
-    s"$ShardTag\t${enc(sp.part)}\t${enc(sp.rel)}\t${sp.nFiles}\t" +
-      s"${sp.nRows}\t${sp.nDv}\t${sp.hash}"
-
-  private def parseShardPtrs(text: String): Seq[ShardPtr] =
-    text.split("\n").iterator.filter(_.startsWith(ShardTag + "\t")).map { l =>
-      val a = l.split("\t", 7)
-      ShardPtr(dec(a(1)), dec(a(2)), a(3).toLong, a(4).toLong, a(5).toLong, a(6))
-    }.toSeq
-
-  private def sha256Hex(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes(StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-
-  /** One `#sgroup` pointer of a two-level root: a contiguous sorted
-    * partition range [first, last] → the group file (rel to `_log/`)
-    * holding its `#shard` lines, with rollups and the group body's
-    * content hash for commit-time reuse. */
-  private final case class GroupPtr(
-      first: String, last: String, rel: String, nParts: Long,
-      nFiles: Long, nRows: Long, nDv: Long, hash: String)
-
-  private def groupPtrLine(g: GroupPtr): String =
-    s"$GroupTag\t${enc(g.first)}\t${enc(g.last)}\t${enc(g.rel)}\t" +
-      s"${g.nParts}\t${g.nFiles}\t${g.nRows}\t${g.nDv}\t${g.hash}"
-
-  private def parseGroupPtrs(text: String): Seq[GroupPtr] =
-    text.split("\n").iterator.filter(_.startsWith(GroupTag + "\t")).map { l =>
-      val a = l.split("\t", 9)
-      GroupPtr(dec(a(1)), dec(a(2)), dec(a(3)), a(4).toLong, a(5).toLong,
-        a(6).toLong, a(7).toLong, a(8))
-    }.toSeq
-
-  /** A footer-checked side file under `_log/` (shard or pointer
-    * group). A committed root guarantees its side files are complete —
-    * anything else is corruption and fails loudly. */
-  private def readLogSideFile(
-      fs: FileSystem, base: Path, rel: String, v: Long): String = {
-    val p = new Path(logDir(base), rel)
-    if (!fs.exists(p))
-      sys.error(s"manifest v$v references missing shard $rel")
-    val in = fs.open(p)
-    val text =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    if (!text.endsWith(Footer + "\n"))
-      sys.error(s"manifest v$v shard $rel is incomplete")
-    text
-  }
-
-  /** The root's FULL shard-pointer list — resolving through pointer
-    * groups when the root is two-level. Empty on inline roots. */
-  private def shardPtrsOf(
-      fs: FileSystem, base: Path, rootText: String, v: Long): Seq[ShardPtr] = {
-    val gptrs = parseGroupPtrs(rootText)
-    if (gptrs.isEmpty) parseShardPtrs(rootText)
-    else gptrs.flatMap(g =>
-      parseShardPtrs(readLogSideFile(fs, base, g.rel, v)))
-  }
-
-  /** The root manifest text of version `v` iff that version is
-    * COMMITTED (footer-complete) — the one cheap read every
-    * version-list/history/manifest path shares. Never opens shard
-    * files. */
-  private def rootText(fs: FileSystem, base: Path, v: Long): Option[String] = {
-    val target = new Path(logDir(base), vName(v))
-    if (v == 0L || !fs.exists(target)) None
-    else {
-      val in = fs.open(target)
-      val text =
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      if (text.endsWith(Footer + "\n")) Some(text) else None
-    }
-  }
 
   /** The O(1) latest-version HINT (Delta's `_last_checkpoint` shape):
     * one integer, rewritten best-effort after every commit win. A
@@ -1084,11 +882,7 @@ object SnapshotLog {
         val hp = latestHintPath(base)
         if (!fs.exists(hp)) None
         else {
-          val in = fs.open(hp)
-          val txt =
-            try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim
-            finally in.close()
-          txt.toLongOption
+          ManifestCodec.readText(fs, hp).trim.toLongOption
             // validate against the atomic roots: the hinted version
             // must actually exist (a corrupt/fabricated hint must not
             // invent versions)
@@ -1104,28 +898,14 @@ object SnapshotLog {
       } catch { case scala.util.control.NonFatal(_) => None }
     hinted.getOrElse {
       fullLogListings.incrementAndGet()
-      if (!fs.exists(dir)) 0L
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-        .map(n => n.stripPrefix("v").stripSuffix(".txt").toLong)
-        .foldLeft(0L)(math.max)
+      listedVersions(fs, base).foldLeft(0L)(math.max)
     }
   }
 
-  /** The manifest of the newest COMPLETE version, if any — scans down
-    * past in-flight/crashed manifests (missing [[Footer]]), which were
-    * never visible as commits. */
   /** All COMMITTED (footer-complete) versions, ascending. Only root
     * manifests are opened — shard files never load here. */
-  def committedVersions(fs: FileSystem, base: Path): Seq[Long] = {
-    val dir = logDir(base)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName).toSeq
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .map(n => n.stripPrefix("v").stripSuffix(".txt").toLong)
-      .filter(v => rootText(fs, base, v).isDefined)
-      .sorted
-  }
+  def committedVersions(fs: FileSystem, base: Path): Seq[Long] =
+    mapCommitted(fs, base)(_.version)
 
   /** The version a commit built on a base manifest at `mVersion` must
     * claim: `mVersion + 1`, skipping only provably-DEAD claims
@@ -1144,7 +924,7 @@ object SnapshotLog {
   private def nextVersion(fs: FileSystem, base: Path, mVersion: Long): Long = {
     var v = mVersion + 1
     while (fs.exists(new Path(logDir(base), vName(v))) &&
-        rootText(fs, base, v).isEmpty) v += 1
+        readRoot(fs, base, v).isEmpty) v += 1
     v
   }
 
@@ -1158,152 +938,20 @@ object SnapshotLog {
     * then holds ONLY the accepted partitions. */
   def readManifest(
       fs: FileSystem, base: Path,
-      partPred: Option[String => Boolean]): Option[Manifest] = {
-    var v = currentVersion(fs, base)
-    while (v > 0L) {
-      readManifestAt(fs, base, v, partPred) match {
-        case some @ Some(_) => return some
-        case None => v -= 1
-      }
-    }
-    None
-  }
+      partPred: Option[String => Boolean]): Option[Manifest] =
+    rootBelow(fs, base, currentVersion(fs, base) + 1)
+      .map(manifest(fs, base, _, partPred))
 
   /** The manifest of a specific committed version (time travel: every
     * manifest is immutable once committed and [[vacuum]] keeps every
     * committed version's files, so any historical snapshot remains
-    * readable until its manifest is explicitly expired). */
+    * readable until its manifest is explicitly expired). A
+    * partially-written root (create-exclusive claimed, writer died)
+    * reads as absent. */
   def readManifestAt(
       fs: FileSystem, base: Path, v: Long,
-      partPred: Option[String => Boolean] = None): Option[Manifest] = {
-    // a manifest is committed only once its footer is on disk; a
-    // partially-written one (create-exclusive claimed, writer died)
-    // reads as absent
-    rootText(fs, base, v) match {
-      case None => None
-      case Some(text) =>
-        // `#schema\t<json>`: the table schema without opening a data
-        // file. Required — a root without it is refused, never misread
-        val schemaJson = text.split("\n").iterator
-          .filter(_.startsWith(SchemaTag + "\t"))
-          .map(l => dec(l.substring(SchemaTag.length + 1)))
-          .nextOption()
-          .getOrElse(throw new ProtocolException(
-            s"$base v$v has no $SchemaTag header — refusing to read a " +
-              "manifest without its schema rather than misread it"))
-        val op = text.split("\n").iterator
-          .filter(_.startsWith(OpTag + "\t"))
-          .map(l => dec(l.substring(OpTag.length + 1)))
-          .nextOption()
-        val constraints = text.split("\n").iterator
-          .filter(_.startsWith(ConstraintTag + "\t"))
-          .map { l =>
-            val a = l.split("\t", 3)
-            dec(a(1)) -> dec(a(2))
-          }.toMap
-        def txnsIn(t: String): Map[String, Long] = t.split("\n").iterator
-          .filter(_.startsWith(TxnTag + "\t"))
-          .map { l =>
-            val a = l.split("\t", 3)
-            dec(a(1)) -> a(2).toLong
-          }.toMap
-        // spilled watermarks: a `#txnfile` pointer replaces the inline
-        // `#txn` lines — same loud-on-missing contract as shards (a
-        // committed root guarantees complete side files; silently
-        // dropping watermarks would double-apply replayed batches)
-        val txns = parseTxnPtr(text) match {
-          case None => txnsIn(text)
-          case Some((rel, _, _)) =>
-            txnsIn(text) ++ txnsIn(readLogSideFile(fs, base, rel, v))
-        }
-        val props = text.split("\n").iterator
-          .filter(_.startsWith(PropTag + "\t"))
-          .map { l =>
-            val a = l.split("\t", 3)
-            dec(a(1)) -> dec(a(2))
-          }.toMap
-        val colmap = text.split("\n").iterator
-          .filter(_.startsWith(ColMapTag + "\t"))
-          .map { l =>
-            val a = l.split("\t", 3)
-            dec(a(1)) -> dec(a(2))
-          }.toMap
-        val droppedCols = text.split("\n").iterator
-          .filter(_.startsWith(DroppedTag + "\t"))
-          .map(l => dec(l.split("\t", 2)(1))).toSet
-        // protocol gate: refuse (don't misread) a table requiring a
-        // reader feature this engine lacks — see [[FeatureTag]]
-        val (readerFeats, writerFeats) = {
-          val fs0 = text.split("\n").iterator
-            .filter(_.startsWith(FeatureTag + "\t"))
-            .map { l => val a = l.split("\t", 3); (dec(a(1)), a(2)) }
-            .toSeq
-          (fs0.collect { case (n, "reader") => n }.toSet,
-            fs0.collect { case (n, "writer") => n }.toSet)
-        }
-        val missingR = readerFeats -- SupportedReaderFeatures
-        if (missingR.nonEmpty) throw new ProtocolException(
-          s"$base requires reader feature(s) this engine does not " +
-            s"implement: ${missingR.toSeq.sorted.mkString(", ")} — " +
-            "refusing to read rather than misread (upgrade the engine)")
-        // sharded root: per-file lines live in immutable side files
-        // (one hop — `#shard` per partition — or two on a two-level
-        // root, `#sgroup` → `#shard`); load only the wanted
-        // partitions' shards. A committed root guarantees complete
-        // side files (they are fully written before the root's
-        // create-exclusive), so a missing/truncated one is corruption
-        // — fail loudly, never silently drop a partition.
-        val ptrs = shardPtrsOf(fs, base, text, v)
-        val rawLines: Seq[Array[String]] =
-          if (ptrs.isEmpty)
-            text.split("\n").iterator
-              .filter(l => l.nonEmpty && !l.startsWith("#"))
-              .map(_.split("\t", 5)).toSeq
-          else {
-            val wanted = partPred match {
-              case Some(p) => ptrs.filter(sp => p(sp.part))
-              case None => ptrs
-            }
-            wanted.flatMap { sp =>
-              readLogSideFile(fs, base, sp.rel, v).split("\n").iterator
-                .filter(l => l.nonEmpty && !l.startsWith("#"))
-                .map(_.split("\t", 5)).toSeq
-            }
-          }
-        val lines = partPred match {
-          case Some(p) => rawLines.filter(a => p(a(0)))
-          case None => rawLines
-        }
-        val files = lines.map(a => a(0) -> a(1))
-          .groupBy(_._1).map { case (p, fs0) => p -> fs0.map(_._2) }
-        val stats = lines.collect {
-          case a if a.length >= 3 && a(2).nonEmpty =>
-            a(1) -> a(2).split(";").iterator.map { entry =>
-              val Array(c, mn, mx) = entry.split(":", 3)
-              dec(c) -> (dec(mn), dec(mx))
-            }.toMap
-        }.toMap
-        val blooms = lines.collect {
-          case a if a.length >= 4 && a(3).nonEmpty =>
-            a(1) -> a(3).split(";").iterator.map { entry =>
-              val Array(c, b) = entry.split(":", 2)
-              dec(c) -> b
-            }.toMap
-        }.toMap
-        val dvs = lines.collect {
-          case a if a.length == 5 && a(4).nonEmpty =>
-            val Array(kind, n, payload) = a(4).split(":", 3)
-            a(1) -> (kind match {
-              case "i" => Dv(n.toLong, Some(payload), None)
-              case "f" => Dv(n.toLong, None, Some(dec(payload)))
-              case other => sys.error(s"unknown DV kind '$other' in manifest")
-            })
-        }.toMap
-        Some(Manifest(v, files, stats, blooms, dvs, Some(schemaJson), op,
-          constraints, txns, props, colmap, droppedCols,
-          readerFeats, writerFeats))
-    }
-  }
+      partPred: Option[String => Boolean] = None): Option[Manifest] =
+    readRoot(fs, base, v).map(manifest(fs, base, _, partPred))
 
   /** Time-travel read: the table exactly as of committed version `v`.
     * Routed through the same planner-integrated relation as the
@@ -1327,21 +975,9 @@ object SnapshotLog {
   def versionAsOfTime(
       spark: SparkSession, base: String, millis: Long): Option[Long] = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    committedVersions(fs, bp).filter { v =>
-      commitTimeOf(fs, bp, v) <= millis
-    }.lastOption
+    mapCommitted(fsFor(spark, bp), bp)(r => r.version -> r.commitTs(bp))
+      .filter(_._2 <= millis).lastOption.map(_._1)
   }
-
-  /** Epoch millis a version committed at: its `#ts` in-commit stamp. */
-  private def commitTimeOf(fs: FileSystem, bp: Path, v: Long): Long =
-    commitTs(rootText(fs, bp, v).getOrElse(""), bp, v)
-
-  /** The `#ts` stamp of version `v`'s root `text`; a root without one
-    * is refused like a root without its schema. */
-  private def commitTs(text: String, bp: Path, v: Long): Long =
-    parseTs(text).getOrElse(throw new ProtocolException(
-      s"$bp v$v has no $TsTag commit timestamp"))
 
   /** The per-table-unique join key for a data file: its last TWO path
     * segments (`<parent dir>/<part file>`). The basename alone is NOT
@@ -1904,66 +1540,6 @@ object SnapshotLog {
       sc.fields.map(f => f.copy(name = m.phys(f.name),
         dataType = physTypeOf(m, f.dataType, f.name))))
 
-  /** Atomically publish `m` as version `m.version` by CREATE-EXCLUSIVE
-    * on the final name. Returns false when that version already exists —
-    * the optimistic-concurrency conflict signal.
-    *
-    * Why not temp-write + rename: Hadoop's `RawLocalFileSystem.rename`
-    * delegates to POSIX rename, which silently REPLACES an existing
-    * target, so two same-version committers could both "succeed" with
-    * one manifest clobbering the other. An exclusive create is atomic
-    * where it matters: O_EXCL via NIO on the local FS, the namenode's
-    * atomic create on HDFS, conditional PUT (If-None-Match) on modern
-    * object stores. The claimed file only becomes a COMMIT once its
-    * [[Footer]] line is written — readers treat a footer-less manifest
-    * as absent, so the claim-then-write gap is invisible. */
-  /** One manifest body line for file `f` of partition `p`. */
-  private def fileLine(m: Manifest, p: String, f: String): String = {
-    val st = m.stats.getOrElse(f, Map.empty)
-    val bl = m.blooms.getOrElse(f, Map.empty)
-    val stS = st.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s"${enc(c)}:${enc(mn)}:${enc(mx)}"
-    }.mkString(";")
-    // base64 alphabet is disjoint from the grammar chars (tab ; :)
-    val blS = bl.toSeq.sortBy(_._1).map { case (c, b) =>
-      s"${enc(c)}:$b"
-    }.mkString(";")
-    val dvS = m.dvs.get(f).map {
-      case Dv(n, Some(b64), _) => s"i:$n:$b64"
-      case Dv(n, None, Some(rel)) => s"f:$n:${enc(rel)}"
-      case Dv(n, None, None) =>
-        sys.error(s"DV for $f has neither inline nor sidecar payload")
-    }.getOrElse("")
-    // trailing fields are elided right-to-left; an empty middle
-    // field stays as a placeholder so positions keep their meaning
-    if (dvS.nonEmpty) s"$p\t$f\t$stS\t$blS\t$dvS"
-    else if (bl.nonEmpty) s"$p\t$f\t$stS\t$blS"
-    else if (st.nonEmpty) s"$p\t$f\t$stS"
-    else s"$p\t$f"
-  }
-
-  /** The newest committed root's shard pointers below `v` — the reuse
-    * source for [[tryCommit]]'s sharded path. Empty when the previous
-    * committed version was inline (or absent): every shard is then
-    * written fresh, a one-time O(files) migration cost. */
-  private def prevRootText(
-      fs: FileSystem, base: Path, v: Long): Option[String] = {
-    var pv = v - 1
-    while (pv > 0L) {
-      rootText(fs, base, pv) match {
-        case some @ Some(_) => return some
-        case None => pv -= 1
-      }
-    }
-    None
-  }
-
-  private def prevShardPtrs(
-      fs: FileSystem, base: Path, v: Long): Map[String, ShardPtr] =
-    prevRootText(fs, base, v).map(t =>
-      shardPtrsOf(fs, base, t, v - 1).map(sp => sp.part -> sp).toMap)
-      .getOrElse(Map.empty)
-
   /** Test seam: runs inside [[upsertBatch]] after a merge is staged,
     * immediately before each commit attempt — the only window where a
     * concurrent committer can invalidate staged output. Deterministic
@@ -2046,6 +1622,19 @@ object SnapshotLog {
   val commitAttempts = new java.util.concurrent.atomic.AtomicLong(0L)
   val commitWins = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Atomically publish `m` as version `m.version` by CREATE-EXCLUSIVE
+    * on the final name. Returns false when that version already exists —
+    * the optimistic-concurrency conflict signal.
+    *
+    * Why not temp-write + rename: Hadoop's `RawLocalFileSystem.rename`
+    * delegates to POSIX rename, which silently REPLACES an existing
+    * target, so two same-version committers could both "succeed" with
+    * one manifest clobbering the other. An exclusive create is atomic
+    * where it matters: O_EXCL via NIO on the local FS, the namenode's
+    * atomic create on HDFS, conditional PUT (If-None-Match) on modern
+    * object stores. The claimed file only becomes a COMMIT once its
+    * `#eof` footer line is written — readers treat a footer-less manifest
+    * as absent, so the claim-then-write gap is invisible. */
   def tryCommit(fs: FileSystem, base: Path, m00: Manifest): Boolean = {
     // every committed manifest carries its schema and each live file's
     // byte length: readers plan from them and never touch data files
@@ -2069,18 +1658,17 @@ object SnapshotLog {
         .toSeq
       if (stale.isEmpty) m00 else m00.copy(props = m00.props -- stale)
     }
-    // writer-side protocol gate: committing onto a table that requires
-    // a writer (or reader) feature this engine lacks would corrupt
-    // invariants it cannot see — read the gate from the PREVIOUS
-    // committed root directly so it cannot be lost through a caller's
-    // positional Manifest construction
-    prevRootText(fs, base, m0.version).foreach { prev =>
-      val req = prev.split("\n").iterator
-        .filter(_.startsWith(FeatureTag + "\t"))
-        .map { l => val a = l.split("\t", 3); (dec(a(1)), a(2)) }.toSeq
-      val missing =
-        (req.collect { case (n, "writer") => n }.toSet -- SupportedWriterFeatures) ++
-          (req.collect { case (n, "reader") => n }.toSet -- SupportedReaderFeatures)
+    // ONE read of the previous committed root per attempt feeds the
+    // writer-side protocol gate, shard/group/watermark reuse and the
+    // in-commit timestamp floor. The gate reads the root from disk so
+    // it cannot be lost through a caller's positional Manifest
+    // construction: committing onto a table that requires a writer (or
+    // reader) feature this engine lacks would corrupt invariants it
+    // cannot see
+    val prev = rootBelow(fs, base, m0.version)
+    prev.foreach { r =>
+      val missing = (r.writerFeatures -- SupportedWriterFeatures) ++
+        (r.readerFeatures -- SupportedReaderFeatures)
       if (missing.nonEmpty) throw new ProtocolException(
         s"$base requires feature(s) this engine cannot write: " +
           s"${missing.toSeq.sorted.mkString(", ")} — refusing to commit " +
@@ -2092,117 +1680,7 @@ object SnapshotLog {
     val target = new Path(dir, vName(m.version))
     if (fs.exists(target)) return false
     val (needR, needW) = requiredFeatures(m)
-    val header = m.schemaJson
-      .map(j => s"$SchemaTag\t${enc(j)}\n").getOrElse("") +
-      (needR.toSeq.sorted.map(f => s"$FeatureTag\t${enc(f)}\treader\n") ++
-        needW.toSeq.sorted.map(f => s"$FeatureTag\t${enc(f)}\twriter\n")).mkString +
-      m.op.map(o => s"$OpTag\t${enc(o)}\n").getOrElse("") +
-      m.constraints.toSeq.sortBy(_._1).map { case (n, sql) =>
-        s"$ConstraintTag\t${enc(n)}\t${enc(sql)}\n"
-      }.mkString +
-      m.props.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"$PropTag\t${enc(k)}\t${enc(v)}\n"
-      }.mkString +
-      m.colmap.toSeq.sortBy(_._1).map { case (l, p) =>
-        s"$ColMapTag\t${enc(l)}\t${enc(p)}\n"
-      }.mkString +
-      m.dropped.toSeq.sorted.map(p => s"$DroppedTag\t${enc(p)}\n").mkString
-    val parts = m.files.toSeq.sortBy(_._1)
-    val marker: Option[String] =
-      if (!fs.exists(shardMarker(base))) None
-      else {
-        val in = fs.open(shardMarker(base))
-        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
-    val sharded = m.allFiles.size >= ShardFileThreshold || marker.isDefined
-    def writeSideFile(name: String, content: String): String = {
-      // uuid-suffixed names: two same-version racers must never
-      // collide on a side-file name (the loser's becomes an orphan)
-      val o = fs.create(new Path(dir, name), false)
-      try o.write((content + Footer + "\n").getBytes(StandardCharsets.UTF_8))
-      finally o.close()
-      name
-    }
-    val body =
-      if (!sharded)
-        parts.flatMap { case (p, fls) => fls.sorted.map(f => fileLine(m, p, f)) }
-          .mkString("", "\n", "\n")
-      else {
-        // sharded commit: write (or REUSE, on content-hash match with
-        // the previous committed root) one immutable shard file per
-        // partition, then point the root at them. The root's
-        // create-exclusive below stays the single commit point — side
-        // files of a lost race are orphans, reclaimed by [[vacuum]].
-        val prev = prevShardPtrs(fs, base, m.version)
-        val sptrs = parts.zipWithIndex.map { case ((p, fls), idx) =>
-          val lines = fls.sorted.map(f => fileLine(m, p, f))
-          val content = lines.mkString("", "\n", "\n")
-          val hash = sha256Hex(content)
-          val rows = fls.map(f =>
-            m.stats.get(f).flatMap(_.get(RowCountKey))
-              .flatMap(_._1.toLongOption)
-              .map(_ - m.dvs.get(f).map(_.count).getOrElse(0L)))
-          val nRows = if (rows.exists(_.isEmpty)) -1L else rows.flatten.sum
-          val nDv = fls.flatMap(f => m.dvs.get(f)).map(_.count).sum
-          val rel = prev.get(p).filter(_.hash == hash).map(_.rel).getOrElse(
-            writeSideFile(f"s${m.version}%011d-p$idx-${
-              java.util.UUID.randomUUID.toString.take(8)}.txt", content))
-          ShardPtr(p, rel, fls.size.toLong, nRows, nDv, hash)
-        }
-        // two-level root past ShardGroupSize×2 partitions (or forced
-        // by the "g" marker with tiny test groups): consecutive
-        // sorted-partition chunks become pointer-group side files,
-        // reused whole on content-hash match — append-mostly partition
-        // growth leaves every earlier group byte-identical
-        val gSize = if (marker.contains("g")) 2 else ShardGroupSize
-        val grouped = marker.contains("g") || sptrs.size >= 2 * ShardGroupSize
-        if (!grouped) sptrs.map(shardPtrLine).mkString("", "\n", "\n")
-        else {
-          val prevG = prevRootText(fs, base, m.version)
-            .map(t => parseGroupPtrs(t).map(g => g.hash -> g.rel).toMap)
-            .getOrElse(Map.empty[String, String])
-          sptrs.grouped(gSize).zipWithIndex.map { case (chunk, gi) =>
-            val content = chunk.map(shardPtrLine).mkString("", "\n", "\n")
-            val ghash = sha256Hex(content)
-            val rel = prevG.getOrElse(ghash,
-              writeSideFile(f"g${m.version}%011d-p$gi-${
-                java.util.UUID.randomUUID.toString.take(8)}.txt", content))
-            val nRows =
-              if (chunk.exists(_.nRows < 0L)) -1L else chunk.map(_.nRows).sum
-            groupPtrLine(GroupPtr(chunk.head.part, chunk.last.part, rel,
-              chunk.size.toLong, chunk.map(_.nFiles).sum, nRows,
-              chunk.map(_.nDv).sum, ghash))
-          }.mkString("", "\n", "\n")
-        }
-      }
-    // transaction watermarks: inline `#txn` lines below the spill
-    // threshold; past it, one content-hashed side file + a `#txnfile`
-    // pointer (see [[TxnSpillThreshold]]) — written BEFORE the root's
-    // create-exclusive like every side file, so a lost race orphans it
-    // for [[vacuum]]
-    val txnLines = m.txns.toSeq.sortBy(_._1).map { case (a, b) =>
-      s"$TxnTag\t${enc(a)}\t$b\n"
-    }.mkString
-    val spillAt = m.props.get(TxnSpillProp).flatMap(_.trim.toIntOption)
-      .filter(_ > 0).getOrElse(TxnSpillThreshold)
-    lazy val prevRoot = prevRootText(fs, base, m.version)
-    val txnPart =
-      if (m.txns.size < spillAt) txnLines
-      else {
-        val hash = sha256Hex(txnLines)
-        val rel = prevRoot
-          .flatMap(parseTxnPtr).filter(_._3 == hash).map(_._1)
-          .getOrElse(writeSideFile(f"t${m.version}%011d-${
-            java.util.UUID.randomUUID.toString.take(8)}.txt", txnLines))
-        s"$TxnFileTag\t${enc(rel)}\t${m.txns.size}\t$hash\n"
-      }
-    // in-commit timestamp: stamped per ATTEMPT (a retry is a new
-    // commit instant), monotone past the previous committed root's
-    // stamp even under cross-writer clock skew
-    val commitTs = math.max(System.currentTimeMillis(),
-      prevRoot.flatMap(parseTs).map(_ + 1L).getOrElse(Long.MinValue))
-    val text = header + s"$TsTag\t$commitTs\n" + txnPart + body + Footer + "\n"
+    val text = ManifestCodec.encode(fs, base, m, needR, needW, prev)
     // Store contract: this protocol needs atomic create-exclusive
     // publication, which local FS (link(2)) and HDFS (rename) provide.
     // Raw S3 provides neither — Delta needs an external LogStore
@@ -2298,7 +1776,7 @@ object SnapshotLog {
     else SnapshotRelation.fromManifest(spark, bp, m, partCol)._1
 
   /** Apply `m`'s deletion vectors to a scan of `files` from it —
-    * shared by the legacy file-list reads here and the relation path
+    * shared by the file-list reads here ([[readFiles]]) and the relation path
     * ([[SnapshotRelation.fromManifest]]). No-DV case returns the scan
     * untouched. */
   private[sources] def applyDvs(
@@ -5091,7 +4569,6 @@ object SnapshotLog {
   private def cdfDir(base: Path) = new Path(base, "_cdf")
   private def cdfVName(v: Long) = f"v$v%011d"
 
-  /** Versions with a materialized feed dir, ascending. */
   /** The operation that committed version `v` ([[Manifest.op]]) — one
     * root-manifest read, zero data IO. None when the commit named no
     * operation.
@@ -5099,11 +4576,41 @@ object SnapshotLog {
     * commit as append vs change without opening its feed. */
   def opAt(spark: SparkSession, base: String, v: Long): Option[String] = {
     val bp = new Path(base)
-    rootText(fsFor(spark, bp), bp, v).flatMap(_.split("\n").iterator
-      .filter(_.startsWith(OpTag + "\t"))
-      .map(l => dec(l.substring(OpTag.length + 1)))
-      .nextOption())
+    readRoot(fsFor(spark, bp), bp, v).flatMap(_.op)
   }
+
+  /** Per committed version in `vs`: (version, operation — UNKNOWN when
+    * the commit named none, whether its live files or deletion vectors
+    * differ from the previous committed version's). The streaming row
+    * feed's commit classification: every root from the one below
+    * `vs.min` up to `vs.max` is read once; the file-list comparison
+    * (which loads shards on a sharded table) runs only where
+    * `compare(op)` holds, and reads false elsewhere. */
+  private[graft] def commitChanges(
+      fs: FileSystem, base: Path, vs: Seq[Long],
+      compare: String => Boolean): Seq[(Long, String, Boolean)] =
+    if (vs.isEmpty) Nil
+    else {
+      val want = vs.toSet
+      // newest first, down to the first committed root below vs.min
+      val below = listedVersions(fs, base).filter(_ <= vs.max).sorted.reverseIterator
+        .flatMap(readRoot(fs, base, _))
+      val roots = {
+        val (in, out) = below.span(_.version >= vs.min)
+        (in.toSeq ++ out.nextOption()).reverse
+      }
+      val held = collection.mutable.Map.empty[Long, (Map[String, Seq[String]], Map[String, Dv])]
+      def files(r: ManifestCodec.Root) = held.getOrElseUpdate(r.version, {
+        val m = manifest(fs, base, r, None)
+        (m.files, m.dvs)
+      })
+      roots.zip(None +: roots.map(Some(_))).collect {
+        case (r, prev) if want(r.version) =>
+          val op = r.op.getOrElse("UNKNOWN")
+          (r.version, op,
+            compare(op) && !prev.exists(p => files(p) == files(r)))
+      }
+    }
 
   /** Rows a version's commit ADDED: the data files version `v` holds
     * that its predecessor `prev` does not, read under v's manifest
@@ -5120,14 +4627,19 @@ object SnapshotLog {
       prev: Option[Long], v: Long): Option[DataFrame] = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    readManifestAt(fs, bp, v).map { m =>
-      val prevFiles = prev.flatMap(readManifestAt(fs, bp, _))
-        .map(_.allFiles.toSet).getOrElse(Set.empty[String])
-      val added = m.allFiles.filterNot(prevFiles)
-      if (added.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema.get)
-      else alignToSchema(readFiles(spark, bp, m, added), m)
-    }
+    readManifestAt(fs, bp, v).map(m =>
+      appendedRows(spark, base, prev.flatMap(readManifestAt(fs, bp, _)), m))
+  }
+
+  /** [[appendedRows]] over manifests the caller already holds. */
+  private[graft] def appendedRows(
+      spark: SparkSession, base: String,
+      prev: Option[Manifest], m: Manifest): DataFrame = {
+    val prevFiles = prev.map(_.allFiles.toSet).getOrElse(Set.empty[String])
+    val added = m.allFiles.filterNot(prevFiles)
+    if (added.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema.get)
+    else alignToSchema(readFiles(spark, new Path(base), m, added), m)
   }
 
   def cdfVersions(fs: FileSystem, base: Path): Seq[Long] = {
@@ -5150,14 +4662,13 @@ object SnapshotLog {
       if (!fs.exists(d)) 0L
       else fs.listStatus(d).filter(_.getPath.getName.endsWith(".parquet"))
         .map(_.getLen).sum
-    } else {
-      val prev = committedVersions(fs, base).filter(_ < v).lastOption
-      val prevFiles = prev.flatMap(readManifestAt(fs, base, _))
-        .map(_.allFiles.toSet).getOrElse(Set.empty[String])
-      readManifestAt(fs, base, v).map(m =>
-        m.allFiles.filterNot(prevFiles).map(fileBytes(m, _)).sum)
-        .getOrElse(0L)
-    }
+    } else readManifestAt(fs, base, v).map { m =>
+      // the predecessor by walking down from v: no `_log` listing
+      val prevFiles = rootBelow(fs, base, v)
+        .map(manifest(fs, base, _, None).allFiles.toSet)
+        .getOrElse(Set.empty[String])
+      m.allFiles.filterNot(prevFiles).map(fileBytes(m, _)).sum
+    }.getOrElse(0L)
 
   /** Write one version's feed and publish it by rename; loses cleanly
     * (keeps the existing dir) if the version is already materialized —
@@ -5269,14 +4780,6 @@ object SnapshotLog {
     }
   }
 
-  /** DESCRIBE HISTORY: one row per committed version, newest first —
-    * version, commit timestamp (the root's in-commit `#ts` stamp),
-    * the operation that produced it ([[Manifest.op]]; UNKNOWN when
-    * the commit named none),
-    * live partition/file counts, and the metadata row count when
-    * every file carries one (−1 otherwise). O(versions) manifest
-    * reads, zero data-file IO — an audit/debug surface, not a hot
-    * path. */
   /** INTEROP EXPORT (Delta's `GENERATE symlink_format_manifest`): write
     * the LIVE snapshot's file list as Hive-symlink manifests —
     * `_symlink_format_manifest/<partition value>/manifest`, one
@@ -5322,42 +4825,24 @@ object SnapshotLog {
     m.files.size.toLong
   }
 
+  /** DESCRIBE HISTORY: one row per committed version, newest first —
+    * version, commit timestamp (the root's in-commit `#ts` stamp),
+    * the operation that produced it ([[Manifest.op]]; UNKNOWN when
+    * the commit named none),
+    * live partition/file counts, and the metadata row count when
+    * every file carries one (−1 otherwise). O(versions) manifest
+    * reads, zero data-file IO — an audit/debug surface, not a hot
+    * path. */
   def history(spark: SparkSession, base: String): DataFrame = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
     import spark.implicits._
-    committedVersions(fs, bp).reverse.flatMap { v =>
-      rootText(fs, bp, v).map { text =>
-        val ts = commitTs(text, bp, v)
-        val op = text.split("\n").iterator
-          .filter(_.startsWith(OpTag + "\t"))
-          .map(l => dec(l.substring(OpTag.length + 1)))
-          .nextOption().getOrElse("UNKNOWN")
-        val gptrs = parseGroupPtrs(text)
-        val ptrs = if (gptrs.nonEmpty) Nil else parseShardPtrs(text)
-        if (gptrs.nonEmpty) {
-          // two-level root: group-line rollups — O(versions) ROOT
-          // reads, no side file ever opens
-          val nRows =
-            if (gptrs.exists(_.nRows < 0L)) -1L else gptrs.map(_.nRows).sum
-          (v, new java.sql.Timestamp(ts), op, gptrs.map(_.nParts).sum,
-            gptrs.map(_.nFiles).sum, gptrs.map(_.nDv).sum, nRows)
-        } else if (ptrs.nonEmpty) {
-          // sharded root: every count is a pointer-line rollup — a
-          // sharded table's history costs O(versions) ROOT reads, no
-          // shard file ever opens
-          val nRows =
-            if (ptrs.exists(_.nRows < 0L)) -1L else ptrs.map(_.nRows).sum
-          (v, new java.sql.Timestamp(ts), op, ptrs.size.toLong,
-            ptrs.map(_.nFiles).sum, ptrs.map(_.nDv).sum, nRows)
-        } else {
-          val m = readManifestAt(fs, bp, v).get
-          (v, new java.sql.Timestamp(ts), op,
-            m.files.size.toLong, m.allFiles.size.toLong,
-            m.dvs.values.map(_.count).sum, countRows(m).getOrElse(-1L))
-        }
-      }
-    }.toDF("version", "timestamp", "operation",
+    // one read per root; every count is a root rollup (pointer lines
+    // on sharded and two-level roots, so no side file ever opens)
+    mapCommitted(fsFor(spark, bp), bp) { r =>
+      val t = r.totals
+      (r.version, new java.sql.Timestamp(r.commitTs(bp)),
+        r.op.getOrElse("UNKNOWN"), t.nParts, t.nFiles, t.nDv, t.nRows)
+    }.reverse.toDF("version", "timestamp", "operation",
       "n_partitions", "n_files", "n_deleted_rows", "n_rows")
   }
 
@@ -5367,30 +4852,10 @@ object SnapshotLog {
     * otherwise. `liveRows` is −1 when any file lacks a recorded
     * count. The SHOW PARTITIONS fast path. */
   def partitionSummary(
-      fs: FileSystem, base: Path): Seq[(String, Long, Long)] = {
-    var v = currentVersion(fs, base)
-    while (v > 0L) {
-      rootText(fs, base, v) match {
-        case Some(text) =>
-          // resolves through pointer groups on a two-level root —
-          // still zero SHARD opens (group files are pointer-only)
-          val ptrs = shardPtrsOf(fs, base, text, v)
-          if (ptrs.nonEmpty)
-            return ptrs.sortBy(_.part).map(sp => (sp.part, sp.nFiles, sp.nRows))
-          val m = readManifestAt(fs, base, v).get
-          return m.files.toSeq.sortBy(_._1).map { case (p, fls) =>
-            val rows = fls.map(f =>
-              m.stats.get(f).flatMap(_.get(RowCountKey))
-                .flatMap(_._1.toLongOption)
-                .map(_ - m.dvs.get(f).map(_.count).getOrElse(0L)))
-            val n = if (rows.exists(_.isEmpty)) -1L else rows.flatten.sum
-            (p, fls.size.toLong, n)
-          }
-        case None => v -= 1
-      }
-    }
-    Nil
-  }
+      fs: FileSystem, base: Path): Seq[(String, Long, Long)] =
+    rootBelow(fs, base, currentVersion(fs, base) + 1).toSeq
+      .flatMap(r => partitions(fs, base, r))
+      .map { case (p, ru) => (p, ru.nFiles, ru.nRows) }
 
   /** SHALLOW CLONE: commit version 1 of a NEW table at `dstBase`
     * referencing the SOURCE's current data files by absolute path —
@@ -5966,10 +5431,7 @@ object SnapshotLog {
     val fs = fsFor(spark, bp)
     val dir = logDir(bp)
     if (!fs.exists(dir)) return Nil
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .map(n => n.stripPrefix("v").stripSuffix(".txt").toLong)
-      .sorted.toSeq
+    val versions = listedVersions(fs, bp).sorted
     val expire = versions.dropRight(keepLast)
     expire.foreach(v => fs.delete(new Path(dir, vName(v)), false))
     // the change feed of an expired version goes with its manifest:
@@ -6014,62 +5476,10 @@ object SnapshotLog {
     val fs = fsFor(spark, bp)
     val dir = logDir(bp)
     if (!fs.exists(dir)) return 0L
-    val rootTexts = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .map { n =>
-        val in = fs.open(new Path(dir, n))
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      }
-    // side files referenced by ANY root — pointer groups directly,
-    // shard files directly or through a referenced group — the sweep
-    // below keeps exactly them. Data references are honored from
-    // EVERY shard file on disk, referenced or not: an in-flight
-    // sharded committer has written its side files but not yet its
-    // root, and deleting the data they reference would gut the
-    // imminent commit (the retention window is the second guard, as
-    // for raw data files)
-    val groupRels = rootTexts.flatMap(parseGroupPtrs).map(_.rel).toSet
-    val ptrRels = rootTexts.flatMap(parseShardPtrs).map(_.rel).toSet ++
-      groupRels.toSeq.sorted.flatMap { rel =>
-        val p = new Path(dir, rel)
-        if (!fs.exists(p)) Nil
-        else {
-          val in = fs.open(p)
-          val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-          finally in.close()
-          parseShardPtrs(text).map(_.rel)
-        }
-      }
-    val shardLines = fs.listStatus(dir).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && n.startsWith("s") && n.endsWith(".txt")
-      }
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-        text.split("\n").toSeq.filter(l => l.nonEmpty && !l.startsWith("#"))
-      }
-    // keep even an INCOMPLETE manifest's file references: its
-    // writer may still be alive and about to finish the commit
-    val lines = rootTexts.flatMap(
-      _.split("\n").filter(l => l.nonEmpty && !l.startsWith("#"))) ++
-      shardLines
-    // limit 5, field 1 BARE: a stats/bloom/DV-carrying line's file
-    // field must come out clean or vacuum reclaims live data
-    val referenced = lines.map(_.split("\t", 5)(1)).toSet
-    // DV sidecar DIRS referenced by any manifest's 5th field (f-kind)
-    val dvDirs = lines.flatMap { l =>
-      val a = l.split("\t", 5)
-      if (a.length == 5 && a(4).startsWith("f:"))
-        a(4).split(":", 3) match {
-          case Array(_, _, p) => Some(dec(p))
-          case _ => None
-        }
-      else None
-    }.toSet
+    // side files referenced by ANY root (pointer groups directly,
+    // shard files directly or through a referenced group) and every
+    // data file or DV sidecar any root or shard file on disk mentions
+    val refs = references(fs, bp)
     var removed = 0L
     val cutoff = System.currentTimeMillis() - retentionMs
     // listFiles returns scheme-qualified paths; relativize against the
@@ -6091,7 +5501,7 @@ object SnapshotLog {
         }
       }
     }
-    sweep("data", referenced.contains)
+    sweep("data", refs.files.contains)
     // sidecar sweep at `__f=` GRANULARITY: within a `_dv/<job>` dir,
     // each per-file subdir goes (recursively) as soon as NO manifest
     // references it and its files aged past retention — a job dir
@@ -6119,7 +5529,7 @@ object SnapshotLog {
           .filter(c => c.isDirectory && c.getPath.getName.startsWith("__f="))
           .foreach { ch =>
             val rel = s"$jobRel/${ch.getPath.getName}"
-            if (!dvDirs.contains(rel)) agedFileCount(ch.getPath).foreach { n =>
+            if (!refs.dvDirs.contains(rel)) agedFileCount(ch.getPath).foreach { n =>
               if (!dryRun) fs.delete(ch.getPath, true)
               removed += n
             }
@@ -6136,21 +5546,10 @@ object SnapshotLog {
     // spilled watermarks t*.txt): written before a root that lost its
     // commit race (or whose root was expired) — reclaim once
     // unreferenced and aged, same contract as data files
-    val txnRels = rootTexts.flatMap(parseTxnPtr(_).map(_._1)).toSet
     fs.listStatus(dir)
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile &&
-          (n.startsWith("s") || n.startsWith("g") || n.startsWith("t")) &&
-          n.endsWith(".txt") && n != shardMarker(bp).getName
-      }
+      .filter(st => st.isFile && ManifestCodec.isSideFile(st.getPath.getName))
       .foreach { st =>
-        val n = st.getPath.getName
-        val referenced =
-          if (n.startsWith("g")) groupRels.contains(n)
-          else if (n.startsWith("t")) txnRels.contains(n)
-          else ptrRels.contains(n)
-        if (!referenced && st.getModificationTime <= cutoff) {
+        if (!refs.sideFiles(st.getPath.getName) && st.getModificationTime <= cutoff) {
           if (!dryRun) fs.delete(st.getPath, false)
           removed += 1
         }

@@ -380,25 +380,14 @@ class CommitLogSource(
     val versions =
       if (changeFeed) versions0
       else {
-        // row-feed mode: classify each commit from its manifest header
-        // (metadata-only reads) — appends stream; commits that touched
-        // no data files at all (SET TBLPROPERTIES, ANALYZE, constraint
-        // and schema DDL) are silent no-ops; commits that rewrote or
-        // deleted data fail or skip per the option
-        val committed = SnapshotLog.committedVersions(fs, bp)
-        def untouched(v: Long): Boolean = {
-          val prev = committed.filter(_ < v).lastOption
-          val mv = SnapshotLog.readManifestAt(fs, bp, v)
-          val mp = prev.flatMap(SnapshotLog.readManifestAt(fs, bp, _))
-          (mv, mp) match {
-            case (Some(a), Some(b)) => a.files == b.files && a.dvs == b.dvs
-            case _ => false
-          }
-        }
-        val classed = versions0.map(v =>
-          v -> SnapshotLog.opAt(spark, base, v).getOrElse("UNKNOWN"))
-        val changes = classed.filterNot { case (v, op) =>
-          AppendOps(op) || untouched(v) }
+        // row-feed mode: classify each commit from its manifest
+        // (metadata-only reads, one per root) — appends stream; commits
+        // that touched no data files at all (SET TBLPROPERTIES,
+        // ANALYZE, constraint and schema DDL) are silent no-ops;
+        // commits that rewrote or deleted data fail or skip per the
+        // option
+        val classed = SnapshotLog.commitChanges(fs, bp, versions0, !AppendOps(_))
+        val changes = classed.collect { case (v, op, true) => (v, op) }
         if (changes.nonEmpty && !skipChangeCommits)
           throw new IllegalStateException(
             s"$base: stream found non-append commit(s) " +
@@ -406,7 +395,7 @@ class CommitLogSource(
               " — the row feed cannot represent changed rows; read with " +
               "option(\"readChangeFeed\", \"true\") or skip them with " +
               "option(\"skipChangeCommits\", \"true\")")
-        classed.collect { case (v, op) if AppendOps(op) => v }
+        classed.collect { case (v, op, _) if AppendOps(op) => v }
       }
     def align(raw: org.apache.spark.sql.DataFrame) = {
       val have = raw.columns.toSet
@@ -424,11 +413,14 @@ class CommitLogSource(
         align(spark.read.option("mergeSchema", "true").parquet(dirs: _*))
       } else {
         // each append's rows are its manifest's file DELTA vs the
-        // previous COMMITTED version — works with or without CDF
+        // previous COMMITTED version — works with or without CDF. Each
+        // manifest is read once: consecutive versions share theirs
         val committed = SnapshotLog.committedVersions(fs, bp)
+        val held = collection.mutable.Map.empty[Long, Option[SnapshotLog.Manifest]]
+        def at(v: Long) = held.getOrElseUpdate(v, SnapshotLog.readManifestAt(fs, bp, v))
         versions.map { v =>
-          val prev = committed.filter(_ < v).lastOption
-          align(SnapshotLog.appendedRows(spark, base, prev, v).getOrElse(empty))
+          val prev = committed.filter(_ < v).lastOption.flatMap(at)
+          at(v).fold(empty)(m => align(SnapshotLog.appendedRows(spark, base, prev, m)))
         }.reduce(_ unionByName _)
       }
     val batch = snapshotPart.map(sp => align(sp).unionByName(tail)).getOrElse(tail)

@@ -48,8 +48,9 @@ object Probe {
       if (name == "ALL") Registry.all.map(_.name)
       else name.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     targets.foreach { n =>
-      val q = Registry.byName(n)
       try {
+        // inside the try: a misspelled name fails alone, the rest run
+        val q = Registry.byName(n)
         if (show) q.build(spark, sfDir).show(50, truncate = false)
         else if (plansTo.isDefined) {
           val (outDir, suffix) = plansTo.get

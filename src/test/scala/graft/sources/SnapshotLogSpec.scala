@@ -1,9 +1,12 @@
 package graft.sources
 
+import java.net.URI
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FilterFileSystem, Path, RawLocalFileSystem}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -12,6 +15,30 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.SparkSpec
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
+
+/** The local file system under the `rootcount` scheme, recording
+  * every open of a commit-log root (`_log/v<version>.txt`). */
+class RootOpenCountingFs extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = URI.create("rootcount:///")
+}) {
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getParent != null && f.getParent.getName == "_log" &&
+        f.getName.matches("v\\d+\\.txt"))
+      RootOpenCountingFs.opens.add(f.getName)
+    super.open(f, bufferSize)
+  }
+}
+
+object RootOpenCountingFs {
+  val opens = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** Root name → times `body` opened it. */
+  def counted(body: => Any): Map[String, Int] = {
+    opens.clear()
+    body
+    opens.asScala.toSeq.groupBy(identity).map { case (n, xs) => n -> xs.size }
+  }
+}
 
 /** Commit-log table contract: snapshot isolation (readers see only
   * manifest-referenced files), O(changed partitions) per upsert,
@@ -781,5 +808,41 @@ class SnapshotLogSpec extends SparkSpec {
       "day", batchId = 6))
     assert(e.getMessage.contains("value"), e.getMessage)
     assert(SnapshotLog.currentVersion(fs, bp) == last)
+  }
+
+  test("each reader opens every commit-log root once; a commit attempt opens its base once") {
+    import RootOpenCountingFs.counted
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.rootcount.impl", classOf[RootOpenCountingFs].getName)
+    val local = Files.createTempDirectory("graft_root_reads").toString + "/tbl"
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.5, s"d${i % 3}"))
+      .toDF("id", "value", "day")
+    (1 to 4).foreach(b => SnapshotLog.appendBatch(spark, local,
+      rows(b * 10 until b * 10 + 10), "day", batchId = b))
+    // the same inline table, read through the counting scheme
+    val base = s"rootcount://$local"
+    val bp = new Path(base)
+    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[RootOpenCountingFs])
+    def root(v: Int) = f"v$v%011d.txt"
+    val everyOnce = (1 to 4).map(root(_) -> 1).toMap
+
+    assert(counted(assert(SnapshotLog.history(spark, base).count() == 4))
+      == everyOnce, "history")
+    assert(counted(assert(SnapshotLog.versionAsOfTime(spark, base,
+      Long.MaxValue).contains(4L))) == everyOnce, "versionAsOfTime")
+    assert(counted(assert(SnapshotLog.partitionSummary(fs, bp).size == 3))
+      == Map(root(4) -> 1), "partitionSummary")
+
+    // one commit attempt reads its base root once: tryCommit alone ...
+    val m = SnapshotLog.readManifest(fs, bp).get
+    assert(counted(assert(SnapshotLog.tryCommit(fs, bp,
+      m.copy(version = 5L, op = Some("SET PROPERTIES"))))) == Map(root(4) -> 1),
+      "tryCommit")
+    // ... and inside appendBatch, whose own two manifest reads (before
+    // the retry loop and at the attempt) come on top
+    assert(counted(SnapshotLog.appendBatch(spark, base, rows(50 until 60),
+      "day", batchId = 6)) == Map(root(5) -> 3), "appendBatch")
+    assert(SnapshotLog.read(spark, local).get.count() == 50)
   }
 }
