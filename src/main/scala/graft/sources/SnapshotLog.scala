@@ -476,49 +476,41 @@ object SnapshotLog {
       spark: SparkSession, base: String, newPartCol: String,
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    commitExisting(fsFor(spark, bp), bp, "REPARTITION", maxRetries) { (m, _, _) =>
       val cur = m.props.getOrElse(PartColProp, sys.error(
         s"$base does not declare $PartColProp — partition evolution " +
           "needs a declared layout (set the property once, '' for " +
           "unpartitioned)"))
-      if (sameLayout(cur, newPartCol)) return m.version
-      val sc = m.schema.get
-      partColsOf(newPartCol).foreach { c =>
-        require(sc.fields.exists(_.name.equalsIgnoreCase(c)),
-          s"no such column: $c (new partition layout '$newPartCol')")
+      if (sameLayout(cur, newPartCol)) Done(m.version) else {
+        val sc = m.schema.get
+        partColsOf(newPartCol).foreach { c =>
+          require(sc.fields.exists(_.name.equalsIgnoreCase(c)),
+            s"no such column: $c (new partition layout '$newPartCol')")
+        }
+        // register the OUTGOING layout in the spec history, reusing its
+        // id when this spelling was current once before (A → B → A)
+        val hist = m.partSpecHistory
+        val curId = hist.collectFirst { case (id, l) if sameLayout(l, cur) => id }
+          .getOrElse(if (hist.isEmpty) 0 else hist.keys.max + 1)
+        // untagged live keys were written under the outgoing layout;
+        // keys tagged with the INCOMING layout become current again and
+        // shed their tag
+        val newTags = m.files.keySet
+          .filterNot(k => m.props.contains(KeySpecPrefix + k))
+          .map(k => (KeySpecPrefix + k) -> curId.toString).toMap
+        val retag = m.props.keysIterator.filter(_.startsWith(KeySpecPrefix))
+          .filter(k => m.props.get(k).flatMap(_.toIntOption).flatMap(hist.get)
+            .exists(l => sameLayout(l, newPartCol))).toSeq
+        val props0 = (m.props -- retag) ++ newTags +
+          ((PartSpecPrefix + curId.toString) -> cur) +
+          (PartColProp -> partColsOf(newPartCol).mkString(","))
+        // a generated new partition column stamps its generation
+        // timezone now (and enforces a mismatch against an existing
+        // stamp), not at the first write — readers may derive before one
+        val props = props0 ++ genTzStamp(spark, props0, newPartCol)
+        Publish(m.copy(props = props, op = Some("REPARTITION")), identity)
       }
-      // register the OUTGOING layout in the spec history, reusing its
-      // id when this spelling was current once before (A → B → A)
-      val hist = m.partSpecHistory
-      val curId = hist.collectFirst { case (id, l) if sameLayout(l, cur) => id }
-        .getOrElse(if (hist.isEmpty) 0 else hist.keys.max + 1)
-      // untagged live keys were written under the outgoing layout;
-      // keys tagged with the INCOMING layout become current again and
-      // shed their tag
-      val newTags = m.files.keySet
-        .filterNot(k => m.props.contains(KeySpecPrefix + k))
-        .map(k => (KeySpecPrefix + k) -> curId.toString).toMap
-      val retag = m.props.keysIterator.filter(_.startsWith(KeySpecPrefix))
-        .filter(k => m.props.get(k).flatMap(_.toIntOption).flatMap(hist.get)
-          .exists(l => sameLayout(l, newPartCol))).toSeq
-      val props0 = (m.props -- retag) ++ newTags +
-        ((PartSpecPrefix + curId.toString) -> cur) +
-        (PartColProp -> partColsOf(newPartCol).mkString(","))
-      // a generated new partition column stamps its generation
-      // timezone now (and enforces a mismatch against an existing
-      // stamp), not at the first write — readers may derive before one
-      val props = props0 ++ genTzStamp(spark, props0, newPartCol)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version, props = props,
-          op = Some("REPARTITION")))) return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"REPARTITION lost $maxRetries commit races on $base")
   }
 
   /** The current layout plus every legacy layout with live keys in
@@ -906,6 +898,32 @@ object SnapshotLog {
     * manifests are opened — shard files never load here. */
   def committedVersions(fs: FileSystem, base: Path): Seq[Long] =
     mapCommitted(fs, base)(_.version)
+
+  /** [[committedVersions]] for a reader that polls: each [[versions]]
+    * call opens only the roots published since the previous call.
+    * Version names are dense and complete-or-absent, so everything up
+    * to the newest name ([[currentVersion]], O(1) from the `_latest`
+    * hint) is classified once and stays classified. [[expireVersions]]
+    * deletes the oldest roots, so known versions whose root is gone
+    * drop from the front (one existence probe per call). */
+  private[graft] final class CommitTail(base: Path) {
+    private var known = Vector.empty[Long]
+    private var scannedTo = 0L
+
+    def versions(fs: FileSystem): Seq[Long] = synchronized {
+      while (known.nonEmpty && !fs.exists(new Path(logDir(base), vName(known.head))))
+        known = known.tail
+      val newest = currentVersion(fs, base)
+      if (newest > scannedTo) {
+        val fresh =
+          if (scannedTo == 0L) listedVersions(fs, base).filter(_ <= newest).sorted
+          else scannedTo + 1 to newest
+        known ++= fresh.filter(v => readRoot(fs, base, v).isDefined)
+        scannedTo = newest
+      }
+      known
+    }
+  }
 
   /** The version a commit built on a base manifest at `mVersion` must
     * claim: `mVersion + 1`, skipping only provably-DEAD claims
@@ -1747,6 +1765,57 @@ object SnapshotLog {
     won
   }
 
+  /** What one [[commitLoop]] attempt decided: [[Done]] ends the loop
+    * without a commit (a no-op or an early answer); [[Publish]] offers
+    * `next` as the attempt's version and, once it wins, runs `after`
+    * with that version (where a writer materializes its change feed). */
+  private[sources] sealed trait Attempt[+A]
+  private[sources] final case class Done[A](result: A) extends Attempt[A]
+  private[sources] final case class Publish[A](next: Manifest, after: Long => A)
+    extends Attempt[A]
+
+  /** The optimistic commit protocol every retrying writer runs: read
+    * the base manifest, claim `base + 1` ([[nextVersion]]), let `body`
+    * decide against (base, version, attempt number), publish through
+    * [[tryCommit]], and on a lost race start over from a fresh read —
+    * at most `maxRetries` attempts, then `IllegalStateException`.
+    *
+    * `first` is a base the caller already read: attempt 0 uses it
+    * instead of reading again. That is safe because the base+1 claim
+    * enforces freshness — if anything committed since that read, the
+    * claimed version exists and the attempt loses like any other race.
+    * State that must survive a retry (staged output and the base it was
+    * staged against) lives in the caller's closure. */
+  private[sources] def commitLoop[A](
+      fs: FileSystem, bp: Path, op: String, maxRetries: Int,
+      first: Option[Manifest] = None)(
+      body: (Option[Manifest], Long, Int) => Attempt[A]): A = {
+    @annotation.tailrec
+    def from(attempt: Int): A =
+      if (attempt < maxRetries) {
+        val base = if (attempt == 0 && first.isDefined) first else readManifest(fs, bp)
+        val version = nextVersion(fs, bp, base.fold(0L)(_.version))
+        body(base, version, attempt) match {
+          case Done(a) => a
+          case Publish(next, after) =>
+            if (tryCommit(fs, bp, next.copy(version = version))) after(version)
+            else from(attempt + 1)
+        }
+      } else throw new IllegalStateException(s"$op lost $maxRetries commit races on $bp")
+    from(0)
+  }
+
+  /** [[commitLoop]] for a commit that needs a committed table: `body`
+    * gets the base manifest, and a missing table fails. */
+  private def commitExisting[A](
+      fs: FileSystem, bp: Path, op: String, maxRetries: Int,
+      first: Option[Manifest] = None)(
+      body: (Manifest, Long, Int) => Attempt[A]): A =
+    commitLoop(fs, bp, op, maxRetries, first) { (base, version, attempt) =>
+      body(base.getOrElse(sys.error(s"$bp has no committed version")),
+        version, attempt)
+    }
+
   /** Read the current snapshot (empty table → empty result needs a
     * schema, so callers with no committed version must handle None).
     *
@@ -1919,8 +1988,6 @@ object SnapshotLog {
     val targetFields = changes.schema.fields.toSeq
       .filterNot(f => opCol.contains(f.name))
 
-    var attempt = 0
-    var committed = false
     // the affected partitions' file lists the staged data was merged
     // against — while the live manifest still agrees on them, the
     // staged files remain valid and a conflict retry is metadata-only
@@ -1943,28 +2010,22 @@ object SnapshotLog {
     // (pre, post) state of the AFFECTED partitions only — the change
     // feed derives from these, never from a full-table diff
     var cdfPair: Option[(DataFrame, DataFrame)] = None
-    var committedVersion = -1L
-    try {
-      while (!committed && attempt < maxRetries) {
-        val m = readManifest(fs, bp).getOrElse(Manifest(0L, Map.empty))
-        requireCurrentLayout(m, partCol)
-        // exactly-once gate: a replayed (appId, batchId) is already in
-        // the table — nothing to do. Re-checked on EVERY retry, so a
-        // concurrent duplicate writer that wins the commit race makes
-        // this attempt a no-op instead of a double-apply; any files
-        // this attempt staged are unreferenced orphans, vacuum's job.
-        // (`return` still runs the finally's unpersist.)
-        if (txn.exists { case (a, b) => m.txns.get(a).exists(_ >= b) })
-          return
+    try commitLoop(fs, bp, "UPSERT", maxRetries, m0) { (snap, version, attempt) =>
+      val m = snap.getOrElse(Manifest(0L, Map.empty))
+      requireCurrentLayout(m, partCol)
+      // exactly-once gate: a replayed (appId, batchId) is already in
+      // the table — nothing to do. Re-checked on EVERY retry, so a
+      // concurrent duplicate writer that wins the commit race makes
+      // this attempt a no-op instead of a double-apply; any files
+      // this attempt staged are unreferenced orphans, vacuum's job.
+      if (txn.exists { case (a, b) => m.txns.get(a).exists(_ >= b) }) Done(())
+      else {
         // CHECK constraints gate the batch up front (delete markers
         // exempt: a CDC 'D' row's payload never lands in the table)
         if (attempt == 0)
           enforceConstraints(
             opCol.map(oc => changes.filter(upper(col(oc)) =!= "D"))
               .getOrElse(changes), m, base)
-        // allocate past any in-flight/crashed claim, not just past the
-        // newest COMPLETE manifest, or a dead claim blocks the chain
-        val version = nextVersion(fs, bp, m.version)
         // mixed layout (partition evolution): rows with matching merge
         // keys may live in ANY legacy partition (their keys there are
         // unknowable from the change batch) — fold every legacy key
@@ -2114,18 +2175,13 @@ object SnapshotLog {
           m.props ++ genTzStamp(spark, m.props, partCol) ++ stagedHwU,
           m.colmap, m.dropped)
         onBeforeUpsertCommit()
-        committed = tryCommit(fs, bp, next)
-        if (committed) committedVersion = version
-        attempt += 1
+        Publish(next, v =>
+          if (cdfOn) cdfPair.foreach { case (pre, post) =>
+            commitCdfVersion(fs, bp, v,
+              changeFeed(pre, post, keys).withColumn("_commit_version", lit(v)))
+          })
       }
     } finally changes.unpersist()
-    if (!committed) throw new IllegalStateException(
-      s"SnapshotLog commit lost $maxRetries races on $base — raise maxRetries")
-    if (cdfOn) cdfPair.foreach { case (pre, post) =>
-      commitCdfVersion(fs, bp, committedVersion,
-        changeFeed(pre, post, keys)
-          .withColumn("_commit_version", lit(committedVersion)))
-    }
   }
 
   /** APPEND (or full OVERWRITE) a batch of rows as a new commit — the
@@ -2181,8 +2237,6 @@ object SnapshotLog {
     partColsOf(partCol).foreach(pc => require(
       fields.exists(_.name.equalsIgnoreCase(pc)),
       s"append batch lacks partition column $pc"))
-    var attempt = 0
-    var committedV = -1L
     var staged: Seq[(String, String, Long)] = Nil
     // mapping under which `staged` was renamed logical→physical — a
     // racing RENAME/DROP COLUMN invalidates it (restage; the old
@@ -2193,13 +2247,10 @@ object SnapshotLog {
     var stagedUnder:
       Option[(Map[String, String], Set[String], Map[String, String])] = None
     var stagedHw: Map[String, String] = Map.empty
-    // the manifest the successful commit replaced — overwrite's CDF
-    // needs its rows as typed deletes (read lazily AFTER commit from
-    // the old files, which stay on disk until vacuum)
-    var replacedM: Option[Manifest] = None
     val allTxns = txnsAdd ++ txn
-    while (committedV < 0 && attempt < maxRetries) {
-      val m0Read = readManifest(fs, bp).getOrElse(Manifest(0L, Map.empty))
+    commitLoop(fs, bp, if (overwrite) "OVERWRITE" else "APPEND", maxRetries, m0) {
+        (snap, version, attempt) =>
+      val m0Read = snap.getOrElse(Manifest(0L, Map.empty))
       // a REPLACE that explicitly redeclares the layout (propsAdd) is
       // the one legitimate way to write an evolved table under a
       // different partitioning — everything else must match
@@ -2214,115 +2265,108 @@ object SnapshotLog {
       // PARTIAL overlap means a concurrent ingest absorbed part of
       // this batch — committing the staged data would duplicate that
       // part, so fail loudly and let the caller re-diff and restage.
-      if (allTxns.nonEmpty) {
-        val satisfied =
-          allTxns.count { case (a, b) => m.txns.get(a).exists(_ >= b) }
-        if (satisfied == allTxns.size) return m.version
-        if (satisfied > 0) throw new PartialTxnConflict(
-          s"$satisfied of ${allTxns.size} transaction keys already " +
-            s"committed on $base — batch contents are stale; re-diff " +
-            "against the live manifest and retry with the remainder")
-      }
-      val version = nextVersion(fs, bp, m.version)
-      if (attempt == 0) enforceConstraints(rows1, m, base)
-      val identSnap = m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
-      if (staged.isEmpty ||
-          !stagedUnder.contains((m.colmap, m.dropped, identSnap))) {
-        val rel =
-          s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        val (rows2, hwUpd) = applyIdentity(rows1, m, enforceAlways = true)
-        stagedHw = hwUpd
-        // REBALANCE by partition value before the write (guide §6, same
-        // as the merge path): without it an append fans out as (source
-        // tasks × partition values) files. Appends record no per-file
-        // column stats (no statsCols parameter exists here), so no
-        // pruning geometry is disturbed; identity values are
-        // content-hash-sharded and partitioning-independent. Cross-batch
-        // fragmentation still accrues (each append commits its own
-        // files) — compaction keeps its job. Bucketed tables skip it:
-        // stagePartitioned routes them by the bucket columns.
-        val routed = toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
-        stagePartitioned(
-          if (m.bucketSpec.isEmpty) routed.hint("rebalance", col("__p")) else routed,
-          m, fs, dir)
-        staged = listStaged(fs, dir, rel)
-        // NULL-partition gate on the STAGED data — one pass, no query
-        // re-execution (a driver-side pre-check would run the source
-        // twice, and a non-deterministic source could pass the check
-        // yet write NULLs). The staged dir listing is ground truth.
-        if (staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"))
-          sys.error(s"batch writes NULL into partition column $partCol " +
-            s"(staged at $dir — unreferenced, vacuum reclaims it)")
-        stagedUnder = Some((m.colmap, m.dropped, identSnap))
-      }
-      val stagedByPart = staged.groupBy(_._1)
-        .map { case (p, fls) => p -> fls.map(_._2).sorted }
-      // overwrite replaces every partition (legacy keys and their tags
-      // leave with it) — only the append merge can collide
-      if (!overwrite)
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys)
-      val files =
-        if (overwrite) stagedByPart
-        else m.files ++ stagedByPart.map { case (p, fls) =>
-          p -> (m.files.getOrElse(p, Nil) ++ fls).sorted
+      val satisfied =
+        allTxns.count { case (a, b) => m.txns.get(a).exists(_ >= b) }
+      if (satisfied > 0 && satisfied < allTxns.size) throw new PartialTxnConflict(
+        s"$satisfied of ${allTxns.size} transaction keys already " +
+          s"committed on $base — batch contents are stale; re-diff " +
+          "against the live manifest and retry with the remainder")
+      if (allTxns.nonEmpty && satisfied == allTxns.size) Done(m.version) else {
+        if (attempt == 0) enforceConstraints(rows1, m, base)
+        val identSnap = m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
+        if (staged.isEmpty ||
+            !stagedUnder.contains((m.colmap, m.dropped, identSnap))) {
+          val rel =
+            s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
+          val dir = new Path(bp, rel)
+          val (rows2, hwUpd) = applyIdentity(rows1, m, enforceAlways = true)
+          stagedHw = hwUpd
+          // REBALANCE by partition value before the write (guide §6, same
+          // as the merge path): without it an append fans out as (source
+          // tasks × partition values) files. Appends record no per-file
+          // column stats (no statsCols parameter exists here), so no
+          // pruning geometry is disturbed; identity values are
+          // content-hash-sharded and partitioning-independent. Cross-batch
+          // fragmentation still accrues (each append commits its own
+          // files) — compaction keeps its job. Bucketed tables skip it:
+          // stagePartitioned routes them by the bucket columns.
+          val routed = toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
+          stagePartitioned(
+            if (m.bucketSpec.isEmpty) routed.hint("rebalance", col("__p")) else routed,
+            m, fs, dir)
+          staged = listStaged(fs, dir, rel)
+          // NULL-partition gate on the STAGED data — one pass, no query
+          // re-execution (a driver-side pre-check would run the source
+          // twice, and a non-deterministic source could pass the check
+          // yet write NULLs). The staged dir listing is ground truth.
+          if (staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"))
+            sys.error(s"batch writes NULL into partition column $partCol " +
+              s"(staged at $dir — unreferenced, vacuum reclaims it)")
+          stagedUnder = Some((m.colmap, m.dropped, identSnap))
         }
-      val next = Manifest(
-        version,
-        files,
-        (if (overwrite) Map.empty[String, Map[String, (String, String)]]
-         else m.stats) ++ sizeStats(spark, fs, bp, staged),
-        if (overwrite) Map.empty else m.blooms,
-        if (overwrite) Map.empty else m.dvs,
-        Some(evolveSchema(if (overwrite) None else m.schemaJson,
-          org.apache.spark.sql.types.StructType(fields.toArray))),
-        Some(if (overwrite) "OVERWRITE" else "APPEND"),
-        m.constraints,
-        m.txns ++ allTxns,
-        // propsAdd: caller-supplied property seeds (the DSv2 write
-        // surface stamps PartColProp on first write) — existing values
-        // win so a concurrent ALTER is never silently undone. REPLACE
-        // (resetColumnState) inverts that: its propsAdd is an explicit
-        // DECLARATION that overrides collisions in the same commit
-        // (undeclared existing props — bookkeeping high-waters, row-id
-        // bases — still survive, the documented REPLACE semantics)
-        (if (resetColumnState)
-          m.props ++ genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd
-         else (genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd) ++
-           m.props) ++ stagedHw, m.colmap, m.dropped)
-      // the replaced snapshot's CDF delete feed must read the OLD
-      // files under their OWN column mapping — keep the unstripped
-      // manifest for it
-      if (tryCommit(fs, bp, next)) { committedV = version; replacedM = Some(m0Read) }
-      attempt += 1
+        val stagedByPart = staged.groupBy(_._1)
+          .map { case (p, fls) => p -> fls.map(_._2).sorted }
+        // overwrite replaces every partition (legacy keys and their tags
+        // leave with it) — only the append merge can collide
+        if (!overwrite)
+          requireNoLegacyCollision(m, partCol, stagedByPart.keys)
+        val files =
+          if (overwrite) stagedByPart
+          else m.files ++ stagedByPart.map { case (p, fls) =>
+            p -> (m.files.getOrElse(p, Nil) ++ fls).sorted
+          }
+        val next = Manifest(
+          version,
+          files,
+          (if (overwrite) Map.empty[String, Map[String, (String, String)]]
+           else m.stats) ++ sizeStats(spark, fs, bp, staged),
+          if (overwrite) Map.empty else m.blooms,
+          if (overwrite) Map.empty else m.dvs,
+          Some(evolveSchema(if (overwrite) None else m.schemaJson,
+            org.apache.spark.sql.types.StructType(fields.toArray))),
+          Some(if (overwrite) "OVERWRITE" else "APPEND"),
+          m.constraints,
+          m.txns ++ allTxns,
+          // propsAdd: caller-supplied property seeds (the DSv2 write
+          // surface stamps PartColProp on first write) — existing values
+          // win so a concurrent ALTER is never silently undone. REPLACE
+          // (resetColumnState) inverts that: its propsAdd is an explicit
+          // DECLARATION that overrides collisions in the same commit
+          // (undeclared existing props — bookkeeping high-waters, row-id
+          // bases — still survive, the documented REPLACE semantics)
+          (if (resetColumnState)
+            m.props ++ genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd
+           else (genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd) ++
+             m.props) ++ stagedHw, m.colmap, m.dropped)
+        Publish(next, { v =>
+          if (cdfOn) {
+            // every staged row is an INSERT; an overwrite additionally
+            // emits the replaced snapshot's rows as typed deletes (Delta
+            // CDF semantics for INSERT OVERWRITE), read from the old files
+            // (on disk until vacuum) under their OWN column mapping — the
+            // unstripped manifest
+            val stagedAbs = staged.map { case (_, rel, _) =>
+              new Path(bp, rel).toString }
+            val ins = spark.read.parquet(stagedAbs: _*)
+              .select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+              .withColumn("change_type", lit("insert"))
+            val feed = Some(m0Read).filter(pm => overwrite && pm.files.nonEmpty)
+              .map { pm =>
+                readSnapshot(spark, bp, pm, None)
+                  .select(fields.map(f =>
+                    if (pm.schema.get.fieldNames.contains(f.name))
+                      col(f.name).cast(f.dataType).as(f.name)
+                    else lit(null).cast(f.dataType).as(f.name)): _*)
+                  .withColumn("change_type", lit("delete"))
+                  .unionByName(ins)
+              }
+              .getOrElse(ins)
+            commitCdfVersion(fs, bp, v, feed.withColumn("_commit_version", lit(v)))
+          }
+          v
+        })
+      }
     }
-    if (committedV < 0) throw new IllegalStateException(
-      s"SnapshotLog append lost $maxRetries races on $base — raise maxRetries")
-    if (cdfOn) {
-      // every staged row is an INSERT; an overwrite additionally emits
-      // the replaced snapshot's rows as typed deletes (Delta CDF
-      // semantics for INSERT OVERWRITE)
-      val stagedAbs = staged.map { case (_, rel, _) =>
-        new Path(bp, rel).toString }
-      val ins = spark.read.parquet(stagedAbs: _*)
-        .select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-        .withColumn("change_type", lit("insert"))
-      val feed = replacedM.filter(_ => overwrite)
-        .filter(_.files.nonEmpty)
-        .map { pm =>
-          readSnapshot(spark, bp, pm, None)
-            .select(fields.map(f =>
-              if (pm.schema.get.fieldNames.contains(f.name))
-                col(f.name).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)): _*)
-            .withColumn("change_type", lit("delete"))
-            .unionByName(ins)
-        }
-        .getOrElse(ins)
-      commitCdfVersion(fs, bp, committedV,
-        feed.withColumn("_commit_version", lit(committedV)))
-    }
-    committedV
   }
 
   /** (partition value, rel file path, byte length) for every parquet
@@ -2887,15 +2931,9 @@ object SnapshotLog {
   def syncIdentity(
       spark: SparkSession, base: String, maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
-      val idents = m.identityCols
-      if (idents.isEmpty) return 0L
-      val live = read(spark, base).getOrElse(return 0L)
-      val upd = idents.flatMap { case (c, (start, step)) =>
+    commitExisting(fsFor(spark, bp), bp, "SYNC IDENTITY", maxRetries) { (m, _, _) =>
+      lazy val live = readSnapshot(spark, bp, m, None)
+      val upd = m.identityCols.flatMap { case (c, (start, step)) =>
         if (!live.columns.exists(_.equalsIgnoreCase(c))) None
         else {
           val hw = m.identityHighWater(c, start, step)
@@ -2907,15 +2945,9 @@ object SnapshotLog {
           else Some(IdentityHighWaterPrefix + c -> hw2.toString)
         }
       }.toMap
-      if (upd.isEmpty) return 0L
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          props = m.props ++ upd, op = Some("SYNC_IDENTITY"))))
-        return version
-      attempt += 1
+      if (upd.isEmpty) Done(0L)
+      else Publish(m.copy(props = m.props ++ upd, op = Some("SYNC_IDENTITY")), identity)
     }
-    throw new IllegalStateException(
-      s"SYNC IDENTITY lost $maxRetries commit races on $base")
   }
 
   /** `FSCK REPAIR TABLE` (Delta's verb): drop manifest entries whose
@@ -2932,30 +2964,21 @@ object SnapshotLog {
       maxRetries: Int = 5): Seq[String] = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fs, bp, "FSCK", maxRetries) { (m, _, _) =>
       val gone = m.allFiles.filterNot { f =>
         val p = new Path(f)
         fs.exists(if (p.isAbsolute) p else new Path(bp, f))
       }
-      if (gone.isEmpty || dryRun) return gone
-      val goneSet = gone.toSet
-      val files2 = m.files.view.mapValues(_.filterNot(goneSet)).toMap
-        .filter(_._2.nonEmpty)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          files = files2,
-          stats = m.stats -- gone,
-          blooms = m.blooms -- gone,
-          dvs = m.dvs -- gone,
-          op = Some("FSCK"))))
-        return gone
-      attempt += 1
+      if (gone.isEmpty || dryRun) Done(gone)
+      else {
+        val goneSet = gone.toSet
+        val files2 = m.files.view.mapValues(_.filterNot(goneSet)).toMap
+          .filter(_._2.nonEmpty)
+        Publish(m.copy(files = files2, stats = m.stats -- gone,
+          blooms = m.blooms -- gone, dvs = m.dvs -- gone, op = Some("FSCK")),
+          _ => gone)
+      }
     }
-    throw new IllegalStateException(
-      s"FSCK lost $maxRetries commit races on $base")
   }
 
   /** ANALYZE for the commit log: compute per-file bounds (+ the row
@@ -2975,40 +2998,35 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
+    commitLoop(fs, bp, "STATS", maxRetries) { (snap, _, _) =>
       // manifest stats keys are PHYSICAL column names; callers speak
       // logical (column mapping)
+      val m = snap.getOrElse(Manifest(0L, Map.empty))
       val physCols = statsCols.map(m.phys)
       val wanted = physCols :+ RowCountKey
       val need = m.allFiles.filter { f =>
         val have = m.stats.getOrElse(f, Map.empty)
         !wanted.forall(have.contains)
       }
-      if (need.isEmpty) return 0L
-      val byPath = need
-        .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
-      val aggs = statsAggs(physCols)
-      val fresh = spark.read.option("mergeSchema", "true")
-        .parquet(need.map(f => new Path(bp, f).toString): _*)
-        .groupBy(input_file_name().as("__f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().flatMap { r =>
-          byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
-            .map(_ -> decodeBounds(r, physCols))
-        }.toMap
-      val merged = fresh.foldLeft(m.stats) {
-        case (acc, (f, b)) => acc.updated(f, acc.getOrElse(f, Map.empty) ++ b)
+      if (need.isEmpty) Done(0L)
+      else {
+        val byPath = need
+          .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
+        val aggs = statsAggs(physCols)
+        val fresh = spark.read.option("mergeSchema", "true")
+          .parquet(need.map(f => new Path(bp, f).toString): _*)
+          .groupBy(input_file_name().as("__f"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().flatMap { r =>
+            byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
+              .map(_ -> decodeBounds(r, physCols))
+          }.toMap
+        val merged = fresh.foldLeft(m.stats) {
+          case (acc, (f, b)) => acc.updated(f, acc.getOrElse(f, Map.empty) ++ b)
+        }
+        Publish(m.copy(stats = merged, op = Some("STATS")), identity)
       }
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version, stats = merged,
-          op = Some("STATS"))))
-        return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"stats build lost $maxRetries commit races on $base")
   }
 
   /** A schema's JSON with every field nullable — the manifest-header
@@ -3096,21 +3114,12 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
-      val files = m.allFiles
-      if (files.isEmpty) return 0L
-      val built = computeBlooms(spark, fs, bp, files, cols.map(m.phys), fpp)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp,
-          m.copy(version = version, blooms = m.blooms ++ built,
-            op = Some("BLOOMS"))))
-        return version
-      attempt += 1
+    commitLoop(fs, bp, "BLOOMS", maxRetries) { (snap, _, _) =>
+      snap.filter(_.allFiles.nonEmpty).fold[Attempt[Long]](Done(0L)) { m =>
+        val built = computeBlooms(spark, fs, bp, m.allFiles, cols.map(m.phys), fpp)
+        Publish(m.copy(blooms = m.blooms ++ built, op = Some("BLOOMS")), identity)
+      }
     }
-    throw new IllegalStateException(
-      s"bloom build lost $maxRetries commit races on $base")
   }
 
   /** `RENAME COLUMN from → to` as a METADATA-ONLY commit via column
@@ -3136,11 +3145,7 @@ object SnapshotLog {
       partCol: Option[String] = None,
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    commitExisting(fsFor(spark, bp), bp, "RENAME COLUMN", maxRetries) { (m, _, _) =>
       val sc = m.schema.get
       val field = sc.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
         sys.error(s"no such column: $from"))
@@ -3171,15 +3176,9 @@ object SnapshotLog {
         if (f.name == field.name) f.copy(name = to) else f))
       val colmap = (m.colmap - field.name) ++
         (if (phys == to) Map.empty[String, String] else Map(to -> phys))
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("RENAME_COLUMN"), colmap = colmap)))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(StructTypeNullable(evolved)),
+        op = Some("RENAME_COLUMN"), colmap = colmap), identity)
     }
-    throw new IllegalStateException(
-      s"RENAME COLUMN lost $maxRetries commit races on $base")
   }
 
   /** `DROP COLUMN c` as a METADATA-ONLY commit: the logical schema
@@ -3201,11 +3200,7 @@ object SnapshotLog {
       partCol: Option[String] = None,
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    commitExisting(fsFor(spark, bp), bp, "DROP COLUMN", maxRetries) { (m, _, _) =>
       val sc = m.schema.get
       val field = sc.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         sys.error(s"no such column: $name"))
@@ -3229,17 +3224,10 @@ object SnapshotLog {
           s"(UNSET $IdentityPrefix${field.name} first)")
       val evolved = org.apache.spark.sql.types.StructType(
         sc.fields.filterNot(_.name == field.name))
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("DROP_COLUMN"),
-          colmap = m.colmap - field.name,
-          dropped = m.dropped + m.phys(field.name))))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(StructTypeNullable(evolved)),
+        op = Some("DROP_COLUMN"), colmap = m.colmap - field.name,
+        dropped = m.dropped + m.phys(field.name)), identity)
     }
-    throw new IllegalStateException(
-      s"DROP COLUMN lost $maxRetries commit races on $base")
   }
 
   /** `ALTER COLUMN c TYPE t` as a METADATA-ONLY commit, WIDENING
@@ -3284,11 +3272,7 @@ object SnapshotLog {
       case _ => false
     }
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    commitExisting(fsFor(spark, bp), bp, "ALTER COLUMN TYPE", maxRetries) { (m, _, _) =>
       val sc = m.schema.get
       val field = sc.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         sys.error(s"no such column: $name"))
@@ -3321,16 +3305,10 @@ object SnapshotLog {
       val blooms2 =
         if (integral) m.blooms
         else m.blooms.map { case (f, cs) => f -> (cs - phys) }
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("ALTER_COLUMN_TYPE"),
-          stats = stats2, blooms = blooms2)))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(StructTypeNullable(evolved)),
+        op = Some("ALTER_COLUMN_TYPE"), stats = stats2, blooms = blooms2),
+        identity)
     }
-    throw new IllegalStateException(
-      s"ALTER COLUMN TYPE lost $maxRetries commit races on $base")
   }
 
   /** `TRUNCATE TABLE` — delete every row as ONE metadata-only commit:
@@ -3348,27 +3326,19 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
-      if (m.allFiles.isEmpty) return m.version
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          files = Map.empty, stats = Map.empty, blooms = Map.empty,
-          dvs = Map.empty, op = Some("TRUNCATE")))) {
+    commitExisting(fs, bp, "TRUNCATE", maxRetries) { (m, _, _) =>
+      if (m.allFiles.isEmpty) Done(m.version)
+      else Publish(m.copy(files = Map.empty, stats = Map.empty,
+        blooms = Map.empty, dvs = Map.empty, op = Some("TRUNCATE")), { v =>
         if (m.cdfEnabled) {
           val pre = alignToSchema(readFiles(spark, bp, m, m.allFiles), m)
-          commitCdfVersion(fs, bp, version,
+          commitCdfVersion(fs, bp, v,
             pre.withColumn("change_type", lit("delete"))
-              .withColumn("_commit_version", lit(version)))
+              .withColumn("_commit_version", lit(v)))
         }
-        return version
-      }
-      attempt += 1
+        v
+      })
     }
-    throw new IllegalStateException(
-      s"TRUNCATE lost $maxRetries commit races on $base")
   }
 
   /** Names of CHECK constraints whose SQL text references column `c`
@@ -3522,9 +3492,8 @@ object SnapshotLog {
     // file (re-layout changes pruning, not just file counts).
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
+    commitLoop(fs, bp, "COMPACT", maxRetries) { (snap, version, attempt) =>
+      val m = snap.getOrElse(Manifest(0L, Map.empty))
       val files = m.files.getOrElse(part, Nil)
       val hasDv = files.exists(m.dvs.contains)
       // a single file WITH a deletion vector still compacts: that is
@@ -3537,77 +3506,73 @@ object SnapshotLog {
             // the next target-size pass
             bucketsCompact(files, m, optimizeTargetOf(m))
            else files.size <= 1)))
-        return 0L
-      val version = nextVersion(fs, bp, m.version)
-      // staging dir unique per attempt AND partition: two concurrent
-      // compactions reading the same manifest compute the same target
-      // version — keyed only by version they would overwrite each
-      // other's staged (possibly already-committed) files
-      val rel =
-        s"data/c$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-      val dir = new Path(bp, rel)
-      // read THROUGH deletion vectors: compaction materializes them —
-      // deleted positions vanish physically and the DV refs drop
-      // align to the LOGICAL schema: a rewrite materializes dropped
-      // columns' removal (their tombstoned physical names must not be
-      // re-staged) and backfills added-but-never-written columns.
-      // Row-tracked tables also carry their ids into the rewrite as
-      // the materialized column — OPTIMIZE must not reassign identity
-      val df = readForRewrite(spark, bp, m, files)
-      require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
-        "clusterBy/ZORDER is incompatible with a bucketed table")
-      if (m.bucketSpec.isDefined)
-        // each bucket's accumulated files fold to ONE tagged file;
-        // rows never cross buckets
-        stageFlatBucketed(toPhysical(df, m), m, fs, dir)
+        Done(0L)
       else {
-      val out =
-        if (clusterBy.isEmpty) df.repartition(1)
+        // staging dir unique per attempt AND partition: two concurrent
+        // compactions reading the same manifest compute the same target
+        // version — keyed only by version they would overwrite each
+        // other's staged (possibly already-committed) files
+        val rel =
+          s"data/c$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+        val dir = new Path(bp, rel)
+        // read THROUGH deletion vectors: compaction materializes them —
+        // deleted positions vanish physically and the DV refs drop
+        // align to the LOGICAL schema: a rewrite materializes dropped
+        // columns' removal (their tombstoned physical names must not be
+        // re-staged) and backfills added-but-never-written columns.
+        // Row-tracked tables also carry their ids into the rewrite as
+        // the materialized column — OPTIMIZE must not reassign identity
+        val df = readForRewrite(spark, bp, m, files)
+        require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
+          "clusterBy/ZORDER is incompatible with a bucketed table")
+        if (m.bucketSpec.isDefined)
+          // each bucket's accumulated files fold to ONE tagged file;
+          // rows never cross buckets
+          stageFlatBucketed(toPhysical(df, m), m, fs, dir)
         else {
-          val (d2, sortCol) =
-            if (clusterBy.size == 1) (df, col(clusterBy.head))
-            else (Clustering.withZ(df, clusterBy), col("__z"))
-          d2.repartitionByRange(math.max(clusterFiles, 1), sortCol)
-            .sortWithinPartitions(sortCol)
-            .drop("__z")
+          val out =
+            if (clusterBy.isEmpty) df.repartition(1)
+            else {
+              val (d2, sortCol) =
+                if (clusterBy.size == 1) (df, col(clusterBy.head))
+                else (Clustering.withZ(df, clusterBy), col("__z"))
+              d2.repartitionByRange(math.max(clusterFiles, 1), sortCol)
+                .sortWithinPartitions(sortCol)
+                .drop("__z")
+            }
+          toPhysical(out, m).write.mode("overwrite").parquet(dir.toString)
         }
-      toPhysical(out, m).write.mode("overwrite").parquet(dir.toString)
+        val newStatuses = fs.listStatus(dir).toSeq
+          .filter(_.getPath.getName.endsWith(".parquet"))
+        val newFiles = newStatuses.map(st => s"$rel/${st.getPath.getName}")
+        val newSizes = sizeStats(spark, fs, bp,
+          newStatuses.map(st => (part, s"$rel/${st.getPath.getName}", st.getLen)))
+        // compacted-away files take their stats entries with them; the
+        // replacement file gets fresh bounds when statsCols is passed,
+        // and is otherwise stats-less (conservative: never pruned)
+        val newStats =
+          if (statsCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
+          else fileStats(spark, fs, dir, rel,
+            statsCols.filterNot(m.dropped.contains))
+        // blooms SURVIVE maintenance: rebuild over exactly the columns
+        // the replaced files carried blooms for, so point-lookup
+        // skipping keeps working after OPTIMIZE (a dropped-only bloom
+        // would silently degrade every future probe to scan-all)
+        val bloomCols = files.flatMap(f =>
+          m.blooms.getOrElse(f, Map.empty).keys).distinct
+          // a dropped column's bloom cannot rebuild (its bytes are gone
+          // from the rewrite) — and is pointless, nothing queries it
+          .filterNot(m.dropped.contains)
+        val newBlooms = computeBlooms(spark, fs, bp, newFiles, bloomCols, 0.03)
+        Publish(Manifest(version, m.files.updated(part, newFiles),
+          (m.stats -- files) ++ mergeFileStats(newSizes, newStats),
+          (m.blooms -- files) ++ newBlooms,
+          m.dvs -- files,
+          m.schemaJson,
+          Some(if (clusterBy.isEmpty) "COMPACT" else "OPTIMIZE"),
+          m.constraints, m.txns, m.props, m.colmap, m.dropped), identity)
       }
-      val newStatuses = fs.listStatus(dir).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      val newFiles = newStatuses.map(st => s"$rel/${st.getPath.getName}")
-      val newSizes = sizeStats(spark, fs, bp,
-        newStatuses.map(st => (part, s"$rel/${st.getPath.getName}", st.getLen)))
-      // compacted-away files take their stats entries with them; the
-      // replacement file gets fresh bounds when statsCols is passed,
-      // and is otherwise stats-less (conservative: never pruned)
-      val newStats =
-        if (statsCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
-        else fileStats(spark, fs, dir, rel,
-          statsCols.filterNot(m.dropped.contains))
-      // blooms SURVIVE maintenance: rebuild over exactly the columns
-      // the replaced files carried blooms for, so point-lookup
-      // skipping keeps working after OPTIMIZE (a dropped-only bloom
-      // would silently degrade every future probe to scan-all)
-      val bloomCols = files.flatMap(f =>
-        m.blooms.getOrElse(f, Map.empty).keys).distinct
-        // a dropped column's bloom cannot rebuild (its bytes are gone
-        // from the rewrite) — and is pointless, nothing queries it
-        .filterNot(m.dropped.contains)
-      val newBlooms = computeBlooms(spark, fs, bp, newFiles, bloomCols, 0.03)
-      if (tryCommit(fs, bp,
-          Manifest(version, m.files.updated(part, newFiles),
-            (m.stats -- files) ++ mergeFileStats(newSizes, newStats),
-            (m.blooms -- files) ++ newBlooms,
-            m.dvs -- files,
-            m.schemaJson,
-            Some(if (clusterBy.isEmpty) "COMPACT" else "OPTIMIZE"),
-            m.constraints, m.txns, m.props, m.colmap, m.dropped)))
-        return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"compaction lost $maxRetries commit races on $base/$part")
   }
 
   /** Whole-table OPTIMIZE in ONE transaction: every partition that is
@@ -3635,7 +3600,6 @@ object SnapshotLog {
       statsCols: Seq[String] = Nil): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
     // CONFLICT-NARROWED retries (the multi-writer soak's OPTIMIZE
     // latency tail was recompute cost, not contention itself): the
     // staged rewrite replaces EXACTLY the files it read, so a lost
@@ -3655,37 +3619,26 @@ object SnapshotLog {
     var stagedDropped: Set[String] = Set.empty
     var stagedSchema: Option[String] = None
     var stagedTarget: Option[Long] = None
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
-      requireCurrentLayout(m, partCol)
-      val targetBytes = optimizeTargetOf(m)
-      val canReuse = staged.nonEmpty && {
-        val fset = stagedOld.values.flatten.toSet
-        stagedOld.forall { case (p, fls) =>
-          val live = m.files.getOrElse(p, Nil).toSet
-          fls.forall(live)
-        } &&
-          m.dvs.filter { case (f, _) => fset(f) } == stagedDvs &&
-          m.colmap == stagedColmap && m.dropped == stagedDropped &&
-          m.schemaJson == stagedSchema && targetBytes == stagedTarget
+    // rewrite every partition that needs it against `m`; false when
+    // none does
+    def restage(m: Manifest, targetBytes: Option[Long], attempt: Int): Boolean = {
+      // legacy-layout partitions (partition evolution) always
+      // qualify: OPTIMIZE re-routes their rows under the CURRENT
+      // layout — the incremental migration path that returns the
+      // table to a single layout without a dedicated full rewrite
+      val legacy = m.legacyKeys
+      val need = m.files.keySet.toSeq.sorted.filter { p =>
+        val fls = m.files(p)
+        legacy(p) || fls.exists(m.dvs.contains) ||
+          (if (m.bucketSpec.isDefined)
+            // bucketed steady state is one file PER BUCKET — or, with
+            // a byte target, ceil(bucketBytes/target) files; only a
+            // bucket over its budget (or an untagged file) fragments
+            !bucketsCompact(fls, m, targetBytes)
+          else fls.size >= math.max(minFiles, 2))
       }
-      if (!canReuse) {
-        // legacy-layout partitions (partition evolution) always
-        // qualify: OPTIMIZE re-routes their rows under the CURRENT
-        // layout — the incremental migration path that returns the
-        // table to a single layout without a dedicated full rewrite
-        val legacy = m.legacyKeys
-        val need = m.files.keySet.toSeq.sorted.filter { p =>
-          val fls = m.files(p)
-          legacy(p) || fls.exists(m.dvs.contains) ||
-            (if (m.bucketSpec.isDefined)
-              // bucketed steady state is one file PER BUCKET — or, with
-              // a byte target, ceil(bucketBytes/target) files; only a
-              // bucket over its budget (or an untagged file) fragments
-              !bucketsCompact(fls, m, targetBytes)
-            else fls.size >= math.max(minFiles, 2))
-        }
-        if (need.isEmpty) return 0L
+      if (need.isEmpty) false
+      else {
         val rel =
           s"data/o${m.version + 1}-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
         val dir = new Path(bp, rel)
@@ -3758,37 +3711,52 @@ object SnapshotLog {
         stagedDvs = m.dvs.filter { case (f, _) => fset(f) }
         stagedColmap = m.colmap; stagedDropped = m.dropped
         stagedSchema = m.schemaJson; stagedTarget = targetBytes
+        true
       }
-      // commit against the LIVE manifest: remove exactly the files the
-      // rewrite read (a partition emptied of them drops its key —
-      // migration), keep any racer-appended files, add the staged ones
-      val version = nextVersion(fs, bp, m.version)
-      val oldFiles = stagedOld.values.flatten.toSeq
-      val afterRemoval = stagedOld.foldLeft(m.files) { case (acc, (p, fls)) =>
-        val rest = acc.getOrElse(p, Nil).filterNot(fls.toSet)
-        if (rest.isEmpty) acc - p else acc.updated(p, rest)
-      }
-      val stagedByPart = staged.groupBy(_._1)
-        .map { case (p, fls) => p -> fls.map(_._2).sorted }
-      // a rewritten LEGACY partition's rows route under the current
-      // layout — splice-append into possibly-untouched partitions
-      requireNoLegacyCollision(m, partCol, stagedByPart.keys,
-        stagedOld.keySet.filterNot(afterRemoval.contains))
-      val next = Manifest(
-        version,
-        afterRemoval ++ stagedByPart.map { case (p, fls) =>
-          p -> (afterRemoval.getOrElse(p, Nil) ++ fls).sorted },
-        (m.stats -- oldFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStatsC),
-        (m.blooms -- oldFiles) ++ stagedBloomsC,
-        m.dvs -- oldFiles,
-        m.schemaJson,
-        Some("OPTIMIZE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-      onBeforeOptimizeCommit()
-      if (tryCommit(fs, bp, next)) return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"optimize lost $maxRetries commit races on $base")
+    commitLoop(fs, bp, "OPTIMIZE", maxRetries) { (snap, version, attempt) =>
+      val m = snap.getOrElse(Manifest(0L, Map.empty))
+      requireCurrentLayout(m, partCol)
+      val targetBytes = optimizeTargetOf(m)
+      val canReuse = staged.nonEmpty && {
+        val fset = stagedOld.values.flatten.toSet
+        stagedOld.forall { case (p, fls) =>
+          val live = m.files.getOrElse(p, Nil).toSet
+          fls.forall(live)
+        } &&
+          m.dvs.filter { case (f, _) => fset(f) } == stagedDvs &&
+          m.colmap == stagedColmap && m.dropped == stagedDropped &&
+          m.schemaJson == stagedSchema && targetBytes == stagedTarget
+      }
+      if (!canReuse && !restage(m, targetBytes, attempt)) Done(0L)
+      else {
+        // commit against the LIVE manifest: remove exactly the files the
+        // rewrite read (a partition emptied of them drops its key —
+        // migration), keep any racer-appended files, add the staged ones
+        val oldFiles = stagedOld.values.flatten.toSeq
+        val afterRemoval = stagedOld.foldLeft(m.files) { case (acc, (p, fls)) =>
+          val rest = acc.getOrElse(p, Nil).filterNot(fls.toSet)
+          if (rest.isEmpty) acc - p else acc.updated(p, rest)
+        }
+        val stagedByPart = staged.groupBy(_._1)
+          .map { case (p, fls) => p -> fls.map(_._2).sorted }
+        // a rewritten LEGACY partition's rows route under the current
+        // layout — splice-append into possibly-untouched partitions
+        requireNoLegacyCollision(m, partCol, stagedByPart.keys,
+          stagedOld.keySet.filterNot(afterRemoval.contains))
+        val next = Manifest(
+          version,
+          afterRemoval ++ stagedByPart.map { case (p, fls) =>
+            p -> (afterRemoval.getOrElse(p, Nil) ++ fls).sorted },
+          (m.stats -- oldFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStatsC),
+          (m.blooms -- oldFiles) ++ stagedBloomsC,
+          m.dvs -- oldFiles,
+          m.schemaJson,
+          Some("OPTIMIZE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
+        onBeforeOptimizeCommit()
+        Publish(next, identity)
+      }
+    }
   }
 
   /** What a [[deleteWhere]]/[[updateWhere]] did: the committed version
@@ -3876,13 +3844,14 @@ object SnapshotLog {
     // cheaper than any DV.
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    val cdfOn = writeCdf || readManifest(fs, bp).exists(_.cdfEnabled)
+    val m0 = readManifest(fs, bp).getOrElse(return None)
+    val cdfOn = writeCdf || m0.cdfEnabled
     // row ids are read-side identity metadata, never a data column: on
-    // row-tracked tables read() exposes [[RowIdCol]], and every CDF
-    // feed below aligns to live0.schema — keeping the id here would
+    // row-tracked tables a snapshot read exposes [[RowIdCol]], and every
+    // CDF feed below aligns to live0.schema — keeping the id here would
     // leak an (always-null after align) identity column into the
     // delete feed, diverging from the insert/merge/replaceWhere feeds
-    val live0 = read(spark, base).map(_.drop(RowIdCol)).getOrElse(return None)
+    val live0 = readSnapshot(spark, bp, m0, None).drop(RowIdCol)
     val pcs = partColsOf(partCol)
     lazy val partTypes = pcs.map(c =>
       live0.schema(live0.schema.fieldIndex(c)).dataType)
@@ -3934,11 +3903,8 @@ object SnapshotLog {
       parts.flatMap(p => m.files.getOrElse(p, Nil))
         .map(f => new Path(bp, f).toString)
 
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return None)
+    commitExisting(fs, bp, "DELETE", maxRetries, Some(m0)) { (m, version, attempt) =>
       requireCurrentLayout(m, partCol)
-      val version = nextVersion(fs, bp, m.version)
       // mixed-layout tables (partition evolution) skip the
       // partition-metadata fast path: legacy keys do not decompose
       // under the current layout, and matching rows inside legacy
@@ -3958,24 +3924,18 @@ object SnapshotLog {
               partKeyDecompose(col("__pv"), pcs, partTypes): _*)
           matchRows(pdf).select("__pv").collect().map(_.getString(0)).toSeq.sorted
         }
-        if (dropped.isEmpty)
-          return Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil))
         val gone = dropped.flatMap(p => m.files.getOrElse(p, Nil))
-        if (tryCommit(fs, bp,
-            Manifest(version, m.files -- dropped, m.stats -- gone,
-              m.blooms -- gone, m.dvs -- gone, m.schemaJson,
-              Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped))) {
-          if (cdfOn) {
-            val pre = align(
-              readFiles(spark, bp, m,
-                dropped.flatMap(p => m.files.getOrElse(p, Nil))),
-              live0.schema)
-            commitCdfVersion(fs, bp, version,
-              pre.withColumn("change_type", lit("delete"))
-                .withColumn("_commit_version", lit(version)))
-          }
-          return Some(DmlOutcome(version, metadataOnly = true, dropped, Nil))
-        }
+        if (dropped.isEmpty)
+          Done(Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil)))
+        else Publish(Manifest(version, m.files -- dropped, m.stats -- gone,
+            m.blooms -- gone, m.dvs -- gone, m.schemaJson,
+            Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped), { v =>
+          if (cdfOn) commitCdfVersion(fs, bp, v,
+            align(readFiles(spark, bp, m, gone), live0.schema)
+              .withColumn("change_type", lit("delete"))
+              .withColumn("_commit_version", lit(v)))
+          Some(DmlOutcome(v, metadataOnly = true, dropped, Nil))
+        })
       } else if (deletionVectors) {
         // ---- merge-on-read row delete: commit DVs, rewrite nothing --
         val all = m.allFiles
@@ -4003,82 +3963,80 @@ object SnapshotLog {
           val newCounts = matchedPos.groupBy("__f").count()
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
           if (newCounts.isEmpty)
-            return Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil))
-          // inline vs sidecar per file: a file stays inline while its
-          // TOTAL positions fit [[DvInlineMax]], its existing DV is not
-          // already a sidecar, and a global driver budget holds —
-          // everything else goes through the fully distributed sidecar
-          // write (an arbitrarily large delete never lands positions on
-          // the driver)
-          var budget = dvInlineMax * 10L
-          val decided = newCounts.keys.toSeq.sorted.map { bn =>
-            val rel0 = bnToRel(bn)
-            val old = m.dvs.get(rel0)
-            val total = newCounts(bn) + old.map(_.count).getOrElse(0L)
-            val inlineOk = total <= dvInlineMax &&
-              old.forall(_.sidecarRel.isEmpty) && total <= budget
-            if (inlineOk) budget -= total
-            (bn, rel0, old, total, inlineOk)
-          }
-          val inlineSet = decided.collect { case (bn, _, _, _, true) => bn }.toSet
-          val newDvs = collection.mutable.Map.empty[String, Dv]
-          if (inlineSet.nonEmpty) {
-            val fresh = matchedPos
-              .filter(col("__f").isin(inlineSet.toSeq: _*))
-              .collect().groupBy(_.getString(0))
-              .map { case (bn, rows) => bn -> rows.map(_.getLong(1)) }
-            decided.foreach { case (bn, rel0, old, total, inlineOk) =>
-              if (inlineOk) {
-                val merged = (old.flatMap(_.inlineB64).map(decodePositions)
-                  .getOrElse(Array.empty[Long]) ++ fresh.getOrElse(bn, Array.empty[Long]))
-                  .sorted
-                newDvs(rel0) = Dv(total, Some(encodePositions(merged)), None)
+            Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
+          else {
+            // inline vs sidecar per file: a file stays inline while its
+            // TOTAL positions fit [[DvInlineMax]], its existing DV is not
+            // already a sidecar, and a global driver budget holds —
+            // everything else goes through the fully distributed sidecar
+            // write (an arbitrarily large delete never lands positions on
+            // the driver)
+            var budget = dvInlineMax * 10L
+            val decided = newCounts.keys.toSeq.sorted.map { bn =>
+              val rel0 = bnToRel(bn)
+              val old = m.dvs.get(rel0)
+              val total = newCounts(bn) + old.map(_.count).getOrElse(0L)
+              val inlineOk = total <= dvInlineMax &&
+                old.forall(_.sidecarRel.isEmpty) && total <= budget
+              if (inlineOk) budget -= total
+              (bn, rel0, old, total, inlineOk)
+            }
+            val inlineSet = decided.collect { case (bn, _, _, _, true) => bn }.toSet
+            val newDvs = collection.mutable.Map.empty[String, Dv]
+            if (inlineSet.nonEmpty) {
+              val fresh = matchedPos
+                .filter(col("__f").isin(inlineSet.toSeq: _*))
+                .collect().groupBy(_.getString(0))
+                .map { case (bn, rows) => bn -> rows.map(_.getLong(1)) }
+              decided.foreach { case (bn, rel0, old, total, inlineOk) =>
+                if (inlineOk) {
+                  val merged = (old.flatMap(_.inlineB64).map(decodePositions)
+                    .getOrElse(Array.empty[Long]) ++ fresh.getOrElse(bn, Array.empty[Long]))
+                    .sorted
+                  newDvs(rel0) = Dv(total, Some(encodePositions(merged)), None)
+                }
               }
             }
-          }
-          val sidecarDecided = decided.filter(!_._5)
-          if (sidecarDecided.nonEmpty) {
-            import spark.implicits._
-            val scSet = sidecarDecided.map(_._1).toSet
-            // old positions of sidecar-bound files union in distributedly
-            val olds = sidecarDecided.flatMap { case (bn, rel0, old, _, _) =>
-              old.map {
-                case Dv(_, Some(b64), _) =>
-                  decodePositions(b64).toSeq.map(bn -> _).toDF("__f", "__pos")
-                case Dv(_, None, Some(sRel)) =>
-                  spark.read.parquet(new Path(bp, sRel).toString)
-                    .select(lit(bn).as("__f"), col("pos").cast("long").as("__pos"))
-                case _ => sys.error("DV without payload")
+            val sidecarDecided = decided.filter(!_._5)
+            if (sidecarDecided.nonEmpty) {
+              import spark.implicits._
+              val scSet = sidecarDecided.map(_._1).toSet
+              // old positions of sidecar-bound files union in distributedly
+              val olds = sidecarDecided.flatMap { case (bn, rel0, old, _, _) =>
+                old.map {
+                  case Dv(_, Some(b64), _) =>
+                    decodePositions(b64).toSeq.map(bn -> _).toDF("__f", "__pos")
+                  case Dv(_, None, Some(sRel)) =>
+                    spark.read.parquet(new Path(bp, sRel).toString)
+                      .select(lit(bn).as("__f"), col("pos").cast("long").as("__pos"))
+                  case _ => sys.error("DV without payload")
+                }
+              }
+              val allPos = (matchedPos.filter(col("__f").isin(scSet.toSeq: _*))
+                +: olds).reduce(_ unionByName _)
+              val scRel = s"_dv/d$version-a$attempt-${
+                java.util.UUID.randomUUID.toString.take(8)}"
+              allPos.select(col("__f"), col("__pos").as("pos"))
+                .repartition(col("__f"))
+                .write.partitionBy("__f").parquet(new Path(bp, scRel).toString)
+              // dir names carry the Hive-ESCAPED dv key ('/' '=' '%'
+              // percent-encode): list and decode rather than re-derive
+              val dirByKey = fs.listStatus(new Path(bp, scRel)).toSeq
+                .filter(d => d.isDirectory && d.getPath.getName.startsWith("__f="))
+                .map(d => dec(d.getPath.getName.stripPrefix("__f=")) ->
+                  s"$scRel/${d.getPath.getName}")
+                .toMap
+              sidecarDecided.foreach { case (bn, rel0, _, total, _) =>
+                newDvs(rel0) = Dv(total, None, Some(dirByKey(bn)))
               }
             }
-            val allPos = (matchedPos.filter(col("__f").isin(scSet.toSeq: _*))
-              +: olds).reduce(_ unionByName _)
-            val scRel = s"_dv/d$version-a$attempt-${
-              java.util.UUID.randomUUID.toString.take(8)}"
-            allPos.select(col("__f"), col("__pos").as("pos"))
-              .repartition(col("__f"))
-              .write.partitionBy("__f").parquet(new Path(bp, scRel).toString)
-            // dir names carry the Hive-ESCAPED dv key ('/' '=' '%'
-            // percent-encode): list and decode rather than re-derive
-            val dirByKey = fs.listStatus(new Path(bp, scRel)).toSeq
-              .filter(d => d.isDirectory && d.getPath.getName.startsWith("__f="))
-              .map(d => dec(d.getPath.getName.stripPrefix("__f=")) ->
-                s"$scRel/${d.getPath.getName}")
-              .toMap
-            sidecarDecided.foreach { case (bn, rel0, _, total, _) =>
-              newDvs(rel0) = Dv(total, None, Some(dirByKey(bn)))
-            }
-          }
-          if (tryCommit(fs, bp,
-              m.copy(version = version, dvs = m.dvs ++ newDvs,
-                op = Some("DELETE_DV")))) {
-            if (cdfOn) {
-              val feed = align(matchRows(liveRows), live0.schema)
-              commitCdfVersion(fs, bp, version,
-                feed.withColumn("change_type", lit("delete"))
-                  .withColumn("_commit_version", lit(version)))
-            }
-            return Some(DmlOutcome(version, metadataOnly = false, Nil, Nil))
+            Publish(m.copy(dvs = m.dvs ++ newDvs, op = Some("DELETE_DV")), { v =>
+              if (cdfOn) commitCdfVersion(fs, bp, v,
+                align(matchRows(liveRows), live0.schema)
+                  .withColumn("change_type", lit("delete"))
+                  .withColumn("_commit_version", lit(v)))
+              Some(DmlOutcome(v, metadataOnly = false, Nil, Nil))
+            })
           }
         } finally matchedPos.unpersist()
       } else {
@@ -4088,55 +4046,53 @@ object SnapshotLog {
         // row ids are read-side identity metadata — a rewrite that let
         // them into the staged frame (or a legacy schema backfill)
         // would turn them into a data column
-        val lv = readVersion(spark, base, m.version)
-          .map(_.drop(RowIdCol)).getOrElse(return None)
+        val lv = readSnapshot(spark, bp, m, None).drop(RowIdCol)
         // affected partitions under EVERY live layout: a matching row
         // in a legacy (pre-evolution) partition is keyed under its own
         // layout — the current-layout key alone would miss it
         val matched = matchedKeysAllLayouts(matchRows(lv), m, partCol)
         if (matched.isEmpty)
-          return Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil))
-        val preFiles = matched.flatMap(p => m.files.getOrElse(p, Nil))
-        val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
-        val keep = keepRows(pre)
-        val rel =
-          s"data/d$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        stagePartitioned(
-          toPhysical(keep.withColumn("__p", partRoute(partCol)), m),
-          m, fs, dir)
-        val staged = listStaged(fs, dir, rel)
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        // survivors of a rewritten LEGACY partition restaged under the
-        // current layout (migration) — splice-append, never replace an
-        // untouched partition's entry
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys, matched.toSet)
-        val stagedStats =
-          if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, matched, stagedByPart),
-          (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          m.blooms -- preFiles,
-          m.dvs -- preFiles,
-          m.schemaJson,
-          Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-        if (tryCommit(fs, bp, next)) {
-          if (cdfOn) commitCdfVersion(fs, bp, version,
-            matchRows(pre)
-              .withColumn("change_type", lit("delete"))
-              .withColumn("_commit_version", lit(version)))
-          val stagedParts = staged.map(_._1).toSet
-          return Some(DmlOutcome(version, metadataOnly = false,
-            matched.filterNot(stagedParts), matched.filter(stagedParts)))
+          Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
+        else {
+          val preFiles = matched.flatMap(p => m.files.getOrElse(p, Nil))
+          val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
+          val keep = keepRows(pre)
+          val rel =
+            s"data/d$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+          val dir = new Path(bp, rel)
+          stagePartitioned(
+            toPhysical(keep.withColumn("__p", partRoute(partCol)), m),
+            m, fs, dir)
+          val staged = listStaged(fs, dir, rel)
+          val stagedByPart = staged.groupBy(_._1)
+            .map { case (p, fls) => p -> fls.map(_._2).sorted }
+          // survivors of a rewritten LEGACY partition restaged under the
+          // current layout (migration) — splice-append, never replace an
+          // untouched partition's entry
+          requireNoLegacyCollision(m, partCol, stagedByPart.keys, matched.toSet)
+          val stagedStats =
+            if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
+            else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+          val next = Manifest(
+            version,
+            spliceStaged(m.files, matched, stagedByPart),
+            (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
+            m.blooms -- preFiles,
+            m.dvs -- preFiles,
+            m.schemaJson,
+            Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
+          Publish(next, { v =>
+            if (cdfOn) commitCdfVersion(fs, bp, v,
+              matchRows(pre)
+                .withColumn("change_type", lit("delete"))
+                .withColumn("_commit_version", lit(v)))
+            val stagedParts = staged.map(_._1).toSet
+            Some(DmlOutcome(v, metadataOnly = false,
+              matched.filterNot(stagedParts), matched.filter(stagedParts)))
+          })
         }
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"deleteWhere lost $maxRetries commit races on $base")
   }
 
   /** REPLACE WHERE (Delta's `INSERT INTO … REPLACE WHERE` /
@@ -4168,7 +4124,8 @@ object SnapshotLog {
       txn: Option[(String, Long)] = None): Option[DmlOutcome] = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    val cdfOn = writeCdf || readManifest(fs, bp).exists(_.cdfEnabled)
+    val m0 = readManifest(fs, bp)
+    val cdfOn = writeCdf || m0.exists(_.cdfEnabled)
     // conform, not cast: tolerates nullability-only differences and
     // struct-arity gaps from nested add-column evolution. The USER
     // BATCH aligns strict: an extra nested subfield the target schema
@@ -4187,90 +4144,84 @@ object SnapshotLog {
           "predicate — the replaced region and the insert would diverge")
       val batchParts = batch.select(partRoute(partCol))
         .distinct().collect().map(_.getString(0)).toSeq
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val m = readManifest(fs, bp).getOrElse(return None)
+      if (m0.isEmpty) return None
+      commitExisting(fs, bp, "REPLACE WHERE", maxRetries, m0) { (m, version, attempt) =>
         requireCurrentLayout(m, partCol)
         // idempotent-writer gate (appendBatch's contract): a replayed
         // (appId, version) — a retried dynamic-overwrite backfill —
         // reports the version that already holds it instead of
         // replacing the same region twice
-        txn.foreach { case (a, v) =>
-          if (m.txns.get(a).exists(_ >= v))
-            return Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil))
+        if (txn.exists { case (a, v) => m.txns.get(a).exists(_ >= v) })
+          Done(Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil)))
+        else {
+          val lv = readSnapshot(spark, bp, m, None).drop(RowIdCol)
+          // matching rows in legacy (pre-evolution) partitions key under
+          // their own layout — compute the affected set under every one
+          val matchedParts = matchedKeysAllLayouts(
+            lv.filter(coalesce(predicate, lit(false))), m, partCol)
+          val affected = (matchedParts ++ batchParts).distinct.sorted
+          val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
+          // survivors keep their row ids through the rewrite (tracked
+          // tables): read with ids, carry as the materialized column
+          val preAll =
+            if (preFiles.isEmpty) lv.limit(0)
+            else if (m.rowTracking) readFilesWithRowIds(spark, bp, m, preFiles)
+            else readFiles(spark, bp, m, preFiles)
+          val mat =
+            if (!m.rowTracking) Nil
+            else Seq((if (preAll.columns.contains(RowIdCol)) col(RowIdCol)
+              else lit(null).cast("long")).as(MatRowIdCol))
+          val keepBase = preAll.filter(!coalesce(predicate, lit(false)))
+          val keepM =
+            if (mat.isEmpty) align(keepBase, lv.schema)
+            else
+              // align + carry the id column (align alone would drop it)
+              keepBase.select(
+                lv.schema.fields.toSeq.map(f => conformTo(keepBase, f)) ++
+                  mat: _*)
+          val insM = alignBatch(batch, lv.schema)
+            .select(lv.schema.fieldNames.map(col).toSeq ++
+              (if (mat.isEmpty) Nil
+               else Seq(lit(null).cast("long").as(MatRowIdCol))): _*)
+          val out = keepM.unionByName(insM)
+          val rel =
+            s"data/r$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+          val dir = new Path(bp, rel)
+          stagePartitioned(
+            toPhysical(out.withColumn("__p", partRoute(partCol)), m),
+            m, fs, dir)
+          val staged = listStaged(fs, dir, rel)
+          val stagedByPart = staged.groupBy(_._1)
+            .map { case (p, fls) => p -> fls.map(_._2).sorted }
+          requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
+          val stagedStats =
+            if (statsCols.isEmpty || staged.isEmpty)
+              Map.empty[String, Map[String, (String, String)]]
+            else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+          val next = Manifest(
+            version,
+            spliceStaged(m.files, affected, stagedByPart),
+            (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
+            m.blooms -- preFiles,
+            m.dvs -- preFiles,
+            m.schemaJson,
+            Some("REPLACE_WHERE"), m.constraints, m.txns ++ txn, m.props,
+            m.colmap, m.dropped)
+          Publish(next, { v =>
+            if (cdfOn) {
+              val del = align(preAll.filter(coalesce(predicate, lit(false))), lv.schema)
+                .withColumn("change_type", lit("delete"))
+              val ins = alignBatch(batch, lv.schema)
+                .withColumn("change_type", lit("insert"))
+              commitCdfVersion(fs, bp, v,
+                del.unionByName(ins).withColumn("_commit_version", lit(v)))
+            }
+            val stagedParts = staged.map(_._1).toSet
+            Some(DmlOutcome(v, metadataOnly = false,
+              affected.filterNot(stagedParts), affected.filter(stagedParts)))
+          })
         }
-        val version = nextVersion(fs, bp, m.version)
-        val lv = readVersion(spark, base, m.version)
-          .map(_.drop(RowIdCol)).getOrElse(return None)
-        // matching rows in legacy (pre-evolution) partitions key under
-        // their own layout — compute the affected set under every one
-        val matchedParts = matchedKeysAllLayouts(
-          lv.filter(coalesce(predicate, lit(false))), m, partCol)
-        val affected = (matchedParts ++ batchParts).distinct.sorted
-        val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
-        // survivors keep their row ids through the rewrite (tracked
-        // tables): read with ids, carry as the materialized column
-        val preAll =
-          if (preFiles.isEmpty) lv.limit(0)
-          else if (m.rowTracking) readFilesWithRowIds(spark, bp, m, preFiles)
-          else readFiles(spark, bp, m, preFiles)
-        val mat =
-          if (!m.rowTracking) Nil
-          else Seq((if (preAll.columns.contains(RowIdCol)) col(RowIdCol)
-            else lit(null).cast("long")).as(MatRowIdCol))
-        val keepBase = preAll.filter(!coalesce(predicate, lit(false)))
-        val keepM =
-          if (mat.isEmpty) align(keepBase, lv.schema)
-          else
-            // align + carry the id column (align alone would drop it)
-            keepBase.select(
-              lv.schema.fields.toSeq.map(f => conformTo(keepBase, f)) ++
-                mat: _*)
-        val insM = alignBatch(batch, lv.schema)
-          .select(lv.schema.fieldNames.map(col).toSeq ++
-            (if (mat.isEmpty) Nil
-             else Seq(lit(null).cast("long").as(MatRowIdCol))): _*)
-        val out = keepM.unionByName(insM)
-        val rel =
-          s"data/r$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        stagePartitioned(
-          toPhysical(out.withColumn("__p", partRoute(partCol)), m),
-          m, fs, dir)
-        val staged = listStaged(fs, dir, rel)
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
-        val stagedStats =
-          if (statsCols.isEmpty || staged.isEmpty)
-            Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, affected, stagedByPart),
-          (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          m.blooms -- preFiles,
-          m.dvs -- preFiles,
-          m.schemaJson,
-          Some("REPLACE_WHERE"), m.constraints, m.txns ++ txn, m.props,
-          m.colmap, m.dropped)
-        if (tryCommit(fs, bp, next)) {
-          if (cdfOn) {
-            val del = align(preAll.filter(coalesce(predicate, lit(false))), lv.schema)
-              .withColumn("change_type", lit("delete"))
-            val ins = alignBatch(batch, lv.schema)
-              .withColumn("change_type", lit("insert"))
-            commitCdfVersion(fs, bp, version,
-              del.unionByName(ins).withColumn("_commit_version", lit(version)))
-          }
-          val stagedParts = staged.map(_._1).toSet
-          return Some(DmlOutcome(version, metadataOnly = false,
-            affected.filterNot(stagedParts), affected.filter(stagedParts)))
-        }
-        attempt += 1
       }
-      throw new IllegalStateException(
-        s"replaceWhere lost $maxRetries commit races on $base")
     } finally batch.unpersist()
   }
 
@@ -4308,18 +4259,20 @@ object SnapshotLog {
       matcher: Option[PlanPredicate] = None): Option[DmlOutcome] = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    val cdfOn = writeCdf || readManifest(fs, bp).exists(_.cdfEnabled)
+    val m0 = readManifest(fs, bp)
+    val cdfOn = writeCdf || m0.exists(_.cdfEnabled)
     require(set.nonEmpty, "updateWhere needs at least one assignment")
     // GENERATED ALWAYS AS IDENTITY columns may not be assigned (Delta
     // refuses too) — an arbitrary stored value would collide with a
     // future allocation; BY DEFAULT identity accepts the assignment
-    readManifest(fs, bp).foreach { mm =>
+    m0.foreach { mm =>
       mm.identityCols.foreach { case (c, _) =>
         require(!set.keys.exists(_.equalsIgnoreCase(c)) ||
             mm.identityAllowsExplicit(c),
           s"cannot UPDATE GENERATED ALWAYS AS IDENTITY column $c")
       }
     }
+    if (m0.isEmpty) return None
     def matchRows(df: DataFrame): DataFrame =
       matcher.map(_.matches(df)).getOrElse(df.filter(predicate))
     def keepRows(df: DataFrame): DataFrame =
@@ -4331,17 +4284,13 @@ object SnapshotLog {
     def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
       df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
 
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return None)
+    commitExisting(fs, bp, "UPDATE", maxRetries, m0) { (m, version, attempt) =>
       requireCurrentLayout(m, partCol)
       // generated PARTITION columns recompute below under the session
       // clock — enforce the stamped generation timezone (throws on
       // mismatch; the returned first-write stamp is append-path business)
       genTzStamp(spark, m.props, partCol)
-      val version = nextVersion(fs, bp, m.version)
-      val lv = readVersion(spark, base, m.version)
-        .map(_.drop(RowIdCol)).getOrElse(return None)
+      val lv = readSnapshot(spark, bp, m, None).drop(RowIdCol)
       val bad = set.keySet -- lv.columns.toSet
       require(bad.isEmpty, s"updateWhere assigns non-existent columns: $bad")
       // one column-pruned scan: source partitions of matching rows and
@@ -4389,73 +4338,72 @@ object SnapshotLog {
           (src ++ dst).distinct.sorted
         }
       if (affected.isEmpty)
-        return Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil))
-      val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
-      val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
-      val updated = postImage(matchRows(pre), Nil)
-      enforceConstraints(updated, m, base)
-      // a GENERATED column the statement SETs explicitly skips the
-      // recompute above — but the stored value must still satisfy its
-      // expression over the post-image, or UPDATE would break the
-      // invariant every insert/upsert validates (Delta validates or
-      // refuses explicit assignment; we validate). One aggregation
-      // pass, null-strict: SET g = NULL where the expression is
-      // non-null is a violation too.
-      val gensSet = generatedCols(m).filter { case (c, _) =>
-        set.keys.exists(_.equalsIgnoreCase(c)) }
-      if (gensSet.nonEmpty) {
-        val aggs = gensSet.map { case (c, sql) =>
-          sum(when(!(col(c) <=> expr(sql)), 1L).otherwise(0L)).as(s"__g_$c") }
-        val row0 = updated.agg(aggs.head, aggs.tail: _*).head
-        gensSet.zipWithIndex.foreach { case ((c, sql), i) =>
-          val bad = if (row0.isNullAt(i)) 0L else row0.getLong(i)
-          if (bad > 0) sys.error(
-            s"UPDATE sets GENERATED column $c to a value that differs " +
-              s"from ($sql) in $bad row(s)")
+        Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
+      else {
+        val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
+        val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
+        val updated = postImage(matchRows(pre), Nil)
+        enforceConstraints(updated, m, base)
+        // a GENERATED column the statement SETs explicitly skips the
+        // recompute above — but the stored value must still satisfy its
+        // expression over the post-image, or UPDATE would break the
+        // invariant every insert/upsert validates (Delta validates or
+        // refuses explicit assignment; we validate). One aggregation
+        // pass, null-strict: SET g = NULL where the expression is
+        // non-null is a violation too.
+        val gensSet = generatedCols(m).filter { case (c, _) =>
+          set.keys.exists(_.equalsIgnoreCase(c)) }
+        if (gensSet.nonEmpty) {
+          val aggs = gensSet.map { case (c, sql) =>
+            sum(when(!(col(c) <=> expr(sql)), 1L).otherwise(0L)).as(s"__g_$c") }
+          val row0 = updated.agg(aggs.head, aggs.tail: _*).head
+          gensSet.zipWithIndex.foreach { case ((c, sql), i) =>
+            val bad = if (row0.isNullAt(i)) 0L else row0.getLong(i)
+            if (bad > 0) sys.error(
+              s"UPDATE sets GENERATED column $c to a value that differs " +
+                s"from ($sql) in $bad row(s)")
+          }
         }
+        val kept = keepRows(pre)
+        val rel =
+          s"data/u$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+        val dir = new Path(bp, rel)
+        stagePartitioned(
+          toPhysical(kept.unionByName(updated)
+            .withColumn("__p", partRoute(partCol)), m),
+          m, fs, dir)
+        val staged = listStaged(fs, dir, rel)
+        val stagedByPart = staged.groupBy(_._1)
+          .map { case (p, fls) => p -> fls.map(_._2).sorted }
+        requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
+        val stagedStats =
+          if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
+          else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+        val next = Manifest(
+          version,
+          spliceStaged(m.files, affected, stagedByPart),
+          (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
+          m.blooms -- preFiles,
+          m.dvs -- preFiles,
+          m.schemaJson,
+          Some("UPDATE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
+        Publish(next, { v =>
+          if (cdfOn) {
+            val cols = lv.columns.toSeq
+            val feed = matchRows(pre)
+              .withColumn("change_type", lit("update_preimage"))
+              .unionByName(updated
+                .withColumn("change_type", lit("update_postimage")))
+              .select((cols.map(col) :+ col("change_type")): _*)
+            commitCdfVersion(fs, bp, v,
+              feed.withColumn("_commit_version", lit(v)))
+          }
+          val stagedParts = staged.map(_._1).toSet
+          Some(DmlOutcome(v, metadataOnly = false,
+            affected.filterNot(stagedParts), affected.filter(stagedParts)))
+        })
       }
-      val kept = keepRows(pre)
-      val rel =
-        s"data/u$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-      val dir = new Path(bp, rel)
-      stagePartitioned(
-        toPhysical(kept.unionByName(updated)
-          .withColumn("__p", partRoute(partCol)), m),
-        m, fs, dir)
-      val staged = listStaged(fs, dir, rel)
-      val stagedByPart = staged.groupBy(_._1)
-        .map { case (p, fls) => p -> fls.map(_._2).sorted }
-      requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
-      val stagedStats =
-        if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-        else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-      val next = Manifest(
-        version,
-        spliceStaged(m.files, affected, stagedByPart),
-        (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-        m.blooms -- preFiles,
-        m.dvs -- preFiles,
-        m.schemaJson,
-        Some("UPDATE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-      if (tryCommit(fs, bp, next)) {
-        if (cdfOn) {
-          val cols = lv.columns.toSeq
-          val feed = matchRows(pre)
-            .withColumn("change_type", lit("update_preimage"))
-            .unionByName(updated
-              .withColumn("change_type", lit("update_postimage")))
-            .select((cols.map(col) :+ col("change_type")): _*)
-          commitCdfVersion(fs, bp, version,
-            feed.withColumn("_commit_version", lit(version)))
-        }
-        val stagedParts = staged.map(_._1).toSet
-        return Some(DmlOutcome(version, metadataOnly = false,
-          affected.filterNot(stagedParts), affected.filter(stagedParts)))
-      }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"updateWhere lost $maxRetries commit races on $base")
   }
 
   /** Change-data-feed read: every row-level change between two
@@ -5011,25 +4959,15 @@ object SnapshotLog {
       spark: SparkSession, base: String, name: String, checkSql: String,
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "ADD CONSTRAINT", maxRetries) { (m, _, _) =>
       require(!m.constraints.contains(name),
         s"constraint $name already exists on $base")
       val live = readSnapshot(spark, bp, m, None)
       enforceConstraints(live, m.copy(constraints = Map(name -> checkSql)),
         base)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          constraints = m.constraints + (name -> checkSql),
-          op = Some("ADD_CONSTRAINT"))))
-        return version
-      attempt += 1
+      Publish(m.copy(constraints = m.constraints + (name -> checkSql),
+        op = Some("ADD_CONSTRAINT")), identity)
     }
-    throw new IllegalStateException(
-      s"ADD CONSTRAINT lost $maxRetries commit races on $base")
   }
 
   /** CREATE TABLE (empty, schema-first): commit an empty snapshot
@@ -5062,11 +5000,7 @@ object SnapshotLog {
       spark: SparkSession, base: String, kvs: Map[String, String],
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "SET TBLPROPERTIES", maxRetries) { (m, _, _) =>
       // bucket spec can only be declared while the table has no data
       // files: existing files lack the `_NNNNN` bucket tag, and a
       // mixed layout would fail the bucketed scan outright. (UNSET is
@@ -5088,17 +5022,10 @@ object SnapshotLog {
         sys.error("IDENTITY columns must be declared while the table " +
           s"is empty — $base already has data whose values the " +
           "high-water mark cannot account for")
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          props = m.props ++ kvs, op = Some("SET_TBLPROPERTIES"))))
-        return version
-      attempt += 1
+      Publish(m.copy(props = m.props ++ kvs, op = Some("SET_TBLPROPERTIES")), identity)
     }
-    throw new IllegalStateException(
-      s"SET TBLPROPERTIES lost $maxRetries commit races on $base")
   }
 
-  /** UNSET table properties by key — metadata-only commit. */
   /** ADD COLUMNS — metadata-only schema evolution: the manifest's
     * schema header widens (new fields nullable, appended), ZERO data
     * files touched. Existing rows read the new columns as NULL
@@ -5112,11 +5039,7 @@ object SnapshotLog {
       newCols: org.apache.spark.sql.types.StructType,
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "ADD COLUMNS", maxRetries) { (m, version, _) =>
       val cur = m.schema.get
       val dups = newCols.fieldNames.filter(n =>
         cur.fieldNames.exists(_.equalsIgnoreCase(n)))
@@ -5124,18 +5047,12 @@ object SnapshotLog {
         s"column(s) already exist on $base: ${dups.mkString(", ")}")
       val evolved = org.apache.spark.sql.types.StructType(
         cur.fields ++ newCols.fields.map(_.copy(nullable = true)))
-      val version = nextVersion(fs, bp, m.version)
       val freshMap = newCols.fieldNames.toSeq
         .filter(n => m.taintedPhys.contains(n))
         .map(n => n -> s"${n}__c$version").toMap
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(evolved.json), op = Some("ADD_COLUMNS"),
-          colmap = m.colmap ++ freshMap)))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(evolved.json), op = Some("ADD_COLUMNS"),
+        colmap = m.colmap ++ freshMap), identity)
     }
-    throw new IllegalStateException(
-      s"ADD COLUMNS lost $maxRetries commit races on $base")
   }
 
   /** ADD a NESTED field — `ALTER TABLE t ADD COLUMNS (s.x INT)`:
@@ -5156,11 +5073,7 @@ object SnapshotLog {
     require(path.size >= 2, "addNestedColumn needs a nested path " +
       "(parent.field); use addColumns for top-level columns")
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "ADD COLUMNS", maxRetries) { (m, version, _) =>
       val cur = m.schema.get
       def addAt(st: StructType, p: Seq[String]): StructType = p match {
         case Seq(leaf) =>
@@ -5180,7 +5093,6 @@ object SnapshotLog {
           }
       }
       val evolved = addAt(cur, path)
-      val version = nextVersion(fs, bp, m.version)
       // resurrection-proof physical slot: a tainted identity name maps
       // to a fresh physical name within the parent struct
       val parentLog = path.init.mkString(".")
@@ -5189,14 +5101,9 @@ object SnapshotLog {
         if (scopeTainted(m, parentLog, path.last))
           Map(leafLog -> s"${path.last}__c$version")
         else Map.empty[String, String]
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(evolved.json), op = Some("ADD_COLUMNS"),
-          colmap = m.colmap ++ freshMap)))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(evolved.json), op = Some("ADD_COLUMNS"),
+        colmap = m.colmap ++ freshMap), identity)
     }
-    throw new IllegalStateException(
-      s"ADD COLUMNS lost $maxRetries commit races on $base")
   }
 
   /** RENAME a NESTED field (`meta.name → meta.nm`) as a METADATA-ONLY
@@ -5217,11 +5124,7 @@ object SnapshotLog {
       "(parent.field); use renameColumn for top-level columns")
     require(!to.contains('.') && to.nonEmpty, s"invalid field name '$to'")
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "nested RENAME COLUMN", maxRetries) { (m, _, _) =>
       val cur = m.schema.get
       constraintsReferencing(m, path.head).foreach(n => sys.error(
         s"constraint $n references ${path.head}; drop it first"))
@@ -5260,15 +5163,9 @@ object SnapshotLog {
       val colmap =
         if (physLeaf == to) rekeyed - newLog
         else rekeyed + (newLog -> physLeaf)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("RENAME_COLUMN"), colmap = colmap)))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(StructTypeNullable(evolved)),
+        op = Some("RENAME_COLUMN"), colmap = colmap), identity)
     }
-    throw new IllegalStateException(
-      s"nested RENAME COLUMN lost $maxRetries commit races on $base")
   }
 
   /** DROP a NESTED field as a METADATA-ONLY commit: the logical schema
@@ -5286,11 +5183,7 @@ object SnapshotLog {
     require(path.size >= 2, "dropNestedColumn needs a nested path " +
       "(parent.field); use dropColumn for top-level columns")
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "nested DROP COLUMN", maxRetries) { (m, _, _) =>
       val cur = m.schema.get
       constraintsReferencing(m, path.head).foreach(n => sys.error(
         s"constraint $n references ${path.head}; drop it first"))
@@ -5320,35 +5213,20 @@ object SnapshotLog {
       // the dropped subtree's own mappings die with it
       val colmap = m.colmap.filterNot { case (k, _) =>
         k == logPath || k.startsWith(logPath + ".") }
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("DROP_COLUMN"), colmap = colmap,
-          dropped = m.dropped + physPath)))
-        return version
-      attempt += 1
+      Publish(m.copy(schemaJson = Some(StructTypeNullable(evolved)),
+        op = Some("DROP_COLUMN"), colmap = colmap,
+        dropped = m.dropped + physPath), identity)
     }
-    throw new IllegalStateException(
-      s"nested DROP COLUMN lost $maxRetries commit races on $base")
   }
 
+  /** UNSET table properties by key — metadata-only commit. */
   def unsetProperties(
       spark: SparkSession, base: String, keys: Seq[String],
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          props = m.props -- keys, op = Some("UNSET_TBLPROPERTIES"))))
-        return version
-      attempt += 1
+    commitExisting(fsFor(spark, bp), bp, "UNSET TBLPROPERTIES", maxRetries) { (m, _, _) =>
+      Publish(m.copy(props = m.props -- keys, op = Some("UNSET_TBLPROPERTIES")), identity)
     }
-    throw new IllegalStateException(
-      s"UNSET TBLPROPERTIES lost $maxRetries commit races on $base")
   }
 
   /** DROP a named CHECK constraint — metadata-only commit. */
@@ -5356,22 +5234,12 @@ object SnapshotLog {
       spark: SparkSession, base: String, name: String,
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    commitExisting(fsFor(spark, bp), bp, "DROP CONSTRAINT", maxRetries) { (m, _, _) =>
       require(m.constraints.contains(name),
         s"no constraint named $name on $base")
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          constraints = m.constraints - name,
-          op = Some("DROP_CONSTRAINT"))))
-        return version
-      attempt += 1
+      Publish(m.copy(constraints = m.constraints - name,
+        op = Some("DROP_CONSTRAINT")), identity)
     }
-    throw new IllegalStateException(
-      s"DROP CONSTRAINT lost $maxRetries commit races on $base")
   }
 
   /** RESTORE: roll the table back to committed version `toVersion` by
@@ -5390,27 +5258,20 @@ object SnapshotLog {
     val target = readManifestAt(fs, bp, toVersion).getOrElse(
       sys.error(s"RESTORE target version $toVersion does not exist " +
         s"(expired or never committed) on $base"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
-      if (cur.version == toVersion) return toVersion // already there
-      val version = nextVersion(fs, bp, cur.version)
-      // txn watermarks must NEVER move backwards (a rolled-back
-      // watermark would make a restarting stream re-apply batches the
-      // table already absorbed) — merge key-wise max with the current
-      // state instead of restoring the old map verbatim
-      val txns = (cur.txns.keySet ++ target.txns.keySet).iterator.map { a =>
-        a -> math.max(cur.txns.getOrElse(a, Long.MinValue),
-          target.txns.getOrElse(a, Long.MinValue))
-      }.toMap
-      if (tryCommit(fs, bp,
-          target.copy(version = version, op = Some("RESTORE"), txns = txns)))
-        return version
-      attempt += 1
+    commitExisting(fs, bp, "RESTORE", maxRetries) { (cur, _, _) =>
+      if (cur.version == toVersion) Done(toVersion) // already there
+      else {
+        // txn watermarks must NEVER move backwards (a rolled-back
+        // watermark would make a restarting stream re-apply batches the
+        // table already absorbed) — merge key-wise max with the current
+        // state instead of restoring the old map verbatim
+        val txns = (cur.txns.keySet ++ target.txns.keySet).iterator.map { a =>
+          a -> math.max(cur.txns.getOrElse(a, Long.MinValue),
+            target.txns.getOrElse(a, Long.MinValue))
+        }.toMap
+        Publish(target.copy(op = Some("RESTORE"), txns = txns), identity)
+      }
     }
-    throw new IllegalStateException(
-      s"RESTORE lost $maxRetries commit races on $base")
   }
 
   /** Expire every committed version older than the newest `keepLast`,

@@ -218,6 +218,10 @@ class CommitLogSource(
   private val bp = new Path(base)
   private def fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The committed versions, kept across polls: an idle trigger opens
+    * no manifest root, and one after k commits opens those k. */
+  private val log = new SnapshotLog.CommitTail(bp)
+
   /** Offset source: the CHANGE feed tails materialized `_cdf` versions;
     * the ROW feed tails COMMITTED MANIFEST versions directly, so it
     * works on tables that never enabled CDF (Delta's contract — the
@@ -225,13 +229,13 @@ class CommitLogSource(
     * CDF-less row feed silently deliver nothing forever). */
   private def feedVersions: Seq[Long] =
     if (changeFeed) SnapshotLog.cdfVersions(fs, bp)
-    else SnapshotLog.committedVersions(fs, bp)
+    else log.versions(fs)
 
   /** Version the initial snapshot pins to — resolved ONCE at source
     * construction (stream start). */
   private val snapshotV: Option[Long] =
     if (!initialSnapshot) None
-    else SnapshotLog.committedVersions(fs, bp).lastOption
+    else log.versions(fs).lastOption
 
   private def versionOf(o: Offset): Long = o match {
     case l: LongOffset => l.offset
@@ -376,7 +380,8 @@ class CommitLogSource(
           .drop(graft.sources.SnapshotLog.RowIdCol)
       } else None
     val lo = snapshotPart.fold(lo0)(_ => math.max(lo0, snapshotV.get))
-    val versions0 = feedVersions.filter(v => v > lo && v <= hi)
+    val feed = feedVersions
+    val versions0 = feed.filter(v => v > lo && v <= hi)
     val versions =
       if (changeFeed) versions0
       else {
@@ -413,13 +418,13 @@ class CommitLogSource(
         align(spark.read.option("mergeSchema", "true").parquet(dirs: _*))
       } else {
         // each append's rows are its manifest's file DELTA vs the
-        // previous COMMITTED version — works with or without CDF. Each
-        // manifest is read once: consecutive versions share theirs
-        val committed = SnapshotLog.committedVersions(fs, bp)
+        // previous COMMITTED version (the row feed's own versions) —
+        // works with or without CDF. Each manifest is read once:
+        // consecutive versions share theirs
         val held = collection.mutable.Map.empty[Long, Option[SnapshotLog.Manifest]]
         def at(v: Long) = held.getOrElseUpdate(v, SnapshotLog.readManifestAt(fs, bp, v))
         versions.map { v =>
-          val prev = committed.filter(_ < v).lastOption.flatMap(at)
+          val prev = feed.filter(_ < v).lastOption.flatMap(at)
           at(v).fold(empty)(m => align(SnapshotLog.appendedRows(spark, base, prev, m)))
         }.reduce(_ unionByName _)
       }

@@ -10,27 +10,41 @@ import org.apache.hadoop.fs.{FSDataInputStream, FilterFileSystem, Path, RawLocal
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
 /** The local file system under the `rootcount` scheme, recording
-  * every open of a commit-log root (`_log/v<version>.txt`). */
+  * every open of a commit-log root (`_log/v<version>.txt`). It can also
+  * lose publishes: while [[RootOpenCountingFs.losePublishes]] has
+  * losses left, a rename onto a root fails as if another writer had
+  * claimed that version first. */
 class RootOpenCountingFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = URI.create("rootcount:///")
 }) {
+  private def isRoot(f: Path): Boolean =
+    f.getParent != null && f.getParent.getName == "_log" &&
+      f.getName.matches("v\\d+\\.txt")
+
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    if (f.getParent != null && f.getParent.getName == "_log" &&
-        f.getName.matches("v\\d+\\.txt"))
-      RootOpenCountingFs.opens.add(f.getName)
+    if (isRoot(f)) RootOpenCountingFs.opens.add(f.getName)
     super.open(f, bufferSize)
   }
+
+  override def rename(src: Path, dst: Path): Boolean =
+    if (isRoot(dst) && RootOpenCountingFs.losses.getAndUpdate(n => math.max(n - 1, 0)) > 0)
+      false
+    else super.rename(src, dst)
 }
 
 object RootOpenCountingFs {
   val opens = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private[sources] val losses = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The next `n` publishes onto a root lose their race. */
+  def losePublishes(n: Int): Unit = losses.set(n)
 
   /** Root name → times `body` opened it. */
   def counted(body: => Any): Map[String, Int] = {
@@ -730,10 +744,14 @@ class SnapshotLogSpec extends SparkSpec {
   }
 
   test("every committing entry point records #schema, #ts, #op and per-file __bytes") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.rootcount.impl", classOf[RootOpenCountingFs].getName)
     val root = Files.createTempDirectory("graft_writer_inv").toString
     val base = s"$root/tbl"
     val bp = new Path(base)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the same table through the counting scheme, which can lose publishes
+    val cbase = s"rootcount://$base"
     def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.5, s"d${i % 3}"))
       .toDF("id", "value", "day")
     var last = 0L
@@ -753,41 +771,64 @@ class SnapshotLogSpec extends SparkSpec {
         m.stats.get(f).exists(_.contains(SnapshotLog.ByteSizeKey)))
       assert(sizeless.isEmpty, s"$what: v$v files lack __bytes: $sizeless")
     }
+    // a retrying entry point, called through the counting scheme with
+    // `maxRetries = n`: n lost races exhaust it (it throws and publishes
+    // nothing); one lost race is retried into exactly one new version
+    def lostRaces = SnapshotLog.commitAttempts.get() - SnapshotLog.commitWins.get()
+    def retried(op: String, what: String, n: Int = 2)(call: Int => Any): Unit = {
+      RootOpenCountingFs.losePublishes(n)
+      val e = intercept[IllegalStateException](call(n))
+      assert(e.getMessage == s"$op lost $n commit races on ${new Path(cbase)}",
+        s"$what: ${e.getMessage}")
+      assert(RootOpenCountingFs.losses.get == 0, s"$what: made fewer than $n attempts")
+      assert(SnapshotLog.currentVersion(fs, bp) == last,
+        s"$what published a version after losing every race")
+      val lost0 = lostRaces
+      RootOpenCountingFs.losePublishes(1)
+      call(5)
+      assert(RootOpenCountingFs.losses.get == 0, s"$what never published")
+      assert(lostRaces - lost0 == 1, s"$what: one lost race, one retry")
+      assert(SnapshotLog.currentVersion(fs, bp) == last + 1,
+        s"$what must commit exactly version ${last + 1}")
+      committed(what)
+    }
 
-    SnapshotLog.appendBatch(spark, base, rows(1 to 30), "day", batchId = 1)
-    committed("append")
-    SnapshotLog.appendBatch(spark, base, rows(1 to 60), "day", batchId = 2,
-      overwrite = true)
-    committed("overwrite")
-    SnapshotLog.upsertBatch(spark, base, rows(50 to 70), "id", "value", "day",
-      batchId = 3)
-    committed("upsert (single key)")
-    SnapshotLog.upsertBatch(spark, base, rows(65 to 80), Seq("id"), "value",
-      "day", batchId = 4)
-    committed("upsert (keys)")
-    SnapshotLog.upsertBatch(spark, base, rows(1 to 10)
-      .withColumn("op", when(col("id") % 2 === 0, "D").otherwise("U")),
-      Seq("id"), "value", "day", batchId = 5, opCol = Some("op"))
-    committed("upsert (CDC)")
-    SnapshotLog.deleteWhere(spark, base, col("id") === 11L, "day")
-    committed("delete (rewrite)")
-    SnapshotLog.deleteWhere(spark, base, col("id") === 12L, "day",
-      deletionVectors = true)
-    committed("delete (deletion vectors)")
-    assert(SnapshotLog.optimizeTable(spark, base, "day") > 0L)
-    committed("optimize")
-    assert(SnapshotLog.computeStats(spark, base, Seq("value")) > 0L)
-    committed("compute stats")
-    SnapshotLog.setProperties(spark, base, Map("owner" -> "ops"))
-    committed("set properties")
-    SnapshotLog.addColumns(spark, base, new StructType().add("note", StringType))
-    committed("add column")
-    SnapshotLog.renameColumn(spark, base, "note", "memo", Some("day"))
-    committed("rename column")
-    SnapshotLog.dropColumn(spark, base, "memo", Some("day"))
-    committed("drop column")
-    SnapshotLog.restoreTable(spark, base, 2L)
-    committed("restore")
+    retried("APPEND", "append")(n => SnapshotLog.appendBatch(
+      spark, cbase, rows(1 to 30), "day", batchId = 1, maxRetries = n))
+    retried("OVERWRITE", "overwrite")(n => SnapshotLog.appendBatch(
+      spark, cbase, rows(1 to 60), "day", batchId = 2, overwrite = true,
+      maxRetries = n))
+    // the 7-argument form retries its default 5 times
+    retried("UPSERT", "upsert (single key)", n = 5)(_ => SnapshotLog.upsertBatch(
+      spark, cbase, rows(50 to 70), "id", "value", "day", batchId = 3))
+    retried("UPSERT", "upsert (keys)")(n => SnapshotLog.upsertBatch(spark, cbase,
+      rows(65 to 80), Seq("id"), "value", "day", batchId = 4, maxRetries = n))
+    retried("UPSERT", "upsert (CDC)")(n => SnapshotLog.upsertBatch(spark, cbase,
+      rows(1 to 10).withColumn("op", when(col("id") % 2 === 0, "D").otherwise("U")),
+      Seq("id"), "value", "day", batchId = 5, maxRetries = n, opCol = Some("op")))
+    retried("DELETE", "delete (rewrite)")(n => SnapshotLog.deleteWhere(
+      spark, cbase, col("id") === 11L, "day", maxRetries = n))
+    retried("DELETE", "delete (deletion vectors)")(n => SnapshotLog.deleteWhere(
+      spark, cbase, col("id") === 12L, "day", maxRetries = n, deletionVectors = true))
+    retried("APPEND", "append (one more partition)")(n => SnapshotLog.appendBatch(
+      spark, cbase, Seq((500L, 1.0, "dx")).toDF("id", "value", "day"), "day",
+      batchId = 9, maxRetries = n))
+    retried("DELETE", "delete (partitions)")(n => SnapshotLog.deleteWhere(
+      spark, cbase, col("day") === "dx", "day", maxRetries = n))
+    retried("OPTIMIZE", "optimize")(n =>
+      assert(SnapshotLog.optimizeTable(spark, cbase, "day", maxRetries = n) > 0L))
+    retried("STATS", "compute stats")(n =>
+      assert(SnapshotLog.computeStats(spark, cbase, Seq("value"), maxRetries = n) > 0L))
+    retried("SET TBLPROPERTIES", "set properties")(n => SnapshotLog.setProperties(
+      spark, cbase, Map("owner" -> "ops"), maxRetries = n))
+    retried("ADD COLUMNS", "add column")(n => SnapshotLog.addColumns(
+      spark, cbase, new StructType().add("note", StringType), maxRetries = n))
+    retried("RENAME COLUMN", "rename column")(n => SnapshotLog.renameColumn(
+      spark, cbase, "note", "memo", Some("day"), maxRetries = n))
+    retried("DROP COLUMN", "drop column")(n => SnapshotLog.dropColumn(
+      spark, cbase, "memo", Some("day"), maxRetries = n))
+    retried("RESTORE", "restore")(n =>
+      SnapshotLog.restoreTable(spark, cbase, 2L, maxRetries = n))
     SnapshotLog.cloneTable(spark, base, s"$root/shallow")
     committed("shallow clone", s"$root/shallow")
     SnapshotLog.deepCloneTable(spark, base, s"$root/deep")
@@ -801,11 +842,64 @@ class SnapshotLogSpec extends SparkSpec {
     """)
     committed("SQL CREATE", s"$root/sql")
 
+    retried("REPLACE WHERE", "replace where")(n => SnapshotLog.replaceWhere(
+      spark, cbase, rows(3 to 9 by 3), col("day") === "d0", "day", maxRetries = n))
+    retried("UPDATE", "update")(n => SnapshotLog.updateWhere(spark, cbase,
+      col("id") === 4L, Map("value" -> lit(0.0)), "day", maxRetries = n))
+    retried("APPEND", "append (fragments d1)")(n => SnapshotLog.appendBatch(
+      spark, cbase, rows(61 to 70), "day", batchId = 6, maxRetries = n))
+    retried("COMPACT", "compact partition")(n =>
+      assert(SnapshotLog.compactPartition(spark, cbase, "d1", maxRetries = n) > 0L))
+    retried("BLOOMS", "build blooms")(n => assert(
+      SnapshotLog.buildBlooms(spark, cbase, Seq("id"), maxRetries = n) > 0L))
+    retried("ADD CONSTRAINT", "add constraint")(n => SnapshotLog.addConstraint(
+      spark, cbase, "pos", "id > 0", maxRetries = n))
+    retried("DROP CONSTRAINT", "drop constraint")(n => SnapshotLog.dropConstraint(
+      spark, cbase, "pos", maxRetries = n))
+    retried("SET TBLPROPERTIES", "declare layout")(n => SnapshotLog.setProperties(
+      spark, cbase, Map(SnapshotLog.PartColProp -> "day", "owner" -> "ops"),
+      maxRetries = n))
+    retried("REPARTITION", "repartition")(n =>
+      SnapshotLog.repartitionTable(spark, cbase, "value", maxRetries = n))
+    retried("REPARTITION", "repartition back")(n =>
+      SnapshotLog.repartitionTable(spark, cbase, "day", maxRetries = n))
+    retried("UNSET TBLPROPERTIES", "unset properties")(n =>
+      SnapshotLog.unsetProperties(spark, cbase, Seq("owner"), maxRetries = n))
+    retried("ADD COLUMNS", "add int column")(n => SnapshotLog.addColumns(
+      spark, cbase, new StructType().add("n", IntegerType), maxRetries = n))
+    retried("ALTER COLUMN TYPE", "widen column")(n => SnapshotLog.widenColumnType(
+      spark, cbase, "n", LongType, Some("day"), maxRetries = n))
+    retried("ADD COLUMNS", "add struct column")(n => SnapshotLog.addColumns(
+      spark, cbase, new StructType().add("meta", new StructType().add("a", StringType)),
+      maxRetries = n))
+    retried("ADD COLUMNS", "add nested column")(n => SnapshotLog.addNestedColumn(
+      spark, cbase, Seq("meta", "b"), StructField("b", IntegerType), maxRetries = n))
+    retried("nested RENAME COLUMN", "rename nested column")(n =>
+      SnapshotLog.renameNestedColumn(spark, cbase, Seq("meta", "b"), "c", maxRetries = n))
+    retried("nested DROP COLUMN", "drop nested column")(n =>
+      SnapshotLog.dropNestedColumn(spark, cbase, Seq("meta", "c"), maxRetries = n))
+    // an out-of-band deletion for FSCK to repair
+    val victim = SnapshotLog.readManifest(fs, bp).get.files("d2").head
+    assert(fs.delete(new Path(bp, victim), false))
+    retried("FSCK", "fsck repair")(n =>
+      assert(SnapshotLog.fsckRepair(spark, cbase, maxRetries = n) == Seq(victim)))
+    retried("TRUNCATE", "truncate")(n =>
+      SnapshotLog.truncateTable(spark, cbase, maxRetries = n))
+    // identity is declared on an empty table; BY DEFAULT explicit ids
+    // leave the mark behind until SYNC IDENTITY catches it up
+    retried("SET TBLPROPERTIES", "declare identity")(n => SnapshotLog.setProperties(
+      spark, cbase, Map(SnapshotLog.IdentityPrefix + "id" -> "1:1:bydefault"),
+      maxRetries = n))
+    retried("APPEND", "append (explicit ids)")(n => SnapshotLog.appendBatch(
+      spark, cbase, rows(100 to 105), "day", batchId = 7, maxRetries = n))
+    retried("SYNC IDENTITY", "sync identity")(n =>
+      assert(SnapshotLog.syncIdentity(spark, cbase, maxRetries = n) > 0L))
+
     // a batch whose column type the table cannot read is refused
     // before it could leave a manifest without one schema
     val e = intercept[IllegalArgumentException](SnapshotLog.appendBatch(
       spark, base, rows(90 to 91).withColumn("value", col("value").cast("string")),
-      "day", batchId = 6))
+      "day", batchId = 8))
     assert(e.getMessage.contains("value"), e.getMessage)
     assert(SnapshotLog.currentVersion(fs, bp) == last)
   }
@@ -839,10 +933,28 @@ class SnapshotLogSpec extends SparkSpec {
     assert(counted(assert(SnapshotLog.tryCommit(fs, bp,
       m.copy(version = 5L, op = Some("SET PROPERTIES"))))) == Map(root(4) -> 1),
       "tryCommit")
-    // ... and inside appendBatch, whose own two manifest reads (before
-    // the retry loop and at the attempt) come on top
-    assert(counted(SnapshotLog.appendBatch(spark, base, rows(50 until 60),
-      "day", batchId = 6)) == Map(root(5) -> 3), "appendBatch")
+    // ... and a retrying writer's single attempt reads it twice: once
+    // for the loop (the writer's own up-front read is reused as the
+    // first attempt's base) and once in tryCommit's gate
+    def oneAttempt(what: String)(body: => Any): Unit = {
+      val v = SnapshotLog.currentVersion(fs, bp)
+      assert(counted(body) == Map(root(v.toInt) -> 2), what)
+      assert(SnapshotLog.currentVersion(fs, bp) == v + 1, s"$what committed nothing")
+    }
+    oneAttempt("appendBatch")(SnapshotLog.appendBatch(spark, base,
+      rows(50 until 60), "day", batchId = 6))
     assert(SnapshotLog.read(spark, local).get.count() == 50)
+    oneAttempt("upsertBatch")(SnapshotLog.upsertBatch(spark, base,
+      rows(15 until 25), Seq("id"), "value", "day", batchId = 7))
+    oneAttempt("deleteWhere (rows)")(SnapshotLog.deleteWhere(spark, base,
+      col("id") === 30L, "day"))
+    oneAttempt("deleteWhere (deletion vectors)")(SnapshotLog.deleteWhere(spark, base,
+      col("id") === 31L, "day", deletionVectors = true))
+    // d0 held the 15 remaining multiples of 3 in 10..59; three replace them
+    oneAttempt("replaceWhere")(SnapshotLog.replaceWhere(spark, base,
+      rows(33 to 39 by 3), col("day") === "d0", "day"))
+    oneAttempt("updateWhere")(SnapshotLog.updateWhere(spark, base,
+      col("id") === 40L, Map("value" -> lit(0.0)), "day"))
+    assert(SnapshotLog.read(spark, local).get.count() == 36)
   }
 }

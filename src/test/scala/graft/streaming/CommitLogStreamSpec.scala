@@ -238,4 +238,37 @@ class CommitLogStreamSpec extends SparkSpec {
       s"a tiny byte cap admits one version per batch, got " +
         s"${byteSliced.map(_.size)}")
   }
+
+  test("a row-feed poll opens only the roots committed since the last poll") {
+    import graft.sources.RootOpenCountingFs.counted
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.rootcount.impl", classOf[graft.sources.RootOpenCountingFs].getName)
+    val local = Files.createTempDirectory("graft_clpoll").toString + "/tbl"
+    def append(b: Long): Unit = SnapshotLog.appendBatch(spark, local,
+      Seq((b, b, "a")).toDF("id", "v", "day"), "day", batchId = b)
+    (1L to 3L).foreach(append)
+    // the same table through the root-counting scheme
+    val src = new CommitLogSource(spark, s"rootcount://$local",
+      CommitLogStream.tableSchema(spark, local), changeFeed = false)
+    def poll(): (Option[Long], Int) = {
+      var off: Option[Long] = None
+      val opens = counted { off = src.getOffset.map(_.json.trim.toLong) }
+      (off, opens.values.sum)
+    }
+    assert(poll() == (Some(3L), 3), "the first poll classifies each root once")
+    assert(poll() == (Some(3L), 0), "an idle poll opens no root")
+    assert(poll() == (Some(3L), 0), "an idle poll opens no root")
+    (4L to 5L).foreach(append)
+    assert(poll() == (Some(5L), 2), "a poll after two commits opens those two")
+    assert(poll() == (Some(5L), 0), "an idle poll opens no root")
+
+    // expired versions leave the tail as they leave the log
+    val bp = new Path(local)
+    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tail = new SnapshotLog.CommitTail(bp)
+    assert(tail.versions(fs) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(SnapshotLog.expireVersions(spark, local, keepLast = 2) == Seq(1L, 2L, 3L))
+    assert(tail.versions(fs) == SnapshotLog.committedVersions(fs, bp))
+    assert(tail.versions(fs) == Seq(4L, 5L))
+  }
 }
