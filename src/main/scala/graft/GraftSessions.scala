@@ -7,7 +7,7 @@ object GraftSessions {
   /** The one session every entry point runs on: `local[n]` with n
     * shuffle partitions, where n is `SPARK_GRAFT_CPUS` when set and
     * every available core otherwise; UTC session time zone, no UI,
-    * `WARN` logging. Extensions are not installed here — callers that
+    * `file:` on [[graft.io.LocalFs]], `WARN` logging. Extensions are not installed here — callers that
     * need the graft optimizer rules wrap the result in [[withExtensions]].
     * Returns the running session if one already exists. */
   def local(): SparkSession = {
@@ -18,6 +18,7 @@ object GraftSessions {
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -2,7 +2,6 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
@@ -48,13 +47,14 @@ object Pipeline {
   // Trigger flags travel through the Hadoop FileSystem of their path's
   // scheme — the reference's _READY contract is S3-native (ref
   // `main.tf:350-361`), so a local-only flag check would be dishonest.
-  // Resolving from a bare Configuration (not the session) keeps `ready`
-  // callable before a SparkSession exists, as a poll loop does.
+  // Resolving from a session-free conf keeps `ready` callable before a
+  // SparkSession exists, as a poll loop does; `LocalFs.hadoopConf` keeps
+  // that first `file:` lookup of the JVM on the engine's file system.
   private def flagPath(root: String, flag: String) = new Path(root, flag)
 
   def ready(inputRoot: String): Boolean = {
     val p = flagPath(inputRoot, "_READY")
-    p.getFileSystem(new Configuration()).exists(p)
+    p.getFileSystem(graft.io.LocalFs.hadoopConf()).exists(p)
   }
 
   /** @param inputRoot  dir containing `dim_atms/` and `fact_transactions/`

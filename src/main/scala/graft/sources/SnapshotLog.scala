@@ -4533,13 +4533,14 @@ object SnapshotLog {
     * feed's commit classification: every root from the one below
     * `vs.min` up to `vs.max` is read once; the file-list comparison
     * (which loads shards on a sharded table) runs only where
-    * `compare(op)` holds, and reads false elsewhere. */
+    * `compare(op)` holds, and reads false elsewhere. The answer keeps
+    * the roots it decoded, so the caller's manifest reads of those
+    * versions open no root again. */
   private[graft] def commitChanges(
       fs: FileSystem, base: Path, vs: Seq[Long],
-      compare: String => Boolean): Seq[(Long, String, Boolean)] =
-    if (vs.isEmpty) Nil
+      compare: String => Boolean): CommitChanges =
+    if (vs.isEmpty) new CommitChanges(fs, base, Nil, Set.empty, compare)
     else {
-      val want = vs.toSet
       // newest first, down to the first committed root below vs.min
       val below = listedVersions(fs, base).filter(_ <= vs.max).sorted.reverseIterator
         .flatMap(readRoot(fs, base, _))
@@ -4547,18 +4548,33 @@ object SnapshotLog {
         val (in, out) = below.span(_.version >= vs.min)
         (in.toSeq ++ out.nextOption()).reverse
       }
-      val held = collection.mutable.Map.empty[Long, (Map[String, Seq[String]], Map[String, Dv])]
-      def files(r: ManifestCodec.Root) = held.getOrElseUpdate(r.version, {
-        val m = manifest(fs, base, r, None)
-        (m.files, m.dvs)
-      })
+      new CommitChanges(fs, base, roots, vs.toSet, compare)
+    }
+
+  /** [[commitChanges]]'s answer over the roots it read, oldest first. */
+  private[graft] final class CommitChanges private[SnapshotLog] (
+      fs: FileSystem, base: Path, roots: Seq[ManifestCodec.Root],
+      want: Set[Long], compare: String => Boolean) {
+    private val byVersion = roots.map(r => r.version -> r).toMap
+    private val held = collection.mutable.Map.empty[Long, Option[Manifest]]
+
+    /** The manifest at `v`, built from the root already decoded when
+      * the classification read it. */
+    def manifestAt(v: Long): Option[Manifest] = held.getOrElseUpdate(v,
+      byVersion.get(v).fold(readManifestAt(fs, base, v))(r => Some(manifest(fs, base, r, None))))
+
+    /** (version, operation, whether a compared commit changed the live
+      * files or deletion vectors), per wanted version. */
+    val classed: Seq[(Long, String, Boolean)] = {
+      def files(v: Long) = manifestAt(v).map(m => (m.files, m.dvs))
       roots.zip(None +: roots.map(Some(_))).collect {
         case (r, prev) if want(r.version) =>
           val op = r.op.getOrElse("UNKNOWN")
           (r.version, op,
-            compare(op) && !prev.exists(p => files(p) == files(r)))
+            compare(op) && !prev.exists(p => files(p.version) == files(r.version)))
       }
     }
+  }
 
   /** Rows a version's commit ADDED: the data files version `v` holds
     * that its predecessor `prev` does not, read under v's manifest

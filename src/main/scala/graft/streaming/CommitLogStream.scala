@@ -382,26 +382,25 @@ class CommitLogSource(
     val lo = snapshotPart.fold(lo0)(_ => math.max(lo0, snapshotV.get))
     val feed = feedVersions
     val versions0 = feed.filter(v => v > lo && v <= hi)
-    val versions =
-      if (changeFeed) versions0
-      else {
-        // row-feed mode: classify each commit from its manifest
-        // (metadata-only reads, one per root) — appends stream; commits
-        // that touched no data files at all (SET TBLPROPERTIES,
-        // ANALYZE, constraint and schema DDL) are silent no-ops;
-        // commits that rewrote or deleted data fail or skip per the
-        // option
-        val classed = SnapshotLog.commitChanges(fs, bp, versions0, !AppendOps(_))
-        val changes = classed.collect { case (v, op, true) => (v, op) }
-        if (changes.nonEmpty && !skipChangeCommits)
-          throw new IllegalStateException(
-            s"$base: stream found non-append commit(s) " +
-              changes.map { case (v, op) => s"v$v=$op" }.mkString(", ") +
-              " — the row feed cannot represent changed rows; read with " +
-              "option(\"readChangeFeed\", \"true\") or skip them with " +
-              "option(\"skipChangeCommits\", \"true\")")
-        classed.collect { case (v, op, _) if AppendOps(op) => v }
-      }
+    // row-feed mode: classify each commit from its manifest
+    // (metadata-only reads, one per root) — appends stream; commits
+    // that touched no data files at all (SET TBLPROPERTIES, ANALYZE,
+    // constraint and schema DDL) are silent no-ops; commits that
+    // rewrote or deleted data fail or skip per the option
+    val classified =
+      if (changeFeed) None
+      else Some(SnapshotLog.commitChanges(fs, bp, versions0, !AppendOps(_)))
+    val versions = classified.fold(versions0) { c =>
+      val changes = c.classed.collect { case (v, op, true) => (v, op) }
+      if (changes.nonEmpty && !skipChangeCommits)
+        throw new IllegalStateException(
+          s"$base: stream found non-append commit(s) " +
+            changes.map { case (v, op) => s"v$v=$op" }.mkString(", ") +
+            " — the row feed cannot represent changed rows; read with " +
+            "option(\"readChangeFeed\", \"true\") or skip them with " +
+            "option(\"skipChangeCommits\", \"true\")")
+      c.classed.collect { case (v, op, _) if AppendOps(op) => v }
+    }
     def align(raw: org.apache.spark.sql.DataFrame) = {
       val have = raw.columns.toSet
       raw.select(schema.fields.toSeq.map { f =>
@@ -419,10 +418,10 @@ class CommitLogSource(
       } else {
         // each append's rows are its manifest's file DELTA vs the
         // previous COMMITTED version (the row feed's own versions) —
-        // works with or without CDF. Each manifest is read once:
-        // consecutive versions share theirs
-        val held = collection.mutable.Map.empty[Long, Option[SnapshotLog.Manifest]]
-        def at(v: Long) = held.getOrElseUpdate(v, SnapshotLog.readManifestAt(fs, bp, v))
+        // works with or without CDF. Each manifest is built once, from
+        // the root the classification already read: consecutive
+        // versions share theirs
+        val at = classified.get.manifestAt _
         versions.map { v =>
           val prev = feed.filter(_ < v).lastOption.flatMap(at)
           at(v).fold(empty)(m => align(SnapshotLog.appendedRows(spark, base, prev, m)))
