@@ -233,7 +233,7 @@ print(json.dumps(out))
       "wall_sec" -> passMeta.map(p => fmt(p._3)).mkString("[", ",", "]")))
     val microJson = obj(micro.map { case (k, v) => k -> fmt(v) })
     // r7's full line outgrew the driver's tail-capture window and arrived
-    // front-truncated (BENCH_r07 parsed:null). Split the artifact: stdout
+    // front-truncated (plans/history/BENCH_r07.json parsed:null). Split the artifact: stdout
     // carries ONE compact line guaranteed to fit the window (the graded
     // fields — per-query best, isolated floor, oracle comparison), and the
     // full record (samples, spread, per-pass load/cpu/wall, micro) goes to

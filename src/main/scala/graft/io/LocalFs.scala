@@ -60,8 +60,9 @@ object LocalFs {
 
   /** `RawLocalFileSystem` with a fork-free `setPermission` for the nine
     * rwx bits. A sticky bit, or a store without a POSIX view, takes the
-    * stock path. */
-  final class Raw extends RawLocalFileSystem {
+    * stock path. Open, so a file system under another scheme can reuse
+    * it with its own `getUri`. */
+  class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val view = Files.getFileAttributeView(pathToFile(p).toPath, classOf[PosixFileAttributeView])
       if ((permission.toShort & ~RwxBits) != 0 || view == null) super.setPermission(p, permission)

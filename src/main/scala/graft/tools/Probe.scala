@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{GraftSessions, Registry}
+import graft.core.SparkJobs
 
 /** Plan/timing probe for registered queries.
   *
@@ -15,7 +16,8 @@ import graft.{GraftSessions, Registry}
   * driver loops that run while a query is built count; with --explain
   * also prints the formatted physical plan. The other flags replace the
   * timing:
-  *   --decompose  build / plan / first / warm phase times, three cold reps
+  *   --decompose  build / plan / first / warm phase times, three cold reps,
+  *                and the number of Spark jobs each build started
   *   --show       prints the result rows (head 50) — the quick "did the
   *                graded booleans actually come out TRUE" check
   *   --plans      writes <outDir>/<query>_<suffix>.txt per query: the
@@ -82,8 +84,11 @@ object Probe {
           // overhead. Three cold repetitions to see variance.
           (1 to 3).foreach { rep =>
             val t0 = System.nanoTime()
-            val df = q.build(spark, sfDir)
-            val tBuild = (System.nanoTime() - t0) / 1e6
+            // the build's own time, without the listener-bus drain
+            val ((df, tBuild), buildJobs) = SparkJobs.during(spark) {
+              val built = q.build(spark, sfDir)
+              (built, (System.nanoTime() - t0) / 1e6)
+            }
             val t1 = System.nanoTime()
             df.queryExecution.executedPlan // force analyze+optimize+plan
             val tPlan = (System.nanoTime() - t1) / 1e6
@@ -95,7 +100,7 @@ object Probe {
               df.write.mode("overwrite").format("noop").save()
               (System.nanoTime() - t3) / 1e6
             }
-            println(f"[decompose] $n rep$rep build=$tBuild%.0fms plan=$tPlan%.0fms " +
+            println(f"[decompose] $n rep$rep build=$tBuild%.0fms build_jobs=$buildJobs plan=$tPlan%.0fms " +
               f"first=$tFirst%.0fms warm=${warm.min}%.0fms (${warm.map(w => f"$w%.0f").mkString(",")})")
           }
         } else {

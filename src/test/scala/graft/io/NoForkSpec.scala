@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.etl.{FixtureGen, Pipeline}
-import graft.sources.SnapshotLog
+import graft.sources.{RootOpenCountingFs, SnapshotLog}
 
 /** The engine's writes start no child process: every `file:` create,
   * mkdir and rename goes through [[LocalFs]], which sets permissions
@@ -69,5 +69,17 @@ class NoForkSpec extends SparkSpec {
     val back = SnapshotLog.read(spark, base, Some("day")).get
     assert(back.count() == 45)
     assert(back.filter($"v" === 2L).count() == 10 - 2) // ids 3 and 7 sat in d3
+  }
+
+  test("the rootcount test file system commits without starting a process") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.rootcount.impl", classOf[RootOpenCountingFs].getName)
+    val base = "rootcount://" + Files.createTempDirectory("graft_nofork_rootcount") + "/tbl"
+    val rows = (0 until 20).map(i => (i.toLong, 0L, s"d${i % 4}")).toDF("id", "v", "day")
+    assertNoFork("an append and an upsert under rootcount") {
+      SnapshotLog.appendBatch(spark, base, rows, "day", batchId = 0L)
+      SnapshotLog.upsertBatch(spark, base, rows.limit(5), "id", "v", "day", batchId = 1L)
+    }
+    assert(SnapshotLog.read(spark, base, Some("day")).get.count() == 20)
   }
 }

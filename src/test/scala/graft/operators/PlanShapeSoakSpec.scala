@@ -18,8 +18,8 @@ import graft.tools.Soak
   * add a small-input repartition fix-up when the scan has too few
   * partitions to parallelize, which correctly disappears at scale.)
   *
-  * The wall-time curve at bench scale is the committed SOAK_r12.json
-  * artifact (runMain graft.tools.Soak). */
+  * The wall-time curve at bench scale is the committed
+  * plans/history/SOAK_r12.json artifact (runMain graft.tools.Soak). */
 class PlanShapeSoakSpec extends SparkSpec {
 
   test("headliner plans keep their shape at 3x the corpus (no new exchanges, no SinglePartition)") {

@@ -112,7 +112,7 @@ class ConcurrencyStressSpec extends SparkSpec {
 
   test("format appenders race a DV deleter and OPTIMIZE: zero lost batches") {
     // the WriterSoak shape at test scale (the 30× artifact is
-    // SOAK_WRITERS_r13.json): disjoint-range appends through the DSv2
+    // plans/history/SOAK_WRITERS_r13.json): disjoint-range appends through the DSv2
     // surface vs merge-on-read deletes of the INITIAL keys vs
     // compaction — the final state is exactly recomputable whatever
     // the interleaving

@@ -15,7 +15,7 @@ import graft.{GraftSessions, SparkSpec}
   * partition being compacted) retries METADATA-ONLY — no second
   * rewrite job — while a racer that removed/rewrote one of the read
   * files forces a correct restage. The multi-writer soak's OPTIMIZE
-  * latency tail (max 139 s in SOAK_WRITERS_r14) was recompute cost;
+  * latency tail (max 139 s in plans/history/SOAK_WRITERS_r14.json) was recompute cost;
   * this narrows it to one rewrite + cheap metadata retries. */
 class OptimizeConflictSpec extends SparkSpec {
 

@@ -6,22 +6,23 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataInputStream, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FilterFileSystem, Path}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.io.LocalFs
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
-/** The local file system under the `rootcount` scheme, recording
-  * every open of a commit-log root (`_log/v<version>.txt`). It can also
-  * lose publishes: while [[RootOpenCountingFs.losePublishes]] has
+/** The engine's fork-free raw local file system ([[LocalFs.Raw]]) under
+  * the `rootcount` scheme, recording every open of a commit-log root
+  * (`_log/v<version>.txt`). It can also lose publishes: while [[RootOpenCountingFs.losePublishes]] has
   * losses left, a rename onto a root fails as if another writer had
   * claimed that version first. */
-class RootOpenCountingFs extends FilterFileSystem(new RawLocalFileSystem {
+class RootOpenCountingFs extends FilterFileSystem(new LocalFs.Raw {
   override def getUri: URI = URI.create("rootcount:///")
 }) {
   private def isRoot(f: Path): Boolean =
