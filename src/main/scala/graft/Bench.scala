@@ -55,8 +55,7 @@ tables = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 con = duckdb.connect()
 for t in tables:
-    # the driver corpus ships single files; an exploded corpus
-    # (graft.tools.Explode) is a Spark-written DIRECTORY per table
+    # a table is a single file or a Spark-written directory
     p = f"{sf}/{t}.parquet"
     src = f"{p}/*.parquet" if os.path.isdir(p) else p
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")

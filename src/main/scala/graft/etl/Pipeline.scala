@@ -4,8 +4,10 @@ import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The end-to-end medallion pipeline: Bronze CSV → Silver Parquet →
   * Gold Parquet, with the reference's event-driven trigger contract.
@@ -27,9 +29,12 @@ import org.apache.spark.sql.functions._
   *    core before the write, so each day is ONE file whatever the number
   *    of input splits, and every core writes. The partition count is
   *    explicit, so AQE cannot coalesce the write onto one task.
-  *  - Reading Silver back lists its day directories in one task per core
-  *    (not one per day), and the read-back is persisted, so the three
-  *    Gold writes and Validation scan the Silver files once between them.
+  *  - The clustered batch is persisted and Silver is written from the
+  *    cache, so the three Gold writes and Validation read the batch from
+  *    memory instead of re-scanning the files it just wrote. Only the days
+  *    this batch did not overwrite are read back from disk (listed in one
+  *    task per core, not one per day) and persisted next to it; a batch
+  *    that covers every stored day reads nothing back.
   *  - `RuleStats.kept` comes from the clean pass's observation: it counts
   *    this batch's kept rows, not the Silver table, which also holds the
   *    days of earlier batches.
@@ -79,34 +84,62 @@ object Pipeline {
 
     val cores = spark.sparkContext.defaultParallelism
     val silverPath = s"$outputRoot/silver"
-    silver.repartition(cores, col("fecha_dia")).write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("fecha_dia")
-      .parquet(silverPath)
-    // the write is the action that populates the observation
-    val stats = Rules.stats(obs, CleanTransactions.rules(clock))
-
-    val silverBack = withDiscoveryParallelism(spark, cores) {
-      spark.read.parquet(silverPath)
-    }.persist()
+    val batch = silver.repartition(cores, col("fecha_dia")).persist()
     try {
-      val gold = Map(
-        "gold_dim_atms" -> Gold.dimAtmsActual(silverBack),
-        "gold_daily_balance" -> Gold.dailyBalance(silverBack),
-        "gold_atm_ranking" -> Gold.atmRanking(silverBack))
-      val goldPaths = gold.map { case (name, df) =>
-        val p = s"$outputRoot/$name"
-        df.write.mode(SaveMode.Overwrite).parquet(p)
-        name -> p
-      }
+      // the batch's days, cast to string as the writer names their directories
+      val dayObs = Observation()
+      batch.observe(dayObs, collect_set(col("fecha_dia").cast("string")).as("days"))
+        .write
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("fecha_dia")
+        .parquet(silverPath)
+      // the write is the action that populates both observations
+      val stats = Rules.stats(obs, CleanTransactions.rules(clock))
+      val batchDays = dayObs.get("days").asInstanceOf[Seq[String]]
+        .map(ExternalCatalogUtils.getPartitionPathString("fecha_dia", _)).toSet
 
-      val report = Validation.validate(silverBack)
-      val success = flagPath(outputRoot, "_SUCCESS")
-      success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(success, true).close()
-      PipelineResult(stats, report, silverPath, goldPaths)
-    } finally silverBack.unpersist()
+      val earlier = earlierDays(spark, silverPath, batchDays, batch.schema, cores).map(_.persist())
+      try {
+        val silverAll = earlier.fold(batch)(batch.unionByName(_))
+        val gold = Map(
+          "gold_dim_atms" -> Gold.dimAtmsActual(silverAll),
+          "gold_daily_balance" -> Gold.dailyBalance(silverAll),
+          "gold_atm_ranking" -> Gold.atmRanking(silverAll))
+        val goldPaths = gold.map { case (name, df) =>
+          val p = s"$outputRoot/$name"
+          df.write.mode(SaveMode.Overwrite).parquet(p)
+          name -> p
+        }
+
+        val report = Validation.validate(silverAll)
+        val success = flagPath(outputRoot, "_SUCCESS")
+        success.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .create(success, true).close()
+        PipelineResult(stats, report, silverPath, goldPaths)
+      } finally earlier.foreach(_.unpersist())
+    } finally batch.unpersist()
+  }
+
+  /** The day directories under `silverPath` that the batch did not
+    * overwrite (`batchDays` are its directory names), read with the
+    * batch's schema; None when there are none. One `listStatus` of the
+    * table root finds them. Under dynamic partition overwrite,
+    * these days plus the batch are exactly the rows the table holds. */
+  private def earlierDays(
+      spark: SparkSession,
+      silverPath: String,
+      batchDays: Set[String],
+      schema: StructType,
+      cores: Int): Option[DataFrame] = {
+    val root = new Path(silverPath)
+    val dirs = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+      .collect { case s if s.isDirectory => s.getPath }
+      .filter(p => p.getName.startsWith("fecha_dia=") && !batchDays(p.getName))
+    if (dirs.isEmpty) None
+    else Some(withDiscoveryParallelism(spark, cores) {
+      spark.read.schema(schema).option("basePath", silverPath).parquet(dirs.map(_.toString): _*)
+    })
   }
 
   private val DiscoveryParallelism = "spark.sql.sources.parallelPartitionDiscovery.parallelism"

@@ -1,20 +1,40 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.time.Instant
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.SparkJobs
 
 class PipelineSpec extends SparkSpec {
 
   private val clock = Timestamp.from(Instant.parse("2026-01-01T00:00:00Z"))
 
+  private val tempDirs = ArrayBuffer.empty[Path]
+
+  /** A fresh directory under the system temp dir, deleted after the suite. */
+  private def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach { d =>
+      val walk = Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally walk.close()
+    } finally super.afterAll()
+
   private lazy val (inRoot, outRoot, result) = {
-    val in = Files.createTempDirectory("graft_etl_in").toString
-    val out = Files.createTempDirectory("graft_etl_out").toString
+    val in = tempDir("graft_etl_in")
+    val out = tempDir("graft_etl_out")
     FixtureGen.write(in, nAtms = 50, nTx = 10000, seed = 42L, clock = clock)
     // read the ~1 MB batch as several splits, as a large batch would be
     val splitKey = "spark.sql.files.maxPartitionBytes"
@@ -41,9 +61,9 @@ class PipelineSpec extends SparkSpec {
     * first's (1,500 rows over ~730 days). Returns both inputs, the second
     * result, and the session state before and after the runs. */
   private lazy val rerun = {
-    val out = Files.createTempDirectory("graft_etl_rerun").toString
+    val out = tempDir("graft_etl_rerun")
     def batch(nTx: Int, seed: Long) = {
-      val in = Files.createTempDirectory("graft_etl_batch").toString
+      val in = tempDir("graft_etl_batch")
       FixtureGen.write(in, nAtms = 20, nTx = nTx, seed = seed, clock = clock)
       in
     }
@@ -56,6 +76,48 @@ class PipelineSpec extends SparkSpec {
       val r2 = Pipeline.run(spark, in2, out, clock)
       (in1, in2, r2, before, sessionState)
     } finally saved.foreach(spark.conf.set(OverwriteMode, _))
+  }
+
+  /** Gold and Validation recomputed over Silver as a plain reader sees it
+    * on disk must equal what `Pipeline.run` wrote and returned. */
+  private def assertMatchesSilverOnDisk(r: PipelineResult): Unit = {
+    val silver = spark.read.parquet(r.silverPath)
+    assert(Validation.validate(silver) == r.validation)
+    val want = Map(
+      "gold_dim_atms" -> Gold.dimAtmsActual(silver),
+      "gold_daily_balance" -> Gold.dailyBalance(silver),
+      "gold_atm_ranking" -> Gold.atmRanking(silver))
+    assert(r.goldPaths.keySet == want.keySet)
+    def fields(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((name, w) <- want) {
+      val got = spark.read.parquet(r.goldPaths(name))
+      assert(fields(got) == fields(w), name)
+      assert(rows(got) == rows(w), name)
+    }
+  }
+
+  test("Gold and Validation equal a recompute over Silver read back, single batch") {
+    assertMatchesSilverOnDisk(result)
+  }
+
+  test("Gold and Validation equal a recompute over Silver read back, earlier days kept") {
+    val (_, in2, r2, _, _) = rerun
+    val batchDays = cleaned(in2).select("fecha_dia").distinct().count()
+    assert(spark.read.parquet(r2.silverPath).select("fecha_dia").distinct().count() > batchDays,
+      "silver must hold days the second batch did not overwrite")
+    assertMatchesSilverOnDisk(r2)
+  }
+
+  test("Pipeline.run on a fresh root reads nothing back") {
+    val (in, out) = (tempDir("graft_etl_jobs_in"), tempDir("graft_etl_jobs_out"))
+    FixtureGen.write(in, nAtms = 20, nTx = 500, seed = 7L, clock = clock)
+    val (r, jobs) = SparkJobs.during(spark)(Pipeline.run(spark, in, out, clock))
+    assert(r.validation.totalRows == r.stats.kept)
+    // Gold and Validation read the cached batch: no job lists Silver's day
+    // directories or infers its schema. The same run with Silver read back
+    // from disk starts 17 jobs.
+    assert(jobs == 14)
   }
 
   test("pipeline requires and consumes the _READY trigger") {
@@ -146,7 +208,7 @@ class PipelineSpec extends SparkSpec {
 
     // delete silver → the fallback must re-derive from raw CSVs and
     // produce the IDENTICAL typed report (same rules, same clock)
-    val gone = Files.createTempDirectory("graft_qa_missing").toString + "/nope"
+    val gone = tempDir("graft_qa_missing") + "/nope"
     val (fromRaw, src2) = Validation.fromSilverOrRaw(spark, gone, inRoot, clock)
     assert(src2 == "raw")
     assert(fromRaw == result.validation,
