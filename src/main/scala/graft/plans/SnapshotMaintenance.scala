@@ -967,14 +967,12 @@ case class SnapshotCopyIntoCommand(
         if (v <= m.version) // racer absorbed the whole batch
           return Seq(Row("COPY INTO", v, 0L, 0L))
         SnapshotDml.repin(spark, view)
-        // rows loaded: footer count over exactly the committed new
-        // files (metadata-only — parquet count() never reads data)
-        val newFiles = SnapshotLog.readManifestAt(fs, bp, v)
-          .map(_.allFiles.toSet -- m.allFiles.toSet).getOrElse(Set.empty)
-        val nRows =
-          if (newFiles.isEmpty) 0L
-          else spark.read.parquet(newFiles.toSeq.sorted.map(f =>
-            new org.apache.hadoop.fs.Path(bp, f).toString): _*).count()
+        // rows loaded: the row counts the commit recorded for exactly
+        // its new files — no Spark job
+        val nRows = SnapshotLog.readManifestAt(fs, bp, v).map { mv =>
+          (mv.allFiles.toSet -- m.allFiles.toSet).toSeq
+            .map(SnapshotLog.rowCountOf(fs, bp, mv, _)).sum
+        }.getOrElse(0L)
         return Seq(Row("COPY INTO", v, fresh.size.toLong, nRows))
       } catch {
         case _: SnapshotLog.PartialTxnConflict if attempt < 5 =>

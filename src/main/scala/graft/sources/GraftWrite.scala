@@ -86,10 +86,10 @@ object WriteIntoGraft {
   val TxnAppIdOption = "txnAppId"
   val TxnVersionOption = "txnVersion"
 
-  /** `option("mergeSchema", "true")` — Delta's per-write auto-merge
-    * spelling: a batch carrying columns the table lacks widens the
-    * schema (new columns nullable, existing rows read NULL) instead of
-    * failing. Without it — and without the table-level
+  /** The `mergeSchema` write option set to true — Delta's per-write
+    * auto-merge spelling: a batch carrying columns the table lacks
+    * widens the schema (new columns nullable, existing rows read NULL)
+    * instead of failing. Without it — and without the table-level
     * [[SnapshotLog.AutoMergeProp]] — an append/replaceWhere batch with
     * unknown columns is REJECTED loudly (Delta's schema-enforcement
     * contract); a full overwrite replaces the schema wholesale and

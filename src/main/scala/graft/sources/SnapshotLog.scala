@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** A minimal commit-log table format — the Iceberg/Delta model at its
   * irreducible core, for the CDC-upsert sink whose directory-swap
@@ -72,6 +73,9 @@ object SnapshotLog {
       count: Long,
       inlineB64: Option[String],
       sidecarRel: Option[String])
+
+  /** A DV sidecar's file schema: the deleted positions. */
+  private val DvSidecarSchema = StructType(Seq(StructField("pos", LongType)))
 
   /** @param files partition value → live data files (rel paths)
     * @param stats  rel file path → column → (min, max) as canonical
@@ -1041,9 +1045,8 @@ object SnapshotLog {
       if (inline.isEmpty) Nil
       else Seq(inline.toDF("__dv_file", "__dv_pos"))
     val sidecars = dvd.collect { case (f, Dv(_, None, Some(rel))) =>
-      spark.read.parquet(new Path(bp, rel).toString)
-        .select(lit(dvKey(f)).as("__dv_file"),
-          col("pos").cast("long").as("__dv_pos"))
+      spark.read.schema(DvSidecarSchema).parquet(new Path(bp, rel).toString)
+        .select(lit(dvKey(f)).as("__dv_file"), col("pos").as("__dv_pos"))
     }
     // broadcast only when every DV is inline AND their union is small:
     // per-file inline vectors are capped, their COUNT is not, so a
@@ -1053,39 +1056,59 @@ object SnapshotLog {
     Some(((inlineDf ++ sidecars).reduce(_ unionByName _), broadcastOk))
   }
 
-  /** Read `files` (rel paths under `base`) THROUGH their deletion
-    * vectors: rows at DV positions are anti-joined out via the parquet
-    * `_metadata` row index — merge-on-read. The common no-DV case is
-    * the plain scan, byte-for-byte the pre-DV read path. The anti-join
-    * side is broadcast when every DV is inline (driver-bounded);
+  /** Read `files` (rel paths under `bp`) of `m` THROUGH their
+    * deletion vectors, typed by `m`'s schema: one scan built like the
+    * query relation's ([[SnapshotRelation.scanFiles]]), so no footer is
+    * read and no listing runs. Rows at DV positions are anti-joined out
+    * via the parquet `_metadata` row index — merge-on-read; the anti-join
+    * side is broadcast when every DV is inline (driver-bounded), while
     * sidecar-backed vectors go through the planner's own choice so an
-    * arbitrarily large delete can never OOM the broadcast. */
+    * arbitrarily large delete can never OOM the broadcast. `rowIds`
+    * exposes [[RowIdCol]] on row-tracked tables (the maintenance
+    * rewrites that materialize ids); merge and CDC reads leave it off —
+    * row ids are identity metadata, not merge input. */
   private def readFiles(
       spark: SparkSession, bp: Path, m: Manifest,
-      files: Seq[String]): DataFrame = {
-    val paths = files.map(f => new Path(bp, f).toString)
-    val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    // the materialized row-id sidecar column is identity metadata, not
-    // data — internal merge/CDC reads must never see it (a rewrite that
-    // staged it as data would leak it into schema evolution)
-    toLogical(applyDvs(spark, bp, m, files, raw.drop(MatRowIdCol)), m)
+      files: Seq[String], rowIds: Boolean = false): DataFrame =
+    overScan(spark, bp, m, files,
+      SnapshotRelation.scanFiles(spark, bp, m,
+        files.map(f => f -> fileBytes(m, f)), scanSchema(m, rowIds)),
+      rowIds)
+
+  /** What a scan of `m`'s files reads: the logical schema under
+    * physical names, plus, with `rowIds` on a row-tracked table, the
+    * MATERIALIZED id column (files that predate a rewrite read null for
+    * it and fall back to base + row index in [[attachRowIds]]). */
+  private[sources] def scanSchema(m: Manifest, rowIds: Boolean): StructType = {
+    val phys = physSchema(m, m.schema.get)
+    if (rowIds && m.rowTracking)
+      StructType(phys.fields :+ StructField(MatRowIdCol, LongType, nullable = true))
+    else phys
+  }
+
+  /** The layers above a raw scan of `files` from `m`, shared by
+    * [[readFiles]] and the query relation: row ids (with `rowIds`),
+    * deletion vectors, logical names. */
+  private[sources] def overScan(
+      spark: SparkSession, bp: Path, m: Manifest, files: Seq[String],
+      raw: DataFrame, rowIds: Boolean): DataFrame = {
+    val keyed = if (rowIds) attachRowIds(spark, bp, m, files, raw) else raw
+    toLogical(applyDvs(spark, bp, m, files, keyed).drop("__rt_file", "__rt_pos"), m)
   }
 
   /** Expose [[RowIdCol]] on a raw scan of `files` from a row-tracked
-    * table: coalesce(materialized id, base(file) + parquet row index).
+    * table, read with [[scanSchema]]'s materialized id column:
+    * coalesce(materialized id, base(file) + parquet row index).
     * Runs BEFORE [[applyDvs]] (both need `_metadata.row_index`; the
     * anti-join then retires deleted ids). The (file → base) side is
     * manifest-bounded metadata and broadcasts, like the inline-DV
     * side. No-op on untracked tables. */
-  private[sources] def attachRowIds(
+  private def attachRowIds(
       spark: SparkSession, bp: Path, m: Manifest,
       files: Seq[String], raw: DataFrame): DataFrame = {
     if (!m.rowTracking) return raw
     import spark.implicits._
-    val hasMat = raw.columns.contains(MatRowIdCol)
-    val mat =
-      if (hasMat) col(MatRowIdCol)
-      else org.apache.spark.sql.functions.lit(null).cast("long")
+    val mat = col(MatRowIdCol)
     val bases = files.flatMap(f =>
       m.stats.get(f).flatMap(_.get(BaseRowIdKey)).flatMap(_._1.toLongOption)
         .map(b => (dvKey(f), b)))
@@ -1104,22 +1127,7 @@ object SnapshotLog {
         .withColumn(RowIdCol,
           coalesce(mat, col("__rt_base") + col("__rt_pos")))
         .drop("__rt_base")
-    if (hasMat) withId.drop(MatRowIdCol) else withId
-  }
-
-  /** [[readFiles]] + [[attachRowIds]] — for the call sites that must
-    * SEE row ids (the planner-integrated user read, and maintenance
-    * rewrites that materialize them). Internal merge/CDC reads keep
-    * using [[readFiles]]: row ids are identity metadata, not merge
-    * input. */
-  private[sources] def readFilesWithRowIds(
-      spark: SparkSession, bp: Path, m: Manifest,
-      files: Seq[String]): DataFrame = {
-    val paths = files.map(f => new Path(bp, f).toString)
-    val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    toLogical(
-      applyDvs(spark, bp, m, files, attachRowIds(spark, bp, m, files, raw))
-        .drop("__rt_file", "__rt_pos"), m)
+    withId.drop(MatRowIdCol)
   }
 
   // ---- NESTED column mapping -------------------------------------------
@@ -1437,76 +1445,60 @@ object SnapshotLog {
     (acc, hwUpd.toMap)
   }
 
-  /** Conform `src` (whatever shape a mergeSchema footer read produced)
-    * to `target`: leaf types cast, STRUCT fields matched by name
-    * (case-insensitive) with MISSING subfields filled as typed NULLs —
-    * the read-side contract of nested add-column evolution, where
-    * files older than the ADD simply lack the new subfield (a plain
-    * `cast` refuses struct shapes of different arity). Arrays of
-    * structs conform element-wise; source nullness is preserved.
-    *
-    * `strict` is the USER-BATCH mode ([[replaceWhere]] and the
-    * surfaces routing through it): a SOURCE struct field absent from
-    * the target errors loudly instead of silently discarding its data
-    * — missing-tolerance (NULL backfill) is the evolution feature,
+  /** Conform a USER BATCH column `src` ([[replaceWhere]] and the
+    * surfaces routing through it) to `target`: leaf types cast, STRUCT
+    * fields matched by name (case-insensitive) with MISSING subfields
+    * filled as typed NULLs (a plain `cast` refuses struct shapes of
+    * different arity); arrays of structs conform element-wise; source
+    * nullness is preserved. A SOURCE struct field absent from the
+    * target errors loudly instead of silently discarding its data —
+    * missing-tolerance (NULL backfill) is the evolution feature,
     * extra-tolerance would be silent data loss (Delta's schema
-    * enforcement refuses the same batch without mergeSchema). The
-    * read-side aligns stay non-strict: dropping columns a footer scan
-    * surfaced beyond the live schema is exactly their job. */
-  private[sources] def conform(
+    * enforcement refuses the same batch without mergeSchema). Reads of
+    * the table's own files need no conform: the scan is typed by the
+    * manifest's schema. */
+  private def conform(
       src: Column,
       srcType: org.apache.spark.sql.types.DataType,
       target: org.apache.spark.sql.types.DataType,
-      strict: Boolean = false,
-      path: String = ""): Column = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+      path: String): Column = {
+    import org.apache.spark.sql.types.{ArrayType, DataType}
     (srcType, target) match {
       case (a, b) if DataType.equalsIgnoreNullability(a, b) => src
       case (s: StructType, t: StructType) =>
-        if (strict) {
-          val extra = s.fields.map(_.name).toSeq.filterNot(n =>
-            t.fields.exists(_.name.equalsIgnoreCase(n)))
-          if (extra.nonEmpty) sys.error(
-            s"batch carries struct field(s) ${extra.mkString(", ")} at " +
-              s"'${if (path.isEmpty) "<root>" else path}' that do not exist " +
-              "in the target schema — refusing to silently discard their " +
-              "data (ALTER TABLE to add the field first; missing target " +
-              "fields still backfill NULL)")
-        }
+        val extra = s.fields.map(_.name).toSeq.filterNot(n =>
+          t.fields.exists(_.name.equalsIgnoreCase(n)))
+        if (extra.nonEmpty) sys.error(
+          s"batch carries struct field(s) ${extra.mkString(", ")} at " +
+            s"'$path' that do not exist " +
+            "in the target schema — refusing to silently discard their " +
+            "data (ALTER TABLE to add the field first; missing target " +
+            "fields still backfill NULL)")
         val fields = t.fields.toSeq.map { tf =>
           s.fields.find(_.name.equalsIgnoreCase(tf.name)) match {
             case Some(sf) =>
               conform(src.getField(sf.name), sf.dataType, tf.dataType,
-                strict, s"$path${tf.name}.").as(tf.name)
+                s"$path${tf.name}.").as(tf.name)
             case None => lit(null).cast(tf.dataType).as(tf.name)
           }
         }
         when(src.isNull, lit(null).cast(t)).otherwise(struct(fields: _*))
       case (ArrayType(se, _), ArrayType(te, _)) =>
-        transform(src, x => conform(x, se, te, strict, path + "[]."))
+        transform(src, x => conform(x, se, te, path + "[]."))
       case (_, t) => src.cast(t)
     }
   }
 
-  /** [[conform]] keyed off a frame's own column types — the shared
-    * body of every schema-align helper. */
-  private def conformTo(
-      df: DataFrame,
-      f: org.apache.spark.sql.types.StructField,
-      strict: Boolean = false): Column =
-    df.schema.fields.find(_.name == f.name) match {
-      case Some(sf) => conform(col(f.name), sf.dataType, f.dataType,
-        strict, f.name + ".").as(f.name)
-      case None => lit(null).cast(f.dataType).as(f.name)
-    }
-
-  /** Project a (logical-named) frame onto the manifest's logical
-    * schema: columns the frame lacks backfill NULL, columns OUTSIDE
-    * the schema (e.g. a dropped column's physical bytes surfacing
-    * through a mergeSchema scan) disappear. */
-  private def alignToSchema(
-      df: DataFrame, m: Manifest, extra: Seq[Column] = Nil): DataFrame =
-    df.select(m.schema.get.fields.toSeq.map(f => conformTo(df, f)) ++ extra: _*)
+  /** A user batch conformed column by column to `to` ([[conform]]);
+    * columns the batch lacks backfill NULL. */
+  private def alignBatch(df: DataFrame, to: StructType): DataFrame =
+    df.select(to.fields.toSeq.map { f =>
+      df.schema.fields.find(_.name == f.name) match {
+        case Some(sf) => conform(col(f.name), sf.dataType, f.dataType,
+          f.name + ".").as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
+      }
+    }: _*)
 
   /** A maintenance rewrite's read: row-tracked tables read their ids
     * and carry them into the rewrite as the MATERIALIZED physical
@@ -1514,11 +1506,8 @@ object SnapshotLog {
   private def readForRewrite(
       spark: SparkSession, bp: Path, m: Manifest,
       files: Seq[String]): DataFrame =
-    if (!m.rowTracking)
-      alignToSchema(readFiles(spark, bp, m, files), m)
-    else
-      alignToSchema(readFilesWithRowIds(spark, bp, m, files), m,
-        extra = Seq(col(RowIdCol).as(MatRowIdCol)))
+    readFiles(spark, bp, m, files, rowIds = true)
+      .withColumnRenamed(RowIdCol, MatRowIdCol)
 
   /** Inverse of [[toPhysical]] on a scanned frame: physical parquet
     * names back to the logical schema's names. Non-mapped columns
@@ -1574,7 +1563,7 @@ object SnapshotLog {
     * parquet footer read (the fallback that makes enabling row
     * tracking on a stats-less table possible — O(new files) driver
     * RPCs at commit time, never a Spark job). */
-  private def rowCountOf(fs: FileSystem, base: Path, m: Manifest, f: String): Long =
+  private[graft] def rowCountOf(fs: FileSystem, base: Path, m: Manifest, f: String): Long =
     m.stats.get(f).flatMap(_.get(RowCountKey)).flatMap(_._1.toLongOption)
       .getOrElse {
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -1844,11 +1833,9 @@ object SnapshotLog {
       spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema.get)
     else SnapshotRelation.fromManifest(spark, bp, m, partCol)._1
 
-  /** Apply `m`'s deletion vectors to a scan of `files` from it —
-    * shared by the file-list reads here ([[readFiles]]) and the relation path
-    * ([[SnapshotRelation.fromManifest]]). No-DV case returns the scan
-    * untouched. */
-  private[sources] def applyDvs(
+  /** Apply `m`'s deletion vectors to a raw scan of `files` from it
+    * ([[overScan]]). No-DV case returns the scan untouched. */
+  private def applyDvs(
       spark: SparkSession, bp: Path, m: Manifest,
       files: Seq[String], raw: DataFrame): DataFrame =
     dvRows(spark, bp, m, files) match {
@@ -2054,7 +2041,7 @@ object SnapshotLog {
           // stay identical.
           val baseIds: Option[DataFrame] =
             if (!m.rowTracking || relFiles.isEmpty) None
-            else Some(readFilesWithRowIds(spark, bp, m, relFiles)
+            else Some(readFiles(spark, bp, m, relFiles, rowIds = true)
               .select(keys.map(col) :+ col(RowIdCol).as(MatRowIdCol): _*))
           val baseSubset = {
             if (relFiles.isEmpty)
@@ -2136,15 +2123,18 @@ object SnapshotLog {
                 .sortWithinPartitions(sortCol)
                 .drop("__z")
             }
-          stagePartitioned(toPhysical(toWrite, m), m, fs, dir)
+          val physOut = toPhysical(toWrite, m)
+          stagePartitioned(physOut, m, fs, dir)
+          val wrote = StructType(physOut.schema.filterNot(_.name == "__p"))
           staged = listStaged(fs, dir, rel)
           stagedStats =
             if (statsCols.isEmpty) Map.empty
-            else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+            else fileStats(spark, fs, bp, m, staged, wrote, statsCols.map(m.phys))
           if (cdfOn) {
             // post-state re-read from the immutable staged files (not
             // the merge plan, which would re-run the join on feed write)
-            val post = toLogical(spark.read.parquet(dir.toString), m)
+            val post = toLogical(SnapshotRelation.scanFiles(spark, bp, m,
+              lengths(staged), wrote), m)
               .select(targetFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
             cdfPair = Some((baseSubset, post))
           }
@@ -2345,9 +2335,10 @@ object SnapshotLog {
             // CDF semantics for INSERT OVERWRITE), read from the old files
             // (on disk until vacuum) under their OWN column mapping — the
             // unstripped manifest
-            val stagedAbs = staged.map { case (_, rel, _) =>
-              new Path(bp, rel).toString }
-            val ins = spark.read.parquet(stagedAbs: _*)
+            // the staged frame's schema: the batch's, under m's names
+            val ins = toLogical(SnapshotRelation.scanFiles(spark, bp, m,
+                lengths(staged),
+                physSchema(m, StructType(fields))), m)
               .select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
               .withColumn("change_type", lit("insert"))
             val feed = Some(m0Read).filter(pm => overwrite && pm.files.nonEmpty)
@@ -2578,17 +2569,6 @@ object SnapshotLog {
     * every data-writing commit from the staging listing. */
   val ByteSizeKey = "__bytes"
 
-  /** `ByteSizeKey` entries for freshly staged files. */
-  /** Per-staged-file bookkeeping entries every commit records for
-    * free: the byte length (from the staging listing — powers the
-    * zero-RPC FileStatus synthesis at plan time) and the ROW COUNT
-    * from the parquet footer — one driver-side footer read per NEW
-    * file, never a Spark job (the same O(new files) class as enabling
-    * row tracking or CONVERT). With counts total, [[countRows]] /
-    * [[partitionCounts]] — and the metadata-only COUNT(*) plan fold
-    * ([[graft.plans.MetadataAggRewrite]]) — work on every table, not
-    * just statsCols/ANALYZE ones. A failed footer read degrades to a
-    * count-less entry (metadata counts refuse, the commit proceeds). */
   /** Above this many staged files, the per-file row-count footer sweep
     * runs as a DISTRIBUTED job (one metadata RPC per file, in tasks)
     * instead of sequential driver reads — a 10^4-file OPTIMIZE commit
@@ -2603,6 +2583,16 @@ object SnapshotLog {
   private[sources] val driverFooterReads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Per-staged-file bookkeeping entries every commit records for
+    * free: the byte length (from the staging listing — powers the
+    * zero-RPC FileStatus synthesis at plan time) and the ROW COUNT
+    * from the parquet footer — one driver-side footer read per NEW
+    * file, never a Spark job (the same O(new files) class as enabling
+    * row tracking or CONVERT). With counts total, [[countRows]] /
+    * [[partitionCounts]] — and the metadata-only COUNT(*) plan fold
+    * ([[graft.plans.MetadataAggRewrite]]) — work on every table, not
+    * just statsCols/ANALYZE ones. A failed footer read degrades to a
+    * count-less entry (metadata counts refuse, the commit proceeds). */
   private def sizeStats(
       spark: SparkSession, fs: FileSystem, base: Path,
       staged: Seq[(String, String, Long)]): Map[String, Map[String, (String, String)]] = {
@@ -2691,10 +2681,10 @@ object SnapshotLog {
 
   /** Evolve the manifest-held schema with what a commit just wrote:
     * prior fields keep their order, brand-new fields append —
-    * add-column evolution, exactly the shape a mergeSchema footer read
-    * would produce — and everything is nullable (older partitions
-    * backfill NULL). A same-name TYPE change the declared type cannot
-    * read is refused: every committed manifest carries ONE schema. */
+    * add-column evolution — and everything is nullable (older files
+    * read NULL for the new fields). A same-name TYPE change the
+    * declared type cannot read is refused: every committed manifest
+    * carries ONE schema. */
   private def evolveSchema(
       prior: Option[String],
       fresh: org.apache.spark.sql.types.StructType): String = {
@@ -2753,26 +2743,49 @@ object SnapshotLog {
     * key unspellable as a column name in the stats map's namespace. */
   def NonNullCountKey(c: String): String = s"__nn:$c"
 
-  /** One aggregation job over the staged files: per-file min/max of
-    * `statsCols` (+ row count), keyed by rel path. Bounds are stored
-    * as canonical strings; NULL bounds (an all-NULL column in a file)
-    * are omitted. */
+  /** One aggregation job over staged files: per-file min/max of
+    * `statsCols` (+ row count), keyed by rel path. `schema` is the
+    * schema of the frame that was staged (PHYSICAL names); the scan
+    * reads only the stats columns. Bounds are stored as canonical
+    * strings; NULL bounds (an all-NULL column in a file) are omitted. */
   private def fileStats(
       spark: SparkSession,
       fs: FileSystem,
-      dir: Path,
-      rel: String,
-      statsCols: Seq[String]): Map[String, Map[String, (String, String)]] = {
-    val qDir = fs.makeQualified(dir).toUri.getPath
-    val aggs = statsAggs(statsCols)
-    spark.read.parquet(dir.toString)
+      bp: Path,
+      m: Manifest,
+      staged: Seq[(String, String, Long)],
+      schema: StructType,
+      statsCols: Seq[String]): Map[String, Map[String, (String, String)]] =
+    perFile(spark, fs, bp, m, lengths(staged),
+      columnsOf(schema, statsCols), statsAggs(statsCols))
+      .map { case (f, r) => f -> decodeBounds(r, statsCols) }
+
+  /** (rel path, byte length) of each staged (partition, rel path,
+    * length) entry. */
+  private def lengths(staged: Seq[(String, String, Long)]): Seq[(String, Long)] =
+    staged.map { case (_, f, len) => f -> len }
+
+  /** One aggregation job over `files` (rel path under `bp` → byte
+    * length) of `m`, or staged on top of it, read with `schema`: a row
+    * per file (the file's URI, then `aggs`), keyed by rel path. */
+  private def perFile(
+      spark: SparkSession, fs: FileSystem, bp: Path, m: Manifest,
+      files: Seq[(String, Long)], schema: StructType,
+      aggs: Seq[Column]): Map[String, Row] = {
+    val byPath = files.map { case (f, _) =>
+      fs.makeQualified(new Path(bp, f)).toUri.getPath -> f }.toMap
+    SnapshotRelation.scanFiles(spark, bp, m, files, schema)
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val abs = new Path(new java.net.URI(r.getString(0))).toUri.getPath
-        (rel + abs.stripPrefix(qDir)) -> decodeBounds(r, statsCols)
+      .collect().flatMap { r =>
+        byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
+          .map(_ -> r)
       }.toMap
   }
+
+  /** The fields of `schema` named in `cols` (case-insensitive). */
+  private def columnsOf(schema: StructType, cols: Seq[String]): StructType =
+    StructType(schema.fields.filter(f => cols.exists(_.equalsIgnoreCase(f.name))))
 
   /** `CONVERT TO graft_snapshot` — IN-PLACE adoption of an existing
     * parquet directory as version 1 of a commit log: ZERO data files
@@ -3010,17 +3023,9 @@ object SnapshotLog {
       }
       if (need.isEmpty) Done(0L)
       else {
-        val byPath = need
-          .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
-        val aggs = statsAggs(physCols)
-        val fresh = spark.read.option("mergeSchema", "true")
-          .parquet(need.map(f => new Path(bp, f).toString): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().flatMap { r =>
-            byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
-              .map(_ -> decodeBounds(r, physCols))
-          }.toMap
+        val fresh = perFile(spark, fs, bp, m, need.map(f => f -> fileBytes(m, f)),
+          columnsOf(scanSchema(m, rowIds = false), physCols), statsAggs(physCols))
+          .map { case (f, r) => f -> decodeBounds(r, physCols) }
         val merged = fresh.foldLeft(m.stats) {
           case (acc, (f, b)) => acc.updated(f, acc.getOrElse(f, Map.empty) ++ b)
         }
@@ -3116,7 +3121,8 @@ object SnapshotLog {
     val fs = fsFor(spark, bp)
     commitLoop(fs, bp, "BLOOMS", maxRetries) { (snap, _, _) =>
       snap.filter(_.allFiles.nonEmpty).fold[Attempt[Long]](Done(0L)) { m =>
-        val built = computeBlooms(spark, fs, bp, m.allFiles, cols.map(m.phys), fpp)
+        val built = computeBlooms(spark, fs, bp, m,
+          m.allFiles.map(f => f -> fileBytes(m, f)), cols.map(m.phys), fpp)
         Publish(m.copy(blooms = m.blooms ++ built, op = Some("BLOOMS")), identity)
       }
     }
@@ -3331,9 +3337,8 @@ object SnapshotLog {
       else Publish(m.copy(files = Map.empty, stats = Map.empty,
         blooms = Map.empty, dvs = Map.empty, op = Some("TRUNCATE")), { v =>
         if (m.cdfEnabled) {
-          val pre = alignToSchema(readFiles(spark, bp, m, m.allFiles), m)
           commitCdfVersion(fs, bp, v,
-            pre.withColumn("change_type", lit("delete"))
+            readFiles(spark, bp, m, m.allFiles).withColumn("change_type", lit("delete"))
               .withColumn("_commit_version", lit(v)))
         }
         v
@@ -3374,7 +3379,8 @@ object SnapshotLog {
       }
   }
 
-  /** Per-file blooms over `cols` for the given live files — the shared
+  /** Per-file blooms over `cols` for `files` (rel path → byte length)
+    * of `m` or staged on top of it, read by `m`'s schema — the shared
     * core of [[buildBlooms]] and compaction's rebuild (blooms must
     * SURVIVE maintenance: a rewritten file without a fresh bloom would
     * silently stop point-lookup skipping on its keys). One pass: sizing
@@ -3383,38 +3389,29 @@ object SnapshotLog {
       spark: SparkSession,
       fs: FileSystem,
       bp: Path,
-      relFiles: Seq[String],
+      m: Manifest,
+      files: Seq[(String, Long)],
       cols: Seq[String],
       fpp: Double): Map[String, Map[String, String]] = {
-    if (relFiles.isEmpty || cols.isEmpty) return Map.empty
+    val read = columnsOf(scanSchema(m, rowIds = false), cols)
+    val usable = cols.filter(read.fieldNames.contains)
+    if (files.isEmpty || usable.isEmpty) return Map.empty
     graft.functions.GraftFunctions.register(spark)
-    val byPath = relFiles
-      .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(relFiles.map(f => new Path(bp, f).toString): _*)
-    val present = df.columns.toSet
-    val usable = cols.filter(present)
-    if (usable.isEmpty) return Map.empty
-    val maxRows = math.max(1L,
-      df.groupBy(input_file_name().as("__f")).count()
-        .agg(max(col("count"))).head.getLong(0))
+    val maxRows = math.max(1L, perFile(spark, fs, bp, m, files, read,
+      Seq(count(lit(1)))).valuesIterator.map(_.getLong(1)).maxOption.getOrElse(1L))
     val bits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(maxRows, fpp)
     val aggs = usable.map(c => call_function(
       graft.functions.GraftFunctions.BloomAggName,
       col(c), lit(maxRows), lit(bits)).as(s"__b_$c"))
-    df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().flatMap { r =>
-        val rel = byPath.get(
-          new Path(new java.net.URI(r.getString(0))).toUri.getPath)
-        val bl = usable.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(i + 1)) None
-          else Some(c -> java.util.Base64.getEncoder
-            .encodeToString(r.getAs[Array[Byte]](i + 1)))
-        }.toMap
-        rel.filter(_ => bl.nonEmpty).map(_ -> bl)
+    perFile(spark, fs, bp, m, files, read, aggs).flatMap { case (f, r) =>
+      val bl = usable.zipWithIndex.flatMap { case (c, i) =>
+        if (r.isNullAt(i + 1)) None
+        else Some(c -> java.util.Base64.getEncoder
+          .encodeToString(r.getAs[Array[Byte]](i + 1)))
       }.toMap
+      if (bl.isEmpty) None else Some(f -> bl)
+    }
   }
 
   /** The files whose bloom for `column` MAY contain `value` — plus
@@ -3542,17 +3539,17 @@ object SnapshotLog {
             }
           toPhysical(out, m).write.mode("overwrite").parquet(dir.toString)
         }
-        val newStatuses = fs.listStatus(dir).toSeq
+        val newStaged = fs.listStatus(dir).toSeq
           .filter(_.getPath.getName.endsWith(".parquet"))
-        val newFiles = newStatuses.map(st => s"$rel/${st.getPath.getName}")
-        val newSizes = sizeStats(spark, fs, bp,
-          newStatuses.map(st => (part, s"$rel/${st.getPath.getName}", st.getLen)))
+          .map(st => (part, s"$rel/${st.getPath.getName}", st.getLen))
+        val newFiles = newStaged.map(_._2)
+        val newSizes = sizeStats(spark, fs, bp, newStaged)
         // compacted-away files take their stats entries with them; the
         // replacement file gets fresh bounds when statsCols is passed,
         // and is otherwise stats-less (conservative: never pruned)
         val newStats =
           if (statsCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel,
+          else fileStats(spark, fs, bp, m, newStaged, scanSchema(m, rowIds = false),
             statsCols.filterNot(m.dropped.contains))
         // blooms SURVIVE maintenance: rebuild over exactly the columns
         // the replaced files carried blooms for, so point-lookup
@@ -3563,7 +3560,7 @@ object SnapshotLog {
           // a dropped column's bloom cannot rebuild (its bytes are gone
           // from the rewrite) — and is pointless, nothing queries it
           .filterNot(m.dropped.contains)
-        val newBlooms = computeBlooms(spark, fs, bp, newFiles, bloomCols, 0.03)
+        val newBlooms = computeBlooms(spark, fs, bp, m, lengths(newStaged), bloomCols, 0.03)
         Publish(Manifest(version, m.files.updated(part, newFiles),
           (m.stats -- files) ++ mergeFileStats(newSizes, newStats),
           (m.blooms -- files) ++ newBlooms,
@@ -3699,13 +3696,12 @@ object SnapshotLog {
         staged = listStaged(fs, dir, rel)
         stagedStatsC =
           if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel,
+          else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
             statsCols.filterNot(m.dropped.contains))
         val bloomCols = oldFiles.flatMap(f =>
           m.blooms.getOrElse(f, Map.empty).keys).distinct
           .filterNot(m.dropped.contains)
-        stagedBloomsC = computeBlooms(
-          spark, fs, bp, staged.map(_._2), bloomCols, 0.03)
+        stagedBloomsC = computeBlooms(spark, fs, bp, m, lengths(staged), bloomCols, 0.03)
         stagedOld = need.iterator.map(p => p -> m.files.getOrElse(p, Nil)).toMap
         val fset = oldFiles.toSet
         stagedDvs = m.dvs.filter { case (f, _) => fset(f) }
@@ -3847,10 +3843,8 @@ object SnapshotLog {
     val m0 = readManifest(fs, bp).getOrElse(return None)
     val cdfOn = writeCdf || m0.cdfEnabled
     // row ids are read-side identity metadata, never a data column: on
-    // row-tracked tables a snapshot read exposes [[RowIdCol]], and every
-    // CDF feed below aligns to live0.schema — keeping the id here would
-    // leak an (always-null after align) identity column into the
-    // delete feed, diverging from the insert/merge/replaceWhere feeds
+    // row-tracked tables a snapshot read exposes [[RowIdCol]], which the
+    // predicate probe below must not see
     val live0 = readSnapshot(spark, bp, m0, None).drop(RowIdCol)
     val pcs = partColsOf(partCol)
     lazy val partTypes = pcs.map(c =>
@@ -3895,14 +3889,6 @@ object SnapshotLog {
       else refs.forall(r => pcs.exists(_.equalsIgnoreCase(r)))
     }
 
-    // conform, not cast: tolerates nullability-only differences and
-    // struct-arity gaps from nested add-column evolution
-    def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
-    def absFiles(m: Manifest, parts: Seq[String]): Seq[String] =
-      parts.flatMap(p => m.files.getOrElse(p, Nil))
-        .map(f => new Path(bp, f).toString)
-
     commitExisting(fs, bp, "DELETE", maxRetries, Some(m0)) { (m, version, attempt) =>
       requireCurrentLayout(m, partCol)
       // mixed-layout tables (partition evolution) skip the
@@ -3931,7 +3917,7 @@ object SnapshotLog {
             m.blooms -- gone, m.dvs -- gone, m.schemaJson,
             Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped), { v =>
           if (cdfOn) commitCdfVersion(fs, bp, v,
-            align(readFiles(spark, bp, m, gone), live0.schema)
+            readFiles(spark, bp, m, gone)
               .withColumn("change_type", lit("delete"))
               .withColumn("_commit_version", lit(v)))
           Some(DmlOutcome(v, metadataOnly = true, dropped, Nil))
@@ -3943,8 +3929,8 @@ object SnapshotLog {
         require(bnToRel.size == all.size,
           "DV delete needs unique <dir>/<file> suffixes across live files " +
             "(Spark part-file names embed the write job's UUID)")
-        val raw = toLogical(spark.read.option("mergeSchema", "true")
-          .parquet(all.map(f => new Path(bp, f).toString): _*)
+        val raw = toLogical(SnapshotRelation.scanFiles(spark, bp, m,
+            all.map(f => f -> fileBytes(m, f)), scanSchema(m, rowIds = false))
           .withColumn("__f", dvKeyCol)
           .withColumn("__pos", col("_metadata.row_index")), m)
         // only still-live rows may match: a position already in a DV is
@@ -4007,8 +3993,8 @@ object SnapshotLog {
                   case Dv(_, Some(b64), _) =>
                     decodePositions(b64).toSeq.map(bn -> _).toDF("__f", "__pos")
                   case Dv(_, None, Some(sRel)) =>
-                    spark.read.parquet(new Path(bp, sRel).toString)
-                      .select(lit(bn).as("__f"), col("pos").cast("long").as("__pos"))
+                    spark.read.schema(DvSidecarSchema).parquet(new Path(bp, sRel).toString)
+                      .select(lit(bn).as("__f"), col("pos").as("__pos"))
                   case _ => sys.error("DV without payload")
                 }
               }
@@ -4032,7 +4018,7 @@ object SnapshotLog {
             }
             Publish(m.copy(dvs = m.dvs ++ newDvs, op = Some("DELETE_DV")), { v =>
               if (cdfOn) commitCdfVersion(fs, bp, v,
-                align(matchRows(liveRows), live0.schema)
+                matchRows(liveRows).drop("__f", "__pos")
                   .withColumn("change_type", lit("delete"))
                   .withColumn("_commit_version", lit(v)))
               Some(DmlOutcome(v, metadataOnly = false, Nil, Nil))
@@ -4055,7 +4041,7 @@ object SnapshotLog {
           Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
         else {
           val preFiles = matched.flatMap(p => m.files.getOrElse(p, Nil))
-          val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
+          val pre = readFiles(spark, bp, m, preFiles)
           val keep = keepRows(pre)
           val rel =
             s"data/d$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
@@ -4072,7 +4058,8 @@ object SnapshotLog {
           requireNoLegacyCollision(m, partCol, stagedByPart.keys, matched.toSet)
           val stagedStats =
             if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-            else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+            else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
+              statsCols.map(m.phys))
           val next = Manifest(
             version,
             spliceStaged(m.files, matched, stagedByPart),
@@ -4126,15 +4113,6 @@ object SnapshotLog {
     val fs = fsFor(spark, bp)
     val m0 = readManifest(fs, bp)
     val cdfOn = writeCdf || m0.exists(_.cdfEnabled)
-    // conform, not cast: tolerates nullability-only differences and
-    // struct-arity gaps from nested add-column evolution. The USER
-    // BATCH aligns strict: an extra nested subfield the target schema
-    // lacks errors instead of silently discarding its data; survivors
-    // (the table's own files) align non-strict as everywhere else.
-    def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
-    def alignBatch(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f, strict = true)): _*)
     val batch = rows.persist()
     try {
       val violations =
@@ -4165,20 +4143,13 @@ object SnapshotLog {
           // tables): read with ids, carry as the materialized column
           val preAll =
             if (preFiles.isEmpty) lv.limit(0)
-            else if (m.rowTracking) readFilesWithRowIds(spark, bp, m, preFiles)
-            else readFiles(spark, bp, m, preFiles)
+            else readFiles(spark, bp, m, preFiles, rowIds = true)
           val mat =
             if (!m.rowTracking) Nil
             else Seq((if (preAll.columns.contains(RowIdCol)) col(RowIdCol)
               else lit(null).cast("long")).as(MatRowIdCol))
-          val keepBase = preAll.filter(!coalesce(predicate, lit(false)))
-          val keepM =
-            if (mat.isEmpty) align(keepBase, lv.schema)
-            else
-              // align + carry the id column (align alone would drop it)
-              keepBase.select(
-                lv.schema.fields.toSeq.map(f => conformTo(keepBase, f)) ++
-                  mat: _*)
+          val keepM = preAll.filter(!coalesce(predicate, lit(false)))
+            .select(lv.schema.fieldNames.map(col).toSeq ++ mat: _*)
           val insM = alignBatch(batch, lv.schema)
             .select(lv.schema.fieldNames.map(col).toSeq ++
               (if (mat.isEmpty) Nil
@@ -4197,7 +4168,8 @@ object SnapshotLog {
           val stagedStats =
             if (statsCols.isEmpty || staged.isEmpty)
               Map.empty[String, Map[String, (String, String)]]
-            else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+            else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
+              statsCols.map(m.phys))
           val next = Manifest(
             version,
             spliceStaged(m.files, affected, stagedByPart),
@@ -4209,7 +4181,7 @@ object SnapshotLog {
             m.colmap, m.dropped)
           Publish(next, { v =>
             if (cdfOn) {
-              val del = align(preAll.filter(coalesce(predicate, lit(false))), lv.schema)
+              val del = preAll.filter(coalesce(predicate, lit(false))).drop(RowIdCol)
                 .withColumn("change_type", lit("delete"))
               val ins = alignBatch(batch, lv.schema)
                 .withColumn("change_type", lit("insert"))
@@ -4279,11 +4251,6 @@ object SnapshotLog {
       matcher.map(_.keeps(df))
         .getOrElse(df.filter(!coalesce(predicate, lit(false))))
 
-    // conform, not cast: tolerates nullability-only differences and
-    // struct-arity gaps from nested add-column evolution
-    def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
-
     commitExisting(fs, bp, "UPDATE", maxRetries, m0) { (m, version, attempt) =>
       requireCurrentLayout(m, partCol)
       // generated PARTITION columns recompute below under the session
@@ -4341,7 +4308,7 @@ object SnapshotLog {
         Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
       else {
         val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
-        val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
+        val pre = readFiles(spark, bp, m, preFiles)
         val updated = postImage(matchRows(pre), Nil)
         enforceConstraints(updated, m, base)
         // a GENERATED column the statement SETs explicitly skips the
@@ -4378,7 +4345,8 @@ object SnapshotLog {
         requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
         val stagedStats =
           if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+          else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
+            statsCols.map(m.phys))
         val next = Manifest(
           version,
           spliceStaged(m.files, affected, stagedByPart),
@@ -4603,7 +4571,7 @@ object SnapshotLog {
     val added = m.allFiles.filterNot(prevFiles)
     if (added.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema.get)
-    else alignToSchema(readFiles(spark, new Path(base), m, added), m)
+    else readFiles(spark, new Path(base), m, added)
   }
 
   def cdfVersions(fs: FileSystem, base: Path): Seq[Long] = {

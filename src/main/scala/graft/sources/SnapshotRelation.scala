@@ -47,6 +47,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * manifest (`versionAsOf`) and the SAME planner integration serves
   * historical snapshots.
   *
+  * `statuses` are the files the index serves: every live file for the
+  * query relation, the files an internal read names (possibly staged
+  * ones the manifest does not list yet) for
+  * [[SnapshotRelation.scanFiles]].
+  *
   * Scale: `listFiles` is O(manifest) driver-side work against
   * already-loaded metadata — at 100 TB / 1 GB files that is ~10^5
   * in-memory predicate checks per plan, the same planning cost Iceberg
@@ -91,7 +96,7 @@ final class SnapshotFileIndex(
     typedParts.map(tp => StructType(tp._1)).getOrElse(StructType(Nil))
 
   override def inputFiles: Array[String] =
-    manifest.allFiles.map(f => new Path(base, f).toString).toArray
+    statuses.keysIterator.map(f => new Path(base, f).toString).toArray
 
   override def refresh(): Unit = ()
 
@@ -100,7 +105,7 @@ final class SnapshotFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val all = manifest.allFiles
+    val all = statuses.keys.toSeq
     typedParts match {
       case Some((fields, valueOf)) =>
         // Partition-only conjuncts evaluate EXACTLY against the typed
@@ -339,20 +344,9 @@ object SnapshotRelation {
       bp: Path,
       m: SnapshotLog.Manifest,
       partCol: Option[String]): (DataFrame, SnapshotFileIndex) = {
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = m.allFiles.map { f =>
-      f -> new FileStatus(SnapshotLog.fileBytes(m, f), false, 1,
-        128L * 1024 * 1024, 0L, fs.makeQualified(new Path(bp, f)))
-    }.toMap
-    val schema = m.schema.get
-    // row-tracked tables read the MATERIALIZED id column too (files
-    // that predate a rewrite simply return null for it and fall back
-    // to base + row_index in the coalesce)
-    val dataSchema0 = SnapshotLog.physSchema(m, schema)
-    val dataSchema =
-      if (m.rowTracking) StructType(dataSchema0.fields :+
-        StructField(SnapshotLog.MatRowIdCol, LongType, nullable = true))
-      else dataSchema0
+    val statuses = statusesOf(spark, bp,
+      m.allFiles.map(f => f -> SnapshotLog.fileBytes(m, f)))
+    val dataSchema = SnapshotLog.scanSchema(m, rowIds = true)
     // the partition column(s): the caller's hint, else the manifest's
     // own stamped layout — either way PHYSICAL names (column mapping);
     // multi-column layouts arrive comma-joined and keep declaration
@@ -419,19 +413,47 @@ object SnapshotRelation {
     // that column entirely, and the relation's user-visible schema
     // keeps the data-schema column ORDER (mergeDataAndPartitionSchema
     // keeps overlapped columns in data order).
-    val rel = HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = dataSchema,
-      bucketSpec = bucket,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-    val df0 = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(rel)
-    (SnapshotLog.toLogical(
-      SnapshotLog.applyDvs(spark, bp, m, m.allFiles,
-        SnapshotLog.attachRowIds(spark, bp, m, m.allFiles, df0))
-        .drop("__rt_file", "__rt_pos"), m), index)
+    (SnapshotLog.overScan(spark, bp, m, m.allFiles,
+      scan(spark, index, dataSchema, bucket), rowIds = true), index)
+  }
+
+  /** A stock parquet scan of `index`'s files typed by `dataSchema`
+    * (PHYSICAL names): no listing and no footer read. Files that lack
+    * a column or a nested subfield read it as NULL, and files written
+    * before a type widening read upcast — both by the parquet reader
+    * itself. */
+  private def scan(
+      spark: SparkSession, index: FileIndex, dataSchema: StructType,
+      bucket: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = None): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(HadoopFsRelation(
+        location = index,
+        partitionSchema = index.partitionSchema,
+        dataSchema = dataSchema,
+        bucketSpec = bucket,
+        fileFormat = new ParquetFileFormat,
+        options = Map.empty)(spark))
+
+  /** The raw scan of `files` (rel path under `bp` → byte length): files
+    * of `m`, or files just staged for a commit on top of it. Internal
+    * reads go through here, typed by the manifest's schema (or, for
+    * staged files, by the schema of the frame that was staged). */
+  private[sources] def scanFiles(
+      spark: SparkSession, bp: Path, m: SnapshotLog.Manifest,
+      files: Seq[(String, Long)], dataSchema: StructType): DataFrame =
+    scan(spark, new SnapshotFileIndex(
+      spark, bp, m, None, statusesOf(spark, bp, files)), dataSchema)
+
+  /** `FileStatus` entries synthesized from recorded byte lengths, in
+    * `files` order. */
+  private def statusesOf(
+      spark: SparkSession, bp: Path,
+      files: Seq[(String, Long)]): scala.collection.immutable.VectorMap[String, FileStatus] = {
+    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    scala.collection.immutable.VectorMap(files.map { case (f, len) =>
+      f -> new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
+        fs.makeQualified(new Path(bp, f)))
+    }: _*)
   }
 
   /** Typed values for every manifest partition key of `fields` — the

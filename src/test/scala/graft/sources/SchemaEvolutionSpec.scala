@@ -109,4 +109,78 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(e2.getMessage.contains("widening") ||
       e2.getMessage.contains("partition"), e2.getMessage)
   }
+
+  test("widened columns: upsert, row delete and optimize read old and wide files together") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_widen_ops").toString + "/tbl"
+    type Rec = (Long, Long, Double, BigDecimal, String)
+    def batch(rows: Seq[Rec], wide: Boolean) =
+      rows.map(r => (r._1, r._2, r._3, r._4, r._5)).toDF("id", "v", "f", "dd", "day")
+        .select(col("id"),
+          col("v").cast(if (wide) LongType else IntegerType).as("v"),
+          col("f").cast(if (wide) DoubleType else FloatType).as("f"),
+          col("dd").cast(if (wide) DecimalType(12, 2) else DecimalType(5, 2)).as("dd"),
+          col("day"))
+    val days = Seq("d0", "d1", "d2")
+    val narrow: Seq[Rec] = days.zipWithIndex.flatMap { case (d, k) =>
+      (1 to 10).map { i =>
+        val id = k * 100L + i
+        (id, id, id / 4.0, BigDecimal(id).setScale(2), d)
+      }
+    }
+    val wide: Seq[Rec] = days.zipWithIndex.flatMap { case (d, k) =>
+      Seq((k * 100L + 51, 5000000000L + k, 1.1d + k, BigDecimal("9999999999.99"), d),
+        (k * 100L + 52, -5000000000L - k, 2.2d + k, BigDecimal("-1234567890.12"), d))
+    }
+    var expected: Map[Long, Rec] = Map.empty
+    def put(rs: Seq[Rec]): Unit = expected ++= rs.map(r => r._1 -> r)
+    def check(step: String): Unit = {
+      val got = SnapshotLog.read(spark, base).get
+        .select("id", "v", "f", "dd", "day").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(0), r.getLong(1), r.getDouble(2),
+          BigDecimal(r.getDecimal(3)), r.getString(4))))
+        .toMap
+      assert(got == expected, s"after $step")
+    }
+    SnapshotLog.appendBatch(spark, base, batch(narrow, wide = false), "day", 1L)
+    put(narrow)
+    SnapshotLog.widenColumnType(spark, base, "v", LongType)
+    SnapshotLog.widenColumnType(spark, base, "f", DoubleType)
+    SnapshotLog.widenColumnType(spark, base, "dd", DecimalType(12, 2))
+    // every day now holds an int/float/decimal(5,2) file and a
+    // long/double/decimal(12,2) one; each step below rewrites one day
+    // while its files are still mixed
+    SnapshotLog.appendBatch(spark, base, batch(wide, wide = true), "day", 2L)
+    put(wide)
+    check("the wide append")
+
+    val change: Seq[Rec] = Seq((101L, 6000000000L, 9.5d, BigDecimal("7654321.00"), "d1"),
+      (160L, 8L, 0.5d, BigDecimal("8.00"), "d1"))
+    SnapshotLog.upsertBatch(spark, base, batch(change, wide = true), Seq("id"), "id", "day",
+      batchId = 3L)
+    put(change)
+    check("upsert")
+
+    SnapshotLog.deleteWhere(spark, base, col("id") === 202L, "day")
+    expected -= 202L
+    check("row delete")
+
+    assert(SnapshotLog.optimizeTable(spark, base, "day") > 0L)
+    check("optimize")
+  }
+
+  test("a change-feed append after RENAME COLUMN feeds its inserts under the new name") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_rename_cdf").toString + "/tbl"
+    SnapshotLog.appendBatch(spark, base, Seq((1L, 10L, "d0")).toDF("id", "v", "day"),
+      "day", 1L, writeCdf = true)
+    SnapshotLog.renameColumn(spark, base, "v", "amount")
+    val v = SnapshotLog.appendBatch(spark, base,
+      Seq((2L, 20L, "d0")).toDF("id", "amount", "day"), "day", 2L, writeCdf = true)
+    val ins = SnapshotLog.readCdf(spark, base).get
+      .filter(col("_commit_version") === v)
+      .select("id", "amount", "change_type").as[(Long, Long, String)].collect().toSeq
+    assert(ins == Seq((2L, 20L, "insert")))
+  }
 }
