@@ -283,14 +283,13 @@ private object SnapshotMaintenance {
   }
 }
 
-/** `OPTIMIZE view` — whole-table compaction as ONE transaction
-  * ([[SnapshotLog.optimizeTable]]); with `ZORDER BY (cols)` each
-  * fragmented partition is instead range-clustered on the key(s) via
-  * [[SnapshotLog.compactPartition]] so file bounds become selective.
-  * `WHERE <partition predicate>` restricts maintenance to matching
-  * partitions (Delta's OPTIMIZE predicate): the predicate evaluates
-  * against partition VALUES only — pure metadata, no data scan — and
-  * each selected partition compacts as its own commit. */
+/** `OPTIMIZE view` — compaction as ONE transaction
+  * ([[SnapshotLog.optimizeTable]]); with `ZORDER BY (cols)` every
+  * selected partition is instead range-clustered on the key(s) so file
+  * bounds become selective. `WHERE <partition predicate>` restricts
+  * maintenance to matching partitions (Delta's OPTIMIZE predicate):
+  * the predicate evaluates against partition VALUES only — pure
+  * metadata, no data scan. Either way the statement is one commit. */
 case class SnapshotOptimizeCommand(
     view: String, zorderBy: Seq[String], where: Option[String] = None)
   extends LeafRunnableCommand {
@@ -332,23 +331,17 @@ case class SnapshotOptimizeCommand(
         s"OPTIMIZE WHERE matched no partition of $view")
       picked
     }
-    val v =
-      if (zorderBy.isEmpty && selected.isEmpty)
-        SnapshotLog.optimizeTable(spark, path, partCol,
-          statsCols = statsCols)
-      else {
-        // ZORDER and/or WHERE: per-partition rewrite (each partition's
-        // commit is its own transaction; clusterFiles sized so each
-        // file covers a tight key range)
-        selected.getOrElse(m0.files.keySet.toSeq.sorted).foreach { p =>
-          SnapshotLog.compactPartition(spark, path, p,
-            statsCols = (statsCols ++ zorderBy).distinct.sorted,
-            clusterBy = zorderBy,
-            clusterFiles =
-              if (zorderBy.isEmpty) 1 else math.max(1, m0.files(p).size))
-        }
-        SnapshotLog.readManifest(fs, bp).map(_.version).getOrElse(0L)
-      }
+    // ZORDER keeps each partition's file count: as many range-clustered
+    // files as the selected partitions hold on average, so each file
+    // covers a tight key range
+    val clusterFiles = {
+      val ps = selected.getOrElse(m0.files.keySet.toSeq)
+      val n = ps.map(p => m0.files.getOrElse(p, Nil).size).sum
+      math.max(1, math.ceil(n.toDouble / math.max(ps.size, 1)).toInt)
+    }
+    val v = SnapshotLog.optimizeTable(spark, path, partCol,
+      statsCols = (statsCols ++ zorderBy).distinct.sorted,
+      parts = selected, zorderBy = zorderBy, clusterFiles = clusterFiles)
     SnapshotDml.repin(spark, view)
     val after = SnapshotLog.readManifest(fs, bp)
       .map(_.allFiles.size.toLong).getOrElse(0L)

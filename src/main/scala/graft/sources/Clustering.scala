@@ -28,8 +28,7 @@ object Clustering {
       path: String,
       key: String,
       nFiles: Int): Unit =
-    df.repartitionByRange(nFiles, col(key))
-      .sortWithinPartitions(col(key))
+    rangeCluster(df, Seq(key), nFiles)
       .write.mode(SaveMode.Overwrite)
       .parquet(path)
 
@@ -78,11 +77,28 @@ object Clustering {
       .write.mode(SaveMode.Overwrite)
       .parquet(path)
 
+  /** Range-cluster `df` on `keys` (one key as-is, several by their
+    * z-value) into `nFiles` range partitions, each sorted internally —
+    * the staged layout of the commit log's clustered writes
+    * ([[SnapshotLog.upsertBatch]]'s `clusterBy`, OPTIMIZE ZORDER).
+    * `lead` columns range-partition and sort ahead of the key, so a
+    * rewrite spanning several table partitions keeps each one's rows
+    * in ranges of their own. */
+  def rangeCluster(
+      df: DataFrame,
+      keys: Seq[String],
+      nFiles: Int,
+      lead: Seq[Column] = Nil): DataFrame = {
+    val (d, key) =
+      if (keys.size == 1) (df, col(keys.head)) else (withZ(df, keys), col("__z"))
+    d.repartitionByRange(math.max(nFiles, 1), lead :+ key: _*)
+      .sortWithinPartitions(lead :+ key: _*)
+      .drop("__z")
+  }
+
   /** Append the Morton interleave of `keys` as a `__z` column — the
-    * sortable z-value [[writeZOrdered]] clusters on, exposed so other
-    * writers (e.g. the commit-log staged write,
-    * [[SnapshotLog.upsertBatch]]'s `clusterBy`) can reuse the layout.
-    * The min/max collect is one scalar row. */
+    * sortable z-value [[writeZOrdered]] and [[rangeCluster]] cluster
+    * on. The min/max collect is one scalar row. */
   def withZ(df: DataFrame, keys: Seq[String], bits: Int = 8): DataFrame = {
     val stats = df.agg(
       keys.flatMap(k => Seq(

@@ -101,8 +101,8 @@ object SnapshotLog {
     *               without it, [[readManifestAt]] refuses to read a
     *               root without it); None only on the in-memory empty
     *               base a first write starts from.
-    * @param op     what produced this version (UPSERT, DELETE, DELETE_DV,
-    *               UPDATE, COMPACT, OPTIMIZE, STATS, BLOOMS) — the
+    * @param op     what produced this version (APPEND, UPSERT, DELETE,
+    *               DELETE_DV, UPDATE, OPTIMIZE, STATS, BLOOMS, …) — the
     *               Delta DESCRIBE HISTORY operation column, surfaced by
     *               [[history]].
     * @param constraints name → CHECK expression (Spark SQL text).
@@ -584,21 +584,6 @@ object SnapshotLog {
     }.distinct.sorted
   }
 
-  /** Replace `removed`'s manifest entries with the staged layout,
-    * APPENDING into any partition the removal did not cover: under
-    * partition evolution a rewrite's rows can route into a
-    * current-layout partition that was not part of the affected set
-    * (legacy-partition migration), and wholesale `++` would silently
-    * drop that partition's existing files. Pre-evolution behavior
-    * (staged ⊆ removed) is byte-identical. */
-  private def spliceStaged(
-      files: Map[String, Seq[String]], removed: Iterable[String],
-      stagedByPart: Map[String, Seq[String]]): Map[String, Seq[String]] = {
-    val kept = files -- removed
-    kept ++ stagedByPart.map { case (p, fls) =>
-      p -> (kept.getOrElse(p, Nil) ++ fls).sorted }
-  }
-
   /** Refuse a staged write that lands files under a partition KEY the
     * manifest still tracks under a DIFFERENT (legacy) layout — merging
     * the two entries would pair one key string with two layouts.
@@ -608,7 +593,7 @@ object SnapshotLog {
     * legacy entry (and tag) leaves the manifest in this very commit. */
   private def requireNoLegacyCollision(
       m: Manifest, partCol: String, stagedKeys: Iterable[String],
-      removed: Set[String] = Set.empty): Unit = {
+      removed: Set[String]): Unit = {
     val bad = stagedKeys.filterNot(removed).filter(k =>
       m.keyLayout(k).exists(l => !sameLayout(l, partCol)))
     require(bad.isEmpty,
@@ -1500,15 +1485,6 @@ object SnapshotLog {
       }
     }: _*)
 
-  /** A maintenance rewrite's read: row-tracked tables read their ids
-    * and carry them into the rewrite as the MATERIALIZED physical
-    * column — how ids survive OPTIMIZE/compaction. */
-  private def readForRewrite(
-      spark: SparkSession, bp: Path, m: Manifest,
-      files: Seq[String]): DataFrame =
-    readFiles(spark, bp, m, files, rowIds = true)
-      .withColumnRenamed(RowIdCol, MatRowIdCol)
-
   /** Inverse of [[toPhysical]] on a scanned frame: physical parquet
     * names back to the logical schema's names. Non-mapped columns
     * (including scan bookkeeping like `__f`/`__pos`) pass through.
@@ -1992,8 +1968,7 @@ object SnapshotLog {
       Map[String, String], Set[String], Map[String, String],
       Map[String, Dv])] = None
     var stagedHwU: Map[String, String] = Map.empty
-    var staged: Seq[(String, String, Long)] = Nil // (partition, rel file, bytes)
-    var stagedStats: Map[String, Map[String, (String, String)]] = Map.empty
+    var staged: Option[Rewrite] = None
     // (pre, post) state of the AFFECTED partitions only — the change
     // feed derives from these, never from a full-table diff
     var cdfPair: Option[(DataFrame, DataFrame)] = None
@@ -2073,16 +2048,6 @@ object SnapshotLog {
             case None => merged0
             case Some(ids) => merged0.join(ids, keys, "left")
           }
-          // staging dir unique per attempt: a concurrent writer that
-          // picked the same (batchId, version) must never overwrite a
-          // dir the race winner committed — a loser's orphan dir is
-          // vacuum's job. The partition column is DUPLICATED into __p
-          // for the directory layout so it survives as a real column in
-          // the data files (manifest-list reads never do Hive dir-name
-          // reconstruction).
-          val rel =
-            s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-          val dir = new Path(bp, rel)
           // Staged layout, by table kind: a plain table rebalances by
           // partition value (below), a bucketed one is routed by its
           // bucket columns in [[stagePartitioned]], and `clusterBy`
@@ -2090,7 +2055,7 @@ object SnapshotLog {
           // each file covers a tight key range — the layout that makes
           // the recorded `statsCols` bounds actually selective at read
           // ([[filesForRange]]). Files still accrue across commits;
-          // [[compactPartition]] folds them down.
+          // [[optimizeTable]] folds them down.
           val toWrite0 = merged.withColumn("__p", partRoute(partCol))
           // range clustering and bucketing both dictate the file
           // layout — they cannot compose (a range-routed file spans
@@ -2115,55 +2080,30 @@ object SnapshotLog {
             if (clusterBy.isEmpty && statsCols.isEmpty && m.bucketSpec.isEmpty)
               toWrite0.hint("rebalance", col("__p"))
             else if (clusterBy.isEmpty) toWrite0
-            else {
-              val (df, sortCol) =
-                if (clusterBy.size == 1) (toWrite0, col(clusterBy.head))
-                else (Clustering.withZ(toWrite0, clusterBy), col("__z"))
-              df.repartitionByRange(math.max(clusterFiles, 1), sortCol)
-                .sortWithinPartitions(sortCol)
-                .drop("__z")
-            }
-          val physOut = toPhysical(toWrite, m)
-          stagePartitioned(physOut, m, fs, dir)
-          val wrote = StructType(physOut.schema.filterNot(_.name == "__p"))
-          staged = listStaged(fs, dir, rel)
-          stagedStats =
-            if (statsCols.isEmpty) Map.empty
-            else fileStats(spark, fs, bp, m, staged, wrote, statsCols.map(m.phys))
+            else Clustering.rangeCluster(toWrite0, clusterBy, clusterFiles)
+          // the rewrite reads the affected partitions' files (through
+          // their DVs); the staged files replace them
+          val r = stageRewrite(spark, fs, bp, m, toWrite, relFiles,
+            s"b${batchId}v", version, attempt, statsCols.map(m.phys))
           if (cdfOn) {
             // post-state re-read from the immutable staged files (not
             // the merge plan, which would re-run the join on feed write)
             val post = toLogical(SnapshotRelation.scanFiles(spark, bp, m,
-              lengths(staged), wrote), m)
+              lengths(r.staged), r.schema), m)
               .select(targetFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
             cdfPair = Some((baseSubset, post))
           }
+          staged = Some(r)
           mergedAgainst = Some(
             (affectedState, m.colmap, m.dropped, identSnap, dvSnap))
         }
-        val replaced = affectedAll.flatMap(p => m.files.getOrElse(p, Nil))
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys,
-          affectedAll.toSet)
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, affectedAll, stagedByPart),
-          (m.stats -- replaced) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          // rewritten files take their blooms with them; untouched
-          // files keep theirs (conservative: bloom-less files are
-          // never pruned, so staleness is impossible by construction)
-          m.blooms -- replaced,
-          // rewritten files' rows were merged THROUGH their DVs; the
-          // replacement files carry no deleted positions
-          m.dvs -- replaced,
-          Some(evolveSchema(m.schemaJson,
-            org.apache.spark.sql.types.StructType(targetFields.toArray))),
-          Some(if (opCol.isDefined) "CDC" else "UPSERT"),
-          m.constraints,
-          m.txns ++ txn,
-          m.props ++ genTzStamp(spark, m.props, partCol) ++ stagedHwU,
-          m.colmap, m.dropped)
+        val next = staged.get
+          .onto(m, partCol, version, if (opCol.isDefined) "CDC" else "UPSERT")
+          .copy(
+            schemaJson = Some(evolveSchema(m.schemaJson,
+              org.apache.spark.sql.types.StructType(targetFields.toArray))),
+            txns = m.txns ++ txn,
+            props = m.props ++ genTzStamp(spark, m.props, partCol) ++ stagedHwU)
         onBeforeUpsertCommit()
         Publish(next, v =>
           if (cdfOn) cdfPair.foreach { case (pre, post) =>
@@ -2227,7 +2167,7 @@ object SnapshotLog {
     partColsOf(partCol).foreach(pc => require(
       fields.exists(_.name.equalsIgnoreCase(pc)),
       s"append batch lacks partition column $pc"))
-    var staged: Seq[(String, String, Long)] = Nil
+    var staged: Option[Rewrite] = None
     // mapping under which `staged` was renamed logical→physical — a
     // racing RENAME/DROP COLUMN invalidates it (restage; the old
     // files become vacuum-reclaimable orphans). The IDENTITY
@@ -2266,9 +2206,6 @@ object SnapshotLog {
         val identSnap = m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
         if (staged.isEmpty ||
             !stagedUnder.contains((m.colmap, m.dropped, identSnap))) {
-          val rel =
-            s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-          val dir = new Path(bp, rel)
           val (rows2, hwUpd) = applyIdentity(rows1, m, enforceAlways = true)
           stagedHw = hwUpd
           // REBALANCE by partition value before the write (guide §6, same
@@ -2280,54 +2217,41 @@ object SnapshotLog {
           // fragmentation still accrues (each append commits its own
           // files) — compaction keeps its job. Bucketed tables skip it:
           // stagePartitioned routes them by the bucket columns.
-          val routed = toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
-          stagePartitioned(
+          val routed = rows2.withColumn("__p", partRoute(partCol))
+          val r = stageRewrite(spark, fs, bp, m,
             if (m.bucketSpec.isEmpty) routed.hint("rebalance", col("__p")) else routed,
-            m, fs, dir)
-          staged = listStaged(fs, dir, rel)
+            Nil, s"b${batchId}v", version, attempt)
           // NULL-partition gate on the STAGED data — one pass, no query
           // re-execution (a driver-side pre-check would run the source
           // twice, and a non-deterministic source could pass the check
           // yet write NULLs). The staged dir listing is ground truth.
-          if (staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"))
+          r.staged.find(_._1 == "__HIVE_DEFAULT_PARTITION__").foreach { case (_, f, _) =>
             sys.error(s"batch writes NULL into partition column $partCol " +
-              s"(staged at $dir — unreferenced, vacuum reclaims it)")
+              s"(staged at $f — unreferenced, vacuum reclaims it)")
+          }
+          staged = Some(r)
           stagedUnder = Some((m.colmap, m.dropped, identSnap))
         }
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        // overwrite replaces every partition (legacy keys and their tags
-        // leave with it) — only the append merge can collide
-        if (!overwrite)
-          requireNoLegacyCollision(m, partCol, stagedByPart.keys)
-        val files =
-          if (overwrite) stagedByPart
-          else m.files ++ stagedByPart.map { case (p, fls) =>
-            p -> (m.files.getOrElse(p, Nil) ++ fls).sorted
-          }
-        val next = Manifest(
-          version,
-          files,
-          (if (overwrite) Map.empty[String, Map[String, (String, String)]]
-           else m.stats) ++ sizeStats(spark, fs, bp, staged),
-          if (overwrite) Map.empty else m.blooms,
-          if (overwrite) Map.empty else m.dvs,
-          Some(evolveSchema(if (overwrite) None else m.schemaJson,
-            org.apache.spark.sql.types.StructType(fields.toArray))),
-          Some(if (overwrite) "OVERWRITE" else "APPEND"),
-          m.constraints,
-          m.txns ++ allTxns,
-          // propsAdd: caller-supplied property seeds (the DSv2 write
-          // surface stamps PartColProp on first write) — existing values
-          // win so a concurrent ALTER is never silently undone. REPLACE
-          // (resetColumnState) inverts that: its propsAdd is an explicit
-          // DECLARATION that overrides collisions in the same commit
-          // (undeclared existing props — bookkeeping high-waters, row-id
-          // bases — still survive, the documented REPLACE semantics)
-          (if (resetColumnState)
-            m.props ++ genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd
-           else (genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd) ++
-             m.props) ++ stagedHw, m.colmap, m.dropped)
+        // an append reads nothing; an overwrite replaces every live file
+        // (legacy keys and their tags leave with them)
+        val r = staged.get
+        val next = (if (overwrite) r.copy(read = m.allFiles) else r)
+          .onto(m, partCol, version, if (overwrite) "OVERWRITE" else "APPEND")
+          .copy(
+            schemaJson = Some(evolveSchema(if (overwrite) None else m.schemaJson,
+              org.apache.spark.sql.types.StructType(fields.toArray))),
+            txns = m.txns ++ allTxns,
+            // propsAdd: caller-supplied property seeds (the DSv2 write
+            // surface stamps PartColProp on first write) — existing values
+            // win so a concurrent ALTER is never silently undone. REPLACE
+            // (resetColumnState) inverts that: its propsAdd is an explicit
+            // DECLARATION that overrides collisions in the same commit
+            // (undeclared existing props — bookkeeping high-waters, row-id
+            // bases — still survive, the documented REPLACE semantics)
+            props = (if (resetColumnState)
+              m.props ++ genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd
+             else (genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd) ++
+               m.props) ++ stagedHw)
         Publish(next, { v =>
           if (cdfOn) {
             // every staged row is an INSERT; an overwrite additionally
@@ -2337,7 +2261,7 @@ object SnapshotLog {
             // unstripped manifest
             // the staged frame's schema: the batch's, under m's names
             val ins = toLogical(SnapshotRelation.scanFiles(spark, bp, m,
-                lengths(staged),
+                lengths(r.staged),
                 physSchema(m, StructType(fields))), m)
               .select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
               .withColumn("change_type", lit("insert"))
@@ -2358,6 +2282,99 @@ object SnapshotLog {
         })
       }
     }
+  }
+
+  /** A staged rewrite ([[stageRewrite]]): the live files it `read`,
+    * the files it `staged` in their place (partition, rel path, byte
+    * length), the `schema` they were written with (physical names),
+    * and their manifest entries — size stats merged with column
+    * bounds, and rebuilt blooms. */
+  private final case class Rewrite(
+      read: Seq[String],
+      staged: Seq[(String, String, Long)],
+      schema: StructType,
+      stats: Map[String, Map[String, (String, String)]],
+      blooms: Map[String, Map[String, String]]) {
+    private def parts: Set[String] = staged.iterator.map(_._1).toSet
+
+    /** `m` as version `version` of `op` with the rewrite spliced in —
+      * the one splice rule every writer commits by: remove exactly
+      * the files read (a partition they emptied drops its key), keep
+      * any file a racer added beside them, add the staged files, and
+      * drop the read files' stats, blooms and DVs (their rows were
+      * read THROUGH the DVs). Staged rows may route into a partition
+      * the read set did not cover (legacy-partition migration), so
+      * staged files append to a kept partition's list. */
+    def onto(m: Manifest, partCol: String, version: Long, op: String): Manifest = {
+      val gone = read.toSet
+      val (emptied, thinned) = m.files.collect {
+        case (p, fls) if fls.exists(gone) => p -> fls.filterNot(gone)
+      }.partition(_._2.isEmpty)
+      val kept = m.files -- emptied.keys ++ thinned
+      val byPart = staged.groupBy(_._1).map { case (p, fls) => p -> fls.map(_._2) }
+      requireNoLegacyCollision(m, partCol, byPart.keys, emptied.keySet)
+      m.copy(
+        version = version,
+        files = kept ++ byPart.map { case (p, fls) =>
+          p -> (kept.getOrElse(p, Nil) ++ fls).sorted },
+        stats = (m.stats -- read) ++ stats,
+        blooms = (m.blooms -- read) ++ blooms,
+        dvs = m.dvs -- read,
+        op = Some(op))
+    }
+
+    /** A DML outcome over the `affected` partitions: one the rewrite
+      * staged nothing into was dropped, the rest were rewritten. */
+    def outcome(v: Long, affected: Seq[String]): DmlOutcome =
+      DmlOutcome(v, metadataOnly = false,
+        affected.filterNot(parts), affected.filter(parts))
+  }
+
+  /** The staged write every rewriting writer shares: stage `out` (a
+    * `__p`-routed frame in logical names) under a staging dir unique
+    * to this attempt, list what landed, and record each staged file's
+    * byte length and row count, its bounds over `statsCols` (PHYSICAL
+    * names) and, with `rebuildBlooms`, blooms over the columns the
+    * `read` files carried blooms for — blooms must survive
+    * maintenance, or point-lookup skipping silently stops. The
+    * attempt-unique dir means a concurrent writer that claimed the
+    * same version never overwrites a dir the race winner committed; a
+    * loser's orphan dir is vacuum's job. `__p` DUPLICATES the partition
+    * column for the directory layout, so it survives as a real column
+    * in the data files (manifest-list reads never reconstruct Hive
+    * dir names). `bucketSalts` (bucketed tables with a byte target)
+    * routes through [[stageBucketedSplit]]. */
+  private def stageRewrite(
+      spark: SparkSession, fs: FileSystem, bp: Path, m: Manifest,
+      out: DataFrame, read: Seq[String],
+      tag: String, version: Long, attempt: Int,
+      statsCols: Seq[String] = Nil,
+      rebuildBlooms: Boolean = false,
+      bucketSalts: Map[String, Int] = Map.empty): Rewrite = {
+    val rel = s"data/$tag$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+    val dir = new Path(bp, rel)
+    val phys = toPhysical(out, m)
+    if (bucketSalts.isEmpty) stagePartitioned(phys, m, fs, dir)
+    else {
+      val gone = read.toSet
+      stageBucketedSplit(phys, m, fs, dir,
+        m.files.collect { case (p, fls) if fls.exists(gone) => p }.toSeq, bucketSalts)
+    }
+    val staged = listStaged(fs, dir, rel)
+    val wrote = StructType(phys.schema.filterNot(_.name == "__p"))
+    val bounded = statsCols.filterNot(m.dropped)
+    val bounds =
+      if (bounded.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
+      else fileStats(spark, fs, bp, m, staged, wrote, bounded)
+    val blooms =
+      if (!rebuildBlooms) Map.empty[String, Map[String, String]]
+      else computeBlooms(spark, fs, bp, m, lengths(staged),
+        read.flatMap(f => m.blooms.getOrElse(f, Map.empty).keys).distinct
+          // a dropped column's bloom cannot rebuild (its bytes are gone
+          // from the rewrite), and nothing queries it
+          .filterNot(m.dropped), 0.03)
+    Rewrite(read, staged, wrote,
+      mergeFileStats(sizeStats(spark, fs, bp, staged), bounds), blooms)
   }
 
   /** (partition value, rel file path, byte length) for every parquet
@@ -2398,19 +2415,6 @@ object SnapshotLog {
           .write.partitionBy("__p").parquet(dir.toString)
         tagBucketFiles(fs, dir)
     }
-
-  /** Flat variant for per-partition compaction on a BUCKETED table
-    * (the staged dir holds bare files): compaction re-routes by the
-    * bucket columns, folding each bucket's accumulated files back to
-    * one tagged file — never across buckets. */
-  private def stageFlatBucketed(
-      df: DataFrame, m: Manifest, fs: FileSystem, dir: Path): Unit = {
-    val (n, cols) = m.bucketSpec.getOrElse(
-      sys.error("stageFlatBucketed on an unbucketed table"))
-    df.repartition(n, cols.map(c => col(m.phys(c))): _*)
-      .write.mode("overwrite").parquet(dir.toString)
-    tagBucketFiles(fs, dir)
-  }
 
   /** Target-size variant of [[stagePartitioned]] for BUCKETED tables:
     * buckets whose byte budget wants more than one output file
@@ -2483,7 +2487,7 @@ object SnapshotLog {
       }
   }
 
-  /** Rename every staged `part-NNNNN-…` parquet file (bare, or inside
+  /** Rename every staged `part-NNNNN-…` parquet file (inside the
     * `__p=…` subdirs) to Spark's bucketed-file naming
     * (`part-NNNNN-…_NNNNN.…`): under [[stagePartitioned]]'s routing
     * the leading task index IS the bucket id. */
@@ -2505,7 +2509,6 @@ object SnapshotLog {
             case _ => ()
           }
         }
-    tagIn(dir)
     fs.listStatus(dir).toSeq
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("__p="))
       .foreach(d => tagIn(d.getPath))
@@ -3462,131 +3465,32 @@ object SnapshotLog {
     }
   }
 
-  /** Compact one partition's files into a single rewrite and commit the
-    * result as a new version — the maintenance pass every CDC sink
-    * needs (each upsert batch adds files; unchecked, read planning and
-    * open-file overhead grow per batch). Pure metadata semantics: the
-    * table's CONTENT is unchanged (spec-proven), only its file layout
-    * shrinks; old versions still time-travel to the pre-compaction
-    * layout. Returns the new version, or 0 if the partition has ≤1
-    * file (nothing to do). Runs through the same optimistic commit, so
-    * a concurrent upsert either wins (compaction retries against its
-    * state) or loses cleanly. */
-  def compactPartition(
-      spark: SparkSession,
-      base: String,
-      part: String,
-      maxRetries: Int = 5,
-      statsCols: Seq[String] = Nil,
-      clusterBy: Seq[String] = Nil,
-      clusterFiles: Int = 1): Long = {
-    // `clusterBy` turns compaction into OPTIMIZE ZORDER: the rewrite is
-    // range-clustered (Z-order for multi-key) into `clusterFiles` files
-    // so each covers a tight key range, and fresh `statsCols` bounds
-    // become genuinely selective for [[filesForRange]] — the layout
-    // maintenance pass for data that arrived through unclustered CDC
-    // batches. Unlike plain compaction it proceeds even on a single
-    // file (re-layout changes pruning, not just file counts).
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    commitLoop(fs, bp, "COMPACT", maxRetries) { (snap, version, attempt) =>
-      val m = snap.getOrElse(Manifest(0L, Map.empty))
-      val files = m.files.getOrElse(part, Nil)
-      val hasDv = files.exists(m.dvs.contains)
-      // a single file WITH a deletion vector still compacts: that is
-      // how merge-on-read deletes are materialized back into a clean
-      // file layout
-      if (files.isEmpty || (clusterBy.isEmpty && !hasDv &&
-          (if (m.bucketSpec.isDefined)
-            // budget-aware: a bucket target-split by OPTIMIZE is steady
-            // state — folding it back to one file would ping-pong with
-            // the next target-size pass
-            bucketsCompact(files, m, optimizeTargetOf(m))
-           else files.size <= 1)))
-        Done(0L)
-      else {
-        // staging dir unique per attempt AND partition: two concurrent
-        // compactions reading the same manifest compute the same target
-        // version — keyed only by version they would overwrite each
-        // other's staged (possibly already-committed) files
-        val rel =
-          s"data/c$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        // read THROUGH deletion vectors: compaction materializes them —
-        // deleted positions vanish physically and the DV refs drop
-        // align to the LOGICAL schema: a rewrite materializes dropped
-        // columns' removal (their tombstoned physical names must not be
-        // re-staged) and backfills added-but-never-written columns.
-        // Row-tracked tables also carry their ids into the rewrite as
-        // the materialized column — OPTIMIZE must not reassign identity
-        val df = readForRewrite(spark, bp, m, files)
-        require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
-          "clusterBy/ZORDER is incompatible with a bucketed table")
-        if (m.bucketSpec.isDefined)
-          // each bucket's accumulated files fold to ONE tagged file;
-          // rows never cross buckets
-          stageFlatBucketed(toPhysical(df, m), m, fs, dir)
-        else {
-          val out =
-            if (clusterBy.isEmpty) df.repartition(1)
-            else {
-              val (d2, sortCol) =
-                if (clusterBy.size == 1) (df, col(clusterBy.head))
-                else (Clustering.withZ(df, clusterBy), col("__z"))
-              d2.repartitionByRange(math.max(clusterFiles, 1), sortCol)
-                .sortWithinPartitions(sortCol)
-                .drop("__z")
-            }
-          toPhysical(out, m).write.mode("overwrite").parquet(dir.toString)
-        }
-        val newStaged = fs.listStatus(dir).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => (part, s"$rel/${st.getPath.getName}", st.getLen))
-        val newFiles = newStaged.map(_._2)
-        val newSizes = sizeStats(spark, fs, bp, newStaged)
-        // compacted-away files take their stats entries with them; the
-        // replacement file gets fresh bounds when statsCols is passed,
-        // and is otherwise stats-less (conservative: never pruned)
-        val newStats =
-          if (statsCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, bp, m, newStaged, scanSchema(m, rowIds = false),
-            statsCols.filterNot(m.dropped.contains))
-        // blooms SURVIVE maintenance: rebuild over exactly the columns
-        // the replaced files carried blooms for, so point-lookup
-        // skipping keeps working after OPTIMIZE (a dropped-only bloom
-        // would silently degrade every future probe to scan-all)
-        val bloomCols = files.flatMap(f =>
-          m.blooms.getOrElse(f, Map.empty).keys).distinct
-          // a dropped column's bloom cannot rebuild (its bytes are gone
-          // from the rewrite) — and is pointless, nothing queries it
-          .filterNot(m.dropped.contains)
-        val newBlooms = computeBlooms(spark, fs, bp, m, lengths(newStaged), bloomCols, 0.03)
-        Publish(Manifest(version, m.files.updated(part, newFiles),
-          (m.stats -- files) ++ mergeFileStats(newSizes, newStats),
-          (m.blooms -- files) ++ newBlooms,
-          m.dvs -- files,
-          m.schemaJson,
-          Some(if (clusterBy.isEmpty) "COMPACT" else "OPTIMIZE"),
-          m.constraints, m.txns, m.props, m.colmap, m.dropped), identity)
-      }
-    }
-  }
-
-  /** Whole-table OPTIMIZE in ONE transaction: every partition that is
-    * fragmented (≥ `minFiles` files) or carries a deletion vector is
-    * rewritten — DVs materialized, one file per partition (or
-    * ~ceil(bytes/[[OptimizeTargetProp]]) files when the byte-target
-    * property is set) — and the
-    * whole maintenance pass commits as a SINGLE version.
-    * [[compactPartition]] commits per partition, which on a
-    * 10⁴-partition table would churn 10⁴ versions (and 10⁴ conflict
-    * windows) for one logical operation; here the rewrite is one
-    * `repartition(partCol)` job (hash distribution guarantees each
-    * partition's rows land in exactly one task → exactly one output
-    * file per partition dir) and one optimistic commit. Untouched
-    * partitions keep their files, stats, blooms, and DVs verbatim;
-    * rewritten files get fresh byte sizes, fresh `statsCols` bounds,
-    * and REBUILT blooms over the columns their replaced files carried.
+  /** OPTIMIZE in ONE transaction — the maintenance pass every CDC sink
+    * needs (each batch adds files; unchecked, read planning and
+    * open-file overhead grow per batch). Every partition (of `parts`,
+    * when given) that is fragmented (≥ `minFiles` files) or carries a
+    * deletion vector is rewritten — DVs materialized, one file per
+    * partition (or ~ceil(bytes/[[OptimizeTargetProp]]) files when the
+    * byte-target property is set) — and the whole pass commits as a
+    * SINGLE version: per-partition commits would churn 10⁴ versions
+    * (and 10⁴ conflict windows) on a 10⁴-partition table for one
+    * logical operation. The rewrite is one `repartition(partCol)` job
+    * (hash distribution routes each partition's rows to exactly one
+    * task → one output file per partition dir). Pure layout: the
+    * table's CONTENT is unchanged, and old versions still time-travel
+    * to the old layout. Untouched partitions keep their files, stats,
+    * blooms, and DVs verbatim; rewritten files get fresh byte sizes,
+    * fresh `statsCols` bounds, and REBUILT blooms over the columns
+    * their replaced files carried.
+    *
+    * `zorderBy` makes it OPTIMIZE ZORDER: every selected partition is
+    * rewritten (re-layout changes pruning, not just file counts),
+    * range-clustered on the key(s) — z-order for several — into about
+    * `clusterFiles` files per partition, so each file covers a tight
+    * key range and fresh `statsCols` bounds become selective for
+    * [[filesForRange]]. A bucketed table refuses it: range clustering
+    * and bucketing both dictate the file layout.
+    *
     * Returns the committed version, or 0 when nothing needed work. */
   def optimizeTable(
       spark: SparkSession,
@@ -3594,7 +3498,10 @@ object SnapshotLog {
       partCol: String,
       minFiles: Int = 2,
       maxRetries: Int = 5,
-      statsCols: Seq[String] = Nil): Long = {
+      statsCols: Seq[String] = Nil,
+      parts: Option[Seq[String]] = None,
+      zorderBy: Seq[String] = Nil,
+      clusterFiles: Int = 1): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
     // CONFLICT-NARROWED retries (the multi-writer soak's OPTIMIZE
@@ -3607,18 +3514,18 @@ object SnapshotLog {
     // METADATA-ONLY, removing the read files and adding the staged
     // ones beside the racer's (Delta's disjoint-file conflict rule),
     // instead of re-running the whole rewrite per lost race.
-    var staged: Seq[(String, String, Long)] = Nil
-    var stagedOld: Map[String, Seq[String]] = Map.empty // part -> files READ
-    var stagedStatsC: Map[String, Map[String, (String, String)]] = Map.empty
-    var stagedBloomsC: Map[String, Map[String, String]] = Map.empty
-    var stagedDvs: Map[String, Dv] = Map.empty
-    var stagedColmap: Map[String, String] = Map.empty
-    var stagedDropped: Set[String] = Set.empty
-    var stagedSchema: Option[String] = None
-    var stagedTarget: Option[Long] = None
-    // rewrite every partition that needs it against `m`; false when
-    // none does
-    def restage(m: Manifest, targetBytes: Option[Long], attempt: Int): Boolean = {
+    type ReadState = (Map[String, Dv], Map[String, String], Set[String],
+      Option[String], Option[Long])
+    def readState(m: Manifest, read: Seq[String]): ReadState = {
+      val fset = read.toSet
+      (m.dvs.filter { case (f, _) => fset(f) }, m.colmap, m.dropped,
+        m.schemaJson, optimizeTargetOf(m))
+    }
+    var staged: Option[(Rewrite, ReadState)] = None
+    // rewrite every selected partition that needs it against `m`;
+    // None when none does
+    def restage(m: Manifest, version: Long, attempt: Int): Option[Rewrite] = {
+      val targetBytes = optimizeTargetOf(m)
       // legacy-layout partitions (partition evolution) always
       // qualify: OPTIMIZE re-routes their rows under the CURRENT
       // layout — the incremental migration path that returns the
@@ -3626,131 +3533,89 @@ object SnapshotLog {
       val legacy = m.legacyKeys
       val need = m.files.keySet.toSeq.sorted.filter { p =>
         val fls = m.files(p)
-        legacy(p) || fls.exists(m.dvs.contains) ||
+        parts.forall(_.contains(p)) && (zorderBy.nonEmpty || legacy(p) ||
+          fls.exists(m.dvs.contains) ||
           (if (m.bucketSpec.isDefined)
             // bucketed steady state is one file PER BUCKET — or, with
             // a byte target, ceil(bucketBytes/target) files; only a
             // bucket over its budget (or an untagged file) fragments
             !bucketsCompact(fls, m, targetBytes)
-          else fls.size >= math.max(minFiles, 2))
+          else fls.size >= math.max(minFiles, 2)))
       }
-      if (need.isEmpty) false
+      if (need.isEmpty) None
       else {
-        val rel =
-          s"data/o${m.version + 1}-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        val oldFiles = need.flatMap(p => m.files.getOrElse(p, Nil))
-        // one job: read the fragmented partitions through their DVs.
-        // Without a byte target each partition folds to ONE file (hash
-        // distribution routes its rows to one task); with
+        val read = need.flatMap(m.files)
+        // one job: read the selected partitions through their DVs
+        // (row-tracked tables carry their ids into the rewrite as the
+        // MATERIALIZED column — OPTIMIZE must not reassign identity).
+        // Without a byte target each partition folds to ONE file; with
         // [[OptimizeTargetProp]] set, a deterministic content-hash salt
         // splits each partition into ~ceil(bytes/target) output files —
         // best-effort (salt groups sharing a task merge), bounded by
         // [1, n]. Partition byte totals come from the manifest's
         // `__bytes` rollups — pure metadata, no extra scan.
+        val df = readFiles(spark, bp, m, read, rowIds = true)
+          .withColumnRenamed(RowIdCol, MatRowIdCol)
+          .withColumn("__p", partRoute(partCol))
         val saltsOf: Map[String, Int] =
           if (targetBytes.isEmpty) Map.empty
           else need.map(p => p -> filesFor(m.files(p), m, targetBytes)).toMap
-        val df = readForRewrite(spark, bp, m, oldFiles)
-        val flat = toPhysical(
-          df.withColumn("__p", partRoute(partCol)), m)
-        if (m.bucketSpec.isDefined) {
-          // bucketed OPTIMIZE: re-route by the bucket columns (file
-          // count per partition folds to <= numBuckets, each file one
-          // tagged bucket). With a byte target, buckets whose budget
-          // wants >1 file are soft-split by a content-hash salt into
-          // several files ALL carrying the same bucket tag (which the
-          // bucketed scan groups back into one bucket partition) —
-          // rows still never cross buckets.
-          val saltsPB: Map[String, Int] =
-            if (targetBytes.isEmpty) Map.empty
-            else need.iterator.flatMap { p =>
-              m.files(p).groupBy(bucketIdOf).collect {
-                case (Some(bid), g) =>
-                  s"$p\u0000$bid" -> filesFor(g, m, targetBytes)
-              }.filter(_._2 > 1)
-            }.toMap
-          if (saltsPB.isEmpty) stagePartitioned(flat, m, fs, dir)
-          else stageBucketedSplit(flat, m, fs, dir, need, saltsPB)
-        } else {
-          val routed =
-            if (saltsOf.values.forall(_ <= 1)) flat.repartition(col("__p"))
-            else {
-              val dataCols = flat.columns.filter(_ != "__p").toSeq
-              // one task per intended output file: an EXPLICIT task
-              // count (AQE would coalesce a tiny exchange back into one
-              // task and undo the split) sized to the file budget,
-              // range-routed so distinct (partition, salt) groups land
-              // in distinct tasks
-              val nTasks = math.max(saltsOf.values.map(_.toLong).sum, 1L)
-                .min(100000L).toInt
-              flat.withColumn("__salt",
-                  pmod(xxhash64(struct(dataCols.map(col): _*)),
-                    coalesce(element_at(typedLit(saltsOf), col("__p")), lit(1))
-                      .cast("long")))
-                .repartitionByRange(nTasks, col("__p"), col("__salt"))
-                .drop("__salt")
-            }
-          routed.write.partitionBy("__p").parquet(dir.toString)
-        }
-        staged = listStaged(fs, dir, rel)
-        stagedStatsC =
-          if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
-            statsCols.filterNot(m.dropped.contains))
-        val bloomCols = oldFiles.flatMap(f =>
-          m.blooms.getOrElse(f, Map.empty).keys).distinct
-          .filterNot(m.dropped.contains)
-        stagedBloomsC = computeBlooms(spark, fs, bp, m, lengths(staged), bloomCols, 0.03)
-        stagedOld = need.iterator.map(p => p -> m.files.getOrElse(p, Nil)).toMap
-        val fset = oldFiles.toSet
-        stagedDvs = m.dvs.filter { case (f, _) => fset(f) }
-        stagedColmap = m.colmap; stagedDropped = m.dropped
-        stagedSchema = m.schemaJson; stagedTarget = targetBytes
-        true
+        // bucketed OPTIMIZE re-routes by the bucket columns (file count
+        // per partition folds to <= numBuckets, each file one tagged
+        // bucket). With a byte target, buckets whose budget wants >1
+        // file are soft-split by a content-hash salt into several files
+        // ALL carrying the same bucket tag (which the bucketed scan
+        // groups back into one bucket partition) — rows still never
+        // cross buckets.
+        val saltsPB: Map[String, Int] =
+          if (targetBytes.isEmpty || m.bucketSpec.isEmpty) Map.empty
+          else need.iterator.flatMap { p =>
+            m.files(p).groupBy(bucketIdOf).collect {
+              case (Some(bid), g) =>
+                s"$p\u0000$bid" -> filesFor(g, m, targetBytes)
+            }.filter(_._2 > 1)
+          }.toMap
+        val out =
+          if (zorderBy.nonEmpty)
+            Clustering.rangeCluster(df, zorderBy, clusterFiles * need.size,
+              lead = Seq(col("__p")))
+          else if (m.bucketSpec.isDefined) df
+          else if (saltsOf.values.forall(_ <= 1)) df.repartition(col("__p"))
+          else {
+            val dataCols = df.columns.filter(_ != "__p").toSeq
+            // one task per intended output file: an EXPLICIT task
+            // count (AQE would coalesce a tiny exchange back into one
+            // task and undo the split) sized to the file budget,
+            // range-routed so distinct (partition, salt) groups land
+            // in distinct tasks
+            val nTasks = math.max(saltsOf.values.map(_.toLong).sum, 1L)
+              .min(100000L).toInt
+            df.withColumn("__salt",
+                pmod(xxhash64(struct(dataCols.map(col): _*)),
+                  coalesce(element_at(typedLit(saltsOf), col("__p")), lit(1))
+                    .cast("long")))
+              .repartitionByRange(nTasks, col("__p"), col("__salt"))
+              .drop("__salt")
+          }
+        Some(stageRewrite(spark, fs, bp, m, out, read, "o", version, attempt,
+          statsCols.map(m.phys), rebuildBlooms = true, bucketSalts = saltsPB))
       }
     }
     commitLoop(fs, bp, "OPTIMIZE", maxRetries) { (snap, version, attempt) =>
       val m = snap.getOrElse(Manifest(0L, Map.empty))
       requireCurrentLayout(m, partCol)
-      val targetBytes = optimizeTargetOf(m)
-      val canReuse = staged.nonEmpty && {
-        val fset = stagedOld.values.flatten.toSet
-        stagedOld.forall { case (p, fls) =>
-          val live = m.files.getOrElse(p, Nil).toSet
-          fls.forall(live)
-        } &&
-          m.dvs.filter { case (f, _) => fset(f) } == stagedDvs &&
-          m.colmap == stagedColmap && m.dropped == stagedDropped &&
-          m.schemaJson == stagedSchema && targetBytes == stagedTarget
-      }
-      if (!canReuse && !restage(m, targetBytes, attempt)) Done(0L)
-      else {
-        // commit against the LIVE manifest: remove exactly the files the
-        // rewrite read (a partition emptied of them drops its key —
-        // migration), keep any racer-appended files, add the staged ones
-        val oldFiles = stagedOld.values.flatten.toSeq
-        val afterRemoval = stagedOld.foldLeft(m.files) { case (acc, (p, fls)) =>
-          val rest = acc.getOrElse(p, Nil).filterNot(fls.toSet)
-          if (rest.isEmpty) acc - p else acc.updated(p, rest)
-        }
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        // a rewritten LEGACY partition's rows route under the current
-        // layout — splice-append into possibly-untouched partitions
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys,
-          stagedOld.keySet.filterNot(afterRemoval.contains))
-        val next = Manifest(
-          version,
-          afterRemoval ++ stagedByPart.map { case (p, fls) =>
-            p -> (afterRemoval.getOrElse(p, Nil) ++ fls).sorted },
-          (m.stats -- oldFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStatsC),
-          (m.blooms -- oldFiles) ++ stagedBloomsC,
-          m.dvs -- oldFiles,
-          m.schemaJson,
-          Some("OPTIMIZE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-        onBeforeOptimizeCommit()
-        Publish(next, identity)
+      require(zorderBy.isEmpty || m.bucketSpec.isEmpty,
+        "clusterBy/ZORDER is incompatible with a bucketed table")
+      val live = m.files.valuesIterator.flatten.toSet
+      staged.collect {
+        case (r, state) if r.read.forall(live) && readState(m, r.read) == state => r
+      }.orElse(restage(m, version, attempt)) match {
+        case None => Done(0L)
+        case Some(r) =>
+          staged = Some((r, readState(m, r.read)))
+          val next = r.onto(m, partCol, version, "OPTIMIZE")
+          onBeforeOptimizeCommit()
+          Publish(next, identity)
       }
     }
   }
@@ -3913,9 +3778,9 @@ object SnapshotLog {
         val gone = dropped.flatMap(p => m.files.getOrElse(p, Nil))
         if (dropped.isEmpty)
           Done(Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil)))
-        else Publish(Manifest(version, m.files -- dropped, m.stats -- gone,
-            m.blooms -- gone, m.dvs -- gone, m.schemaJson,
-            Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped), { v =>
+        else Publish(m.copy(version = version, files = m.files -- dropped,
+            stats = m.stats -- gone, blooms = m.blooms -- gone,
+            dvs = m.dvs -- gone, op = Some("DELETE")), { v =>
           if (cdfOn) commitCdfVersion(fs, bp, v,
             readFiles(spark, bp, m, gone)
               .withColumn("change_type", lit("delete"))
@@ -4016,7 +3881,8 @@ object SnapshotLog {
                 newDvs(rel0) = Dv(total, None, Some(dirByKey(bn)))
               }
             }
-            Publish(m.copy(dvs = m.dvs ++ newDvs, op = Some("DELETE_DV")), { v =>
+            Publish(m.copy(version = version, dvs = m.dvs ++ newDvs,
+                op = Some("DELETE_DV")), { v =>
               if (cdfOn) commitCdfVersion(fs, bp, v,
                 matchRows(liveRows).drop("__f", "__pos")
                   .withColumn("change_type", lit("delete"))
@@ -4042,40 +3908,17 @@ object SnapshotLog {
         else {
           val preFiles = matched.flatMap(p => m.files.getOrElse(p, Nil))
           val pre = readFiles(spark, bp, m, preFiles)
-          val keep = keepRows(pre)
-          val rel =
-            s"data/d$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-          val dir = new Path(bp, rel)
-          stagePartitioned(
-            toPhysical(keep.withColumn("__p", partRoute(partCol)), m),
-            m, fs, dir)
-          val staged = listStaged(fs, dir, rel)
-          val stagedByPart = staged.groupBy(_._1)
-            .map { case (p, fls) => p -> fls.map(_._2).sorted }
-          // survivors of a rewritten LEGACY partition restaged under the
-          // current layout (migration) — splice-append, never replace an
-          // untouched partition's entry
-          requireNoLegacyCollision(m, partCol, stagedByPart.keys, matched.toSet)
-          val stagedStats =
-            if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-            else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
-              statsCols.map(m.phys))
-          val next = Manifest(
-            version,
-            spliceStaged(m.files, matched, stagedByPart),
-            (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-            m.blooms -- preFiles,
-            m.dvs -- preFiles,
-            m.schemaJson,
-            Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-          Publish(next, { v =>
+          // survivors of a rewritten LEGACY partition restage under the
+          // current layout (migration)
+          val r = stageRewrite(spark, fs, bp, m,
+            keepRows(pre).withColumn("__p", partRoute(partCol)), preFiles,
+            "d", version, attempt, statsCols.map(m.phys))
+          Publish(r.onto(m, partCol, version, "DELETE"), { v =>
             if (cdfOn) commitCdfVersion(fs, bp, v,
               matchRows(pre)
                 .withColumn("change_type", lit("delete"))
                 .withColumn("_commit_version", lit(v)))
-            val stagedParts = staged.map(_._1).toSet
-            Some(DmlOutcome(v, metadataOnly = false,
-              matched.filterNot(stagedParts), matched.filter(stagedParts)))
+            Some(r.outcome(v, matched))
           })
         }
       }
@@ -4154,31 +3997,11 @@ object SnapshotLog {
             .select(lv.schema.fieldNames.map(col).toSeq ++
               (if (mat.isEmpty) Nil
                else Seq(lit(null).cast("long").as(MatRowIdCol))): _*)
-          val out = keepM.unionByName(insM)
-          val rel =
-            s"data/r$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-          val dir = new Path(bp, rel)
-          stagePartitioned(
-            toPhysical(out.withColumn("__p", partRoute(partCol)), m),
-            m, fs, dir)
-          val staged = listStaged(fs, dir, rel)
-          val stagedByPart = staged.groupBy(_._1)
-            .map { case (p, fls) => p -> fls.map(_._2).sorted }
-          requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
-          val stagedStats =
-            if (statsCols.isEmpty || staged.isEmpty)
-              Map.empty[String, Map[String, (String, String)]]
-            else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
-              statsCols.map(m.phys))
-          val next = Manifest(
-            version,
-            spliceStaged(m.files, affected, stagedByPart),
-            (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-            m.blooms -- preFiles,
-            m.dvs -- preFiles,
-            m.schemaJson,
-            Some("REPLACE_WHERE"), m.constraints, m.txns ++ txn, m.props,
-            m.colmap, m.dropped)
+          val r = stageRewrite(spark, fs, bp, m,
+            keepM.unionByName(insM).withColumn("__p", partRoute(partCol)),
+            preFiles, "r", version, attempt, statsCols.map(m.phys))
+          val next = r.onto(m, partCol, version, "REPLACE_WHERE")
+            .copy(txns = m.txns ++ txn)
           Publish(next, { v =>
             if (cdfOn) {
               val del = preAll.filter(coalesce(predicate, lit(false))).drop(RowIdCol)
@@ -4188,9 +4011,7 @@ object SnapshotLog {
               commitCdfVersion(fs, bp, v,
                 del.unionByName(ins).withColumn("_commit_version", lit(v)))
             }
-            val stagedParts = staged.map(_._1).toSet
-            Some(DmlOutcome(v, metadataOnly = false,
-              affected.filterNot(stagedParts), affected.filter(stagedParts)))
+            Some(r.outcome(v, affected))
           })
         }
       }
@@ -4331,31 +4152,10 @@ object SnapshotLog {
                 s"from ($sql) in $bad row(s)")
           }
         }
-        val kept = keepRows(pre)
-        val rel =
-          s"data/u$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        stagePartitioned(
-          toPhysical(kept.unionByName(updated)
-            .withColumn("__p", partRoute(partCol)), m),
-          m, fs, dir)
-        val staged = listStaged(fs, dir, rel)
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
-        val stagedStats =
-          if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, bp, m, staged, scanSchema(m, rowIds = false),
-            statsCols.map(m.phys))
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, affected, stagedByPart),
-          (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          m.blooms -- preFiles,
-          m.dvs -- preFiles,
-          m.schemaJson,
-          Some("UPDATE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-        Publish(next, { v =>
+        val r = stageRewrite(spark, fs, bp, m,
+          keepRows(pre).unionByName(updated).withColumn("__p", partRoute(partCol)),
+          preFiles, "u", version, attempt, statsCols.map(m.phys))
+        Publish(r.onto(m, partCol, version, "UPDATE"), { v =>
           if (cdfOn) {
             val cols = lv.columns.toSeq
             val feed = matchRows(pre)
@@ -4366,9 +4166,7 @@ object SnapshotLog {
             commitCdfVersion(fs, bp, v,
               feed.withColumn("_commit_version", lit(v)))
           }
-          val stagedParts = staged.map(_._1).toSet
-          Some(DmlOutcome(v, metadataOnly = false,
-            affected.filterNot(stagedParts), affected.filter(stagedParts)))
+          Some(r.outcome(v, affected))
         })
       }
     }
@@ -5295,7 +5093,7 @@ object SnapshotLog {
     * manifests' files, so time-travel reads of old versions survive.
     *
     * `retentionMs` guards concurrent writers: an in-flight
-    * `upsertBatch`/`compactPartition` has written its data files but
+    * `upsertBatch`/`optimizeTable` has written its data files but
     * not yet committed the manifest that references them — deleting
     * those would make the imminent commit point at nothing. Only
     * unreferenced files whose modification time is older than

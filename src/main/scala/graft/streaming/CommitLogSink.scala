@@ -76,7 +76,8 @@ class CommitLogSinkProvider extends StreamSinkProvider with DataSourceRegister {
 
 /** @param autoCompactFiles when > 0, after each committed batch any
   *        partition whose live file count exceeds this threshold is
-  *        folded down ([[SnapshotLog.compactPartition]]) — the
+  *        folded down in one OPTIMIZE commit
+  *        ([[SnapshotLog.optimizeTable]]) — the
   *        small-files answer for streaming ingest (Delta's
   *        autoCompact): micro-batches land fast, and the file count
   *        per partition stays bounded by the threshold instead of
@@ -124,18 +125,9 @@ class CommitLogSink(
         maxRetries = 5, statsCols = statsCols, clusterBy = Nil,
         clusterFiles = 16, opCol = opCol, writeCdf = writeCdf,
         extraAffected = Nil, txn = Some((appId, batchId)))
-    if (autoCompactFiles > 0) {
-      val bp = new org.apache.hadoop.fs.Path(path)
-      val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      SnapshotLog.readManifest(fs, bp).foreach { m =>
-        m.files.collect {
-          case (p, fls) if fls.size > autoCompactFiles => p
-        }.toSeq.sorted.foreach { p =>
-          SnapshotLog.compactPartition(spark, path, p,
-            statsCols = statsCols)
-        }
-      }
-    }
+    if (autoCompactFiles > 0)
+      SnapshotLog.optimizeTable(spark, path, partCol,
+        minFiles = autoCompactFiles + 1, statsCols = statsCols)
   }
 
   override def toString: String =

@@ -120,7 +120,7 @@ class ColumnMappingSpec extends SparkSpec {
 
     // compaction materializes the drop: the tombstoned physical column
     // disappears from rewritten files
-    SnapshotLog.compactPartition(s, base, "d1")
+    SnapshotLog.optimizeTable(s, base, "day", parts = Some(Seq("d1")))
     val m4 = SnapshotLog.readManifest(fs, bp).get
     val footer = s.read.parquet(
       new Path(bp, m4.files("d1").head).toString).schema.fieldNames.toSet

@@ -12,7 +12,7 @@ import graft.SparkSpec
 /** Genuinely CONCURRENT writers racing the commit log — the round-7
   * verdict's ask: commit-race safety was spec-SIMULATED (interleaved
   * manifests, crash replay) but never exercised by real threads. Here
-  * N threads race `upsertBatch` / `compactPartition` / `vacuum` for M
+  * N threads race `upsertBatch` / `optimizeTable` / `vacuum` for M
   * rounds (≥100 optimistic commits in total, seeded jitter varying the
   * interleavings) and the invariants are checked OBSERVED, not argued:
   *
@@ -263,8 +263,8 @@ class ConcurrencyStressSpec extends SparkSpec {
               // expectation is unchanged while DV commits race
               // upserts and compactions)
               if (tid == 0 && r % 5 == 0)
-                SnapshotLog.compactPartition(spark, base, s"d${r % 3}",
-                  maxRetries = 150, statsCols = Seq("id"))
+                SnapshotLog.optimizeTable(spark, base, "day", maxRetries = 150,
+                  statsCols = Seq("id"), parts = Some(Seq(s"d${r % 3}")))
               if (tid == 1 && r % 7 == 0)
                 SnapshotLog.vacuum(spark, base, retentionMs = 3600L * 1000)
               if (tid == 2 && r % 6 == 0 && r < rounds)

@@ -107,7 +107,7 @@ class DeletionVectorSpec extends SparkSpec {
 
     // compaction reads THROUGH the DVs and drops the refs
     m.files.keySet.foreach { p =>
-      SnapshotLog.compactPartition(spark, base, p)
+      SnapshotLog.optimizeTable(spark, base, "day", parts = Some(Seq(p)))
     }
     val mc = SnapshotLog.readManifest(fs(bp), bp).get
     assert(mc.dvs.isEmpty, "compaction must materialize deletion vectors")
@@ -157,7 +157,8 @@ class DeletionVectorSpec extends SparkSpec {
 
     // materialize the DVs and expire history: sidecars become orphans
     // and vacuum reclaims them
-    m2.files.keySet.foreach(p => SnapshotLog.compactPartition(spark, base, p))
+    m2.files.keySet.foreach(p =>
+      SnapshotLog.optimizeTable(spark, base, "day", parts = Some(Seq(p))))
     SnapshotLog.expireVersions(spark, base, keepLast = 1)
     SnapshotLog.vacuum(spark, base, retentionMs = 0L)
     assert(dvFiles() == 0, "orphaned DV sidecars must be reclaimed")
@@ -276,8 +277,8 @@ class DeletionVectorSpec extends SparkSpec {
 
     // OPTIMIZE ZORDER every partition (re-cluster by id into 4 files)
     m1.files.keySet.foreach { p =>
-      SnapshotLog.compactPartition(spark, base, p,
-        statsCols = Seq("id", "value"), clusterBy = Seq("id"), clusterFiles = 4)
+      SnapshotLog.optimizeTable(spark, base, "day", statsCols = Seq("id", "value"),
+        parts = Some(Seq(p)), zorderBy = Seq("id"), clusterFiles = 4)
     }
     val m2 = SnapshotLog.readManifest(fs(bp), bp).get
     assert(m2.files.values.flatten.toSet.intersect(

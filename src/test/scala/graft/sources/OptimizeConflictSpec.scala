@@ -97,4 +97,37 @@ class OptimizeConflictSpec extends SparkSpec {
     assert(df.filter(col("id") === 1L).count() == 0,
       "a stale staged fold would have resurrected the deleted row")
   }
+
+  test("a racing APPEND costs a partition-subset OPTIMIZE a metadata-only retry") {
+    val base = Files.createTempDirectory("graft_oc3").toString + "/t"
+    SnapshotLog.appendBatch(s, base, batch(0), "p", 1L)
+    SnapshotLog.appendBatch(s, base, batch(100), "p", 2L)
+    val m0 = manifest(base)
+    @volatile var fired = false
+    SnapshotLog.onBeforeOptimizeCommit = () => {
+      if (!fired) {
+        fired = true
+        // the racer APPENDS into d1 — the one partition OPTIMIZE folds
+        SnapshotLog.appendBatch(s, base,
+          Seq((999L, "d1", 999L)).toDF("id", "p", "v"), "p", 3L)
+      }
+    }
+    try {
+      assert(SnapshotLog.optimizeTable(s, base, "p", parts = Some(Seq("d1"))) > 0)
+    } finally SnapshotLog.onBeforeOptimizeCommit = () => ()
+    assert(fired, "the race must actually have been injected")
+    val dirs = optimizeStagingDirs(base)
+    assert(dirs.size == 1 && dirs.head.contains("-a0-"),
+      s"a racing append must not trigger a second rewrite, staged: $dirs")
+    // d1 = 1 compacted + 1 racer file; the unselected partitions keep
+    // their files
+    val m = manifest(base)
+    assert(m.files("d1").size == 2,
+      s"d1 = 1 compacted + 1 racer file, got ${m.files("d1")}")
+    assert(m.files("d0") == m0.files("d0") && m.files("d2") == m0.files("d2"))
+    val df = SnapshotLog.read(s, base).get
+    assert(df.count() == 61)
+    assert(df.filter(col("id") === 999L).count() == 1)
+    assert(df.select("id").distinct().count() == 61)
+  }
 }

@@ -116,7 +116,7 @@ class OptimizeTargetSizeSpec extends SparkSpec {
     // neither maintenance verb rewrites it again
     assert(SnapshotLog.optimizeTable(s, base, "day") == 0L,
       "target-split layout must be OPTIMIZE steady state")
-    assert(SnapshotLog.compactPartition(s, base, "d0") == 0L,
+    assert(SnapshotLog.optimizeTable(s, base, "day", parts = Some(Seq("d0"))) == 0L,
       "compaction must not fold a target-split bucket back")
     // the bucketed scan still groups same-tag files: a self-join with
     // broadcast off plans ZERO exchanges over the split layout

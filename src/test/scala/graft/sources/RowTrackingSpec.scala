@@ -81,10 +81,10 @@ class RowTrackingSpec extends SparkSpec {
     // files also get: still unique
     assert(afterOpt.values.toSet.size == afterOpt.size)
 
-    // compactPartition too (single-partition maintenance path)
+    // OPTIMIZE over a partition subset too
     SnapshotLog.deleteWhere(spark, base, col("id") === 6L, "day",
       deletionVectors = true)
-    assert(SnapshotLog.compactPartition(spark, base, "d0") > 0)
+    assert(SnapshotLog.optimizeTable(spark, base, "day", parts = Some(Seq("d0"))) > 0)
     val afterCompact = ids(readT(base))
     assert(afterCompact == afterOpt - 6L,
       "compaction must preserve ids and retire only the deleted row")

@@ -239,7 +239,7 @@ class SnapshotLogSpec extends SparkSpec {
       .select("user_id", "value").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
 
-    val v = SnapshotLog.compactPartition(spark, base, day)
+    val v = SnapshotLog.optimizeTable(spark, base, "day", parts = Some(Seq(day)))
     assert(v == m3.version + 1)
     val mAfter = SnapshotLog.readManifest(fs, new Path(base)).get
     assert(mAfter.files(day).size == 1,
@@ -251,7 +251,7 @@ class SnapshotLogSpec extends SparkSpec {
     // pre-compaction version still time-travels to the old layout
     assert(SnapshotLog.readVersion(spark, base, m3.version).get.count() == 3)
     // nothing left to do → version 0 signals no-op
-    assert(SnapshotLog.compactPartition(spark, base, day) == 0L)
+    assert(SnapshotLog.optimizeTable(spark, base, "day", parts = Some(Seq(day))) == 0L)
   }
 
   /** A hand-built manifest the commit gate accepts: a schema header
@@ -346,7 +346,8 @@ class SnapshotLogSpec extends SparkSpec {
       maxRetries = 5, statsCols = Seq("value"), clusterBy = Nil, clusterFiles = 16, opCol = None, writeCdf = false)
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val day = SnapshotLog.readManifest(fs, new Path(base)).get.files.keySet.head
-    val v = SnapshotLog.compactPartition(spark, base, day, statsCols = Seq("value"))
+    val v = SnapshotLog.optimizeTable(spark, base, "day", statsCols = Seq("value"),
+      parts = Some(Seq(day)))
     assert(v > 0L)
     val m = SnapshotLog.readManifest(fs, new Path(base)).get
     assert(m.files(day).size == 1 &&
@@ -377,8 +378,8 @@ class SnapshotLogSpec extends SparkSpec {
       .select("event_id", "value").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
 
-    val v = SnapshotLog.compactPartition(spark, base, day,
-      statsCols = Seq("value"), clusterBy = Seq("value"), clusterFiles = 4)
+    val v = SnapshotLog.optimizeTable(spark, base, "day", statsCols = Seq("value"),
+      parts = Some(Seq(day)), zorderBy = Seq("value"), clusterFiles = 4)
     assert(v > 0L)
     val m1 = SnapshotLog.readManifest(fs, new Path(base)).get
     assert(m1.files(day).size == 4, s"expected 4 clustered files: ${m1.files(day)}")
@@ -457,7 +458,7 @@ class SnapshotLogSpec extends SparkSpec {
     // (free bookkeeping at every commit) — only the value BOUNDS go
     // missing, so countability survives maintenance
     val day0 = m.files.keySet.min
-    SnapshotLog.compactPartition(spark, base, day0)
+    SnapshotLog.optimizeTable(spark, base, "day", parts = Some(Seq(day0)))
     assert(SnapshotLog.countRows(m).contains(4L))
     assert(SnapshotLog.partitionCounts(m).get.values.sum == 4L)
     // the ANALYZE pass backfills bounds for ONLY the stats-less file,
@@ -849,8 +850,9 @@ class SnapshotLogSpec extends SparkSpec {
       col("id") === 4L, Map("value" -> lit(0.0)), "day", maxRetries = n))
     retried("APPEND", "append (fragments d1)")(n => SnapshotLog.appendBatch(
       spark, cbase, rows(61 to 70), "day", batchId = 6, maxRetries = n))
-    retried("COMPACT", "compact partition")(n =>
-      assert(SnapshotLog.compactPartition(spark, cbase, "d1", maxRetries = n) > 0L))
+    retried("OPTIMIZE", "optimize (partition subset)")(n =>
+      assert(SnapshotLog.optimizeTable(spark, cbase, "day", maxRetries = n,
+        parts = Some(Seq("d1"))) > 0L))
     retried("BLOOMS", "build blooms")(n => assert(
       SnapshotLog.buildBlooms(spark, cbase, Seq("id"), maxRetries = n) > 0L))
     retried("ADD CONSTRAINT", "add constraint")(n => SnapshotLog.addConstraint(
